@@ -92,10 +92,11 @@ object StreamBench {
         .option("numPartitions", 4)
         .load()
     }
-    val q = build(src).writeStream.format("noop")
+    // the checkpoint policy JobRunner deploys, so the soak prices the
+    // deployed commit path
+    val q = JobRunner.startQuery(spark, build(src).writeStream.format("noop")
       .outputMode("append")
-      .option("checkpointLocation", cp)
-      .start()
+      .option("checkpointLocation", cp), Seq(cp))
     val t0 = System.nanoTime()
     // NO processAllAvailable here: the rate source keeps producing, so
     // draining never terminates for a stage slower than the source — the

@@ -1,8 +1,10 @@
 package graft.stream
 
 import graft.pipeline.{Enrich, PostSource, Sinks}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, StreamingQueryException,
+  StreamingQueryListener, Trigger}
 
 /** The engine's equivalent of the reference's main loop
   * (`consumer/spark_streaming_job.py:70–210`, SURVEY.md §3.1): one enriched
@@ -67,6 +69,11 @@ object JobRunner {
 
   private val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  private val StateStoreProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  private val SourceInitTimeoutMs = 60000L
+  private val FileSystemCheckpointManager =
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 
   /** SCALING.md's measured per-stage state-store policy, as code: the
     * standalone verified tiers hold corpus-growing state → RocksDB;
@@ -78,6 +85,63 @@ object JobRunner {
       case (true, NearDupTier.Hashed | NearDupTier.ByteExact) => Some(RocksDbProvider)
       case _ => None
     }
+
+  /** The checkpoint-file policy, as code: a query whose checkpoint and
+    * output paths are all on the local file system commits through
+    * Spark's `FileSystem`-based manager.  Spark's default (`FileContext`)
+    * manager on a local file system without the Hadoop native library
+    * forks a `readlink` process per rename — on every offset-log,
+    * commit-log, source-log, sink-log and state-store file of every
+    * trigger (SCALING.md "Checkpoint I/O").  The two managers write the
+    * same files (`.crc` sidecars included), so a checkpoint restarts
+    * under either.  A path without a scheme resolves against the
+    * default FS; any non-`file` scheme (hdfs, s3a, …) keeps Spark's
+    * default, and so does a manager the caller set explicitly in
+    * `hadoopConf`.  None = don't touch the session conf. */
+  def checkpointManagerFor(paths: Seq[String],
+      hadoopConf: org.apache.hadoop.conf.Configuration): Option[String] = {
+    def isLocal(p: String): Boolean =
+      Option(new org.apache.hadoop.fs.Path(p).toUri.getScheme)
+        .orElse(Option(org.apache.hadoop.fs.FileSystem.getDefaultUri(hadoopConf).getScheme))
+        .contains("file")
+    if (hadoopConf.get(CheckpointManagerKey) != null || !paths.forall(isLocal)) None
+    else Some(FileSystemCheckpointManager)
+  }
+
+  /** Starts one query under the per-query conf policies.  Both confs
+    * are snapshot into the query's cloned session (and its checkpoint
+    * and sink logs) at `start()`, so they are set around this one start
+    * and restored in the finally: other queries, and the caller's
+    * session after [[run]], keep the caller's settings.  Not safe
+    * against another thread starting a query on the same session
+    * concurrently.  `paths` are the query's checkpoint and output
+    * locations, for [[checkpointManagerFor]]. */
+  private[graft] def startQuery(spark: SparkSession, writer: DataStreamWriter[_],
+      paths: Seq[String], stateStoreProvider: Option[String] = None): StreamingQuery = {
+    val confs = Seq(
+      CheckpointManagerKey -> checkpointManagerFor(paths, spark.sessionState.newHadoopConf()),
+      StateStoreProviderKey -> stateStoreProvider)
+      .collect { case (k, Some(v)) => k -> v }
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val q = writer.start()
+      // a source's own log (`sources/N` in the checkpoint) is created on
+      // the query's thread from the CALLER's session, after start()
+      // returns: hold the confs until the sources exist.  A query that
+      // dies initializing reports it through its own exception, as before.
+      q match {
+        case w: StreamingQueryWrapper =>
+          try w.streamingQuery.awaitInitialization(SourceInitTimeoutMs)
+          catch { case _: StreamingQueryException => () }
+        case _ =>
+      }
+      q
+    } finally prev.foreach {
+      case (k, Some(p)) => spark.conf.set(k, p)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   final case class Config(
       outputPath: String,
@@ -250,16 +314,22 @@ object JobRunner {
       cfg.windowedOutputPath.foreach(p => deleteRecursively(new java.io.File(p)))
     }
     val enriched = Enrich.enrich(source.load(spark))
+    def startJson(df: DataFrame, out: String, cp: String, name: String,
+        stateStoreProvider: Option[String] = None): StreamingQuery =
+      startQuery(spark, Sinks.jsonFiles(df, out, cp, cfg.fileTrigger, queryName = name),
+        Seq(cp, out), stateStoreProvider)
 
-    val file = Sinks.jsonFiles(enriched, cfg.outputPath, cfg.checkpointPath, cfg.fileTrigger).start()
-    val console =
-      if (cfg.withConsole) Some(Sinks.console(enriched, cfg.consoleTrigger).start()) else None
-    val windowed = if (cfg.withWindowedCounts) {
-      val out = cfg.windowedOutputPath.getOrElse(cfg.outputPath + "_windowed")
-      Some(Sinks.jsonFiles(Sinks.windowedSentimentCounts(enriched),
-        out, cfg.checkpointPath + "_windowed", cfg.fileTrigger,
-        queryName = "windowed_output").start())
-    } else None
+    val file = startJson(enriched, cfg.outputPath, cfg.checkpointPath, "file_output")
+    // the console query checkpoints under the session's checkpoint root
+    // when one is set, else in a local temp dir
+    val console = if (cfg.withConsole) Some(startQuery(spark,
+      Sinks.console(enriched, cfg.consoleTrigger),
+      spark.conf.getOption("spark.sql.streaming.checkpointLocation").toSeq)) else None
+    val windowed = if (cfg.withWindowedCounts)
+      Some(startJson(Sinks.windowedSentimentCounts(enriched),
+        cfg.windowedOutputPath.getOrElse(cfg.outputPath + "_windowed"),
+        cfg.checkpointPath + "_windowed", "windowed_output"))
+    else None
     val bursts = if (cfg.withBursts) {
       import spark.implicits._
       import org.apache.spark.sql.functions.col
@@ -269,9 +339,8 @@ object JobRunner {
       val flags = TrendBurst.bursts(posts, windowSec = cfg.burstWindowSec,
         watermarkDelay = cfg.burstWatermark, factorBp = cfg.burstFactorBp,
         minCount = cfg.burstMinCount)(spark)
-      Some(Sinks.jsonFiles(flags.toDF(), cfg.outputPath + "_bursts",
-        cfg.checkpointPath + "_bursts", cfg.fileTrigger,
-        queryName = "burst_output").start())
+      Some(startJson(flags.toDF(), cfg.outputPath + "_bursts",
+        cfg.checkpointPath + "_bursts", "burst_output"))
     } else None
     val anomalies = if (cfg.withAnomalies) {
       import spark.implicits._
@@ -282,9 +351,8 @@ object JobRunner {
       val flags = AnomalyZscore.anomalies(evs, windowSec = cfg.anomalyWindowSec,
         watermarkDelay = cfg.anomalyWatermark,
         baselineWindows = cfg.anomalyBaseline)(spark)
-      Some(Sinks.jsonFiles(flags.toDF(), cfg.outputPath + "_anomalies",
-        cfg.checkpointPath + "_anomalies", cfg.fileTrigger,
-        queryName = "anomaly_output").start())
+      Some(startJson(flags.toDF(), cfg.outputPath + "_anomalies",
+        cfg.checkpointPath + "_anomalies", "anomaly_output"))
     } else None
 
     val drift = if (cfg.withDrift) {
@@ -301,9 +369,8 @@ object JobRunner {
         fmin = -10000L, fmax = 10000L, bins = cfg.driftBins,
         windowSec = cfg.driftWindowSec, watermarkDelay = cfg.driftWatermark,
         recentWindows = cfg.driftRecentWindows)(spark)
-      Some(Sinks.jsonFiles(alerts.toDF(), cfg.outputPath + "_drift",
-        cfg.checkpointPath + "_drift", cfg.fileTrigger,
-        queryName = "drift_output").start())
+      Some(startJson(alerts.toDF(), cfg.outputPath + "_drift",
+        cfg.checkpointPath + "_drift", "drift_output"))
     } else None
 
     val nearDups = if (cfg.withNearDups) {
@@ -313,25 +380,12 @@ object JobRunner {
         .select(xxhash64(col("user"), col("cleaned_text"), col("timestamp")).as("doc_id"),
           col("cleaned_text").as("text"))
         .as[LiveNearDup.DocEvent]
-      val pairs = nearDupStream(cfg, docEvents)(spark)
-      // the state-store policy is a per-QUERY choice here: the conf is
-      // snapshot into the query's cloned session at start(), so setting
-      // it around this one start leaves the other six queries (and
-      // anything the caller starts later) on the session default —
-      // restored in the finally.  This query starts LAST by
-      // construction; keep it so if queries are reordered.
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(providerKey)
-      val want = stateStoreProviderFor(cfg.nearDupVerified, cfg.nearDupTier)
-      want.foreach(spark.conf.set(providerKey, _))
-      try
-        Some(Sinks.jsonFiles(pairs, cfg.outputPath + "_neardups",
-          cfg.checkpointPath + "_neardups", cfg.fileTrigger,
-          queryName = "neardup_output").start())
-      finally if (want.isDefined) prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
+      // the state-store policy is a per-QUERY choice: startQuery sets
+      // it around this one start, so the other queries stay on the
+      // session default
+      Some(startJson(nearDupStream(cfg, docEvents)(spark), cfg.outputPath + "_neardups",
+        cfg.checkpointPath + "_neardups", "neardup_output",
+        stateStoreProviderFor(cfg.nearDupVerified, cfg.nearDupTier)))
     } else None
 
     Running(Seq(file) ++ console ++ windowed ++ bursts ++ anomalies ++ drift ++ nearDups,
@@ -356,8 +410,14 @@ object JobRunner {
           maxBucket = cfg.nearDupMaxBucket, windowTtlMs = ttl, monitor = monitor).toDF()
     }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
+  /** freshStart's wipe.  A path that cannot be deleted fails the start,
+    * naming the path: left in place, an old checkpoint would silently
+    * resume, or an old `_spark_metadata` log would hide the new output.
+    * `delete` is `File.delete` outside specs. */
+  private[stream] def deleteRecursively(f: java.io.File,
+      delete: java.io.File => Boolean = _.delete()): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively(_, delete)))
+    if (!delete(f) && f.exists())
+      throw new java.io.IOException(s"freshStart could not delete $f")
   }
 }

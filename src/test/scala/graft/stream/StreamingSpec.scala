@@ -3,9 +3,9 @@ package graft.stream
 import graft.SparkSpec
 import graft.pipeline.{Enrich, FileJsonSource, Sinks}
 import graft.schema.{Location, Post, Schemas}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
@@ -36,6 +36,21 @@ class StreamingSpec extends SparkSpec {
 
   private def readOut(out: String) =
     spark.read.schema(Schemas.enrichedSchema).json(out)
+
+  private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  private val FileSystemManager =
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+  private val FileContextManager =
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+
+  /** The checkpoint manager a started query's offset log commits
+    * through (`fileManager` is protected in Scala, public in bytecode). */
+  private def managerOf(q: StreamingQuery): String = q match {
+    case w: StreamingQueryWrapper =>
+      val log = w.streamingQuery.offsetLog
+      log.getClass.getMethod("fileManager").invoke(log).getClass.getName
+    case other => fail(s"not a wrapped micro-batch query: $other")
+  }
 
   test("file source → enrich → json sink, incremental micro-batches, checkpoint recovery") {
     val in = tmp("graft-in"); val out = tmp("graft-out"); val cp = tmp("graft-cp")
@@ -213,11 +228,17 @@ class StreamingSpec extends SparkSpec {
       s"""{"text": "$dupB", "user": "v2", "platform": "x", "timestamp": "2024-01-01 12:00:20"}"""))
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val before = spark.conf.getOption(providerKey)
+    val managerBefore = spark.conf.getOption(ManagerKey)
     val r = JobRunner.run(spark, FileJsonSource(in),
       fastCfg(out, cp).copy(withNearDups = true))
     r.processAllAvailable(); r.stopAll()
     assert(spark.conf.getOption(providerKey) == before,
       "run() leaked the per-query provider conf into the session")
+    assert(spark.conf.getOption(ManagerKey) == managerBefore,
+      "run() leaked the per-query checkpoint manager conf into the session")
+    // local paths: every query commits through the FileSystem-based manager
+    assert(r.queries.size == 2 && r.queries.forall(managerOf(_) == FileSystemManager),
+      s"queries started on ${r.queries.map(managerOf)}")
     val ids = readOut(out)
       .select(xxhash64(col("user"), col("cleaned_text"), col("timestamp")).as("id"))
       .collect().map(_.getLong(0)).sorted
@@ -240,6 +261,80 @@ class StreamingSpec extends SparkSpec {
       "near-dup checkpoint does not record the RocksDB provider")
     assert(!offsets0(cp).contains("RocksDBStateStoreProvider"),
       "the file-sink query was started on the near-dup tier's provider")
+  }
+
+  test("checkpointManagerFor: local paths select the FileSystem-based manager, remote ones Spark's default") {
+    import org.apache.hadoop.conf.Configuration
+    val conf = new Configuration()
+    for (local <- Seq(Seq("/tmp/x"), Seq("file:/tmp/x"), Seq("/tmp/cp", "file:///tmp/out")))
+      assert(JobRunner.checkpointManagerFor(local, conf).contains(FileSystemManager), local)
+    // a remote scheme in either position keeps Spark's default
+    for (remote <- Seq("hdfs://nn:8020/x", "s3a://bucket/x")) {
+      assert(JobRunner.checkpointManagerFor(Seq(remote, "/tmp/out"), conf).isEmpty, remote)
+      assert(JobRunner.checkpointManagerFor(Seq("/tmp/cp", remote), conf).isEmpty, remote)
+    }
+    // an unqualified path resolves against the default FS
+    val hdfsDefault = new Configuration()
+    hdfsDefault.set("fs.defaultFS", "hdfs://nn:8020")
+    assert(JobRunner.checkpointManagerFor(Seq("/tmp/x"), hdfsDefault).isEmpty)
+    assert(JobRunner.checkpointManagerFor(Seq("file:/tmp/x"), hdfsDefault).contains(FileSystemManager))
+    // a manager the caller set explicitly is kept
+    val explicit = new Configuration()
+    explicit.set(ManagerKey, FileContextManager)
+    assert(JobRunner.checkpointManagerFor(Seq("/tmp/x"), explicit).isEmpty)
+  }
+
+  test("a JobRunner checkpoint restarts across checkpoint managers exactly once, both ways") {
+    // Spark's default manager is FileContext-based; a caller selects it
+    // explicitly, which the policy keeps.  Each run resumes the other
+    // manager's checkpoint (offset/commit logs, the sink's log, the
+    // HDFS-backed windowed state and the near-dup query's RocksDB state)
+    def post(u: String): String =
+      s"""{"text": "post $u says hello", "user": "$u", "platform": "x", "timestamp": "2024-01-01 12:00:10"}"""
+    def epoch(in: String, out: String, cp: String, sparkDefault: Boolean): Unit = {
+      val before = spark.conf.getOption(ManagerKey)
+      if (sparkDefault) spark.conf.set(ManagerKey, FileContextManager)
+      try {
+        val r = JobRunner.run(spark, FileJsonSource(in),
+          fastCfg(out, cp).copy(withWindowedCounts = true, withNearDups = true))
+        try {
+          r.processAllAvailable()
+          val want = if (sparkDefault) FileContextManager else FileSystemManager
+          assert(r.queries.size == 3 && r.queries.forall(managerOf(_) == want),
+            s"queries started on ${r.queries.map(managerOf)}, expected $want")
+          assert(r.queries.forall(_.exception.isEmpty))
+        } finally r.stopAll()
+      } finally before match {
+        case Some(m) => spark.conf.set(ManagerKey, m)
+        case None => spark.conf.unset(ManagerKey)
+      }
+    }
+    for (firstSparkDefault <- Seq(true, false)) {
+      val in = tmp("graft-min"); val out = tmp("graft-mout"); val cp = tmp("graft-mcp")
+      writePosts(in, "b1.json", Seq("m1", "m2").map(post))
+      epoch(in, out, cp, firstSparkDefault)
+      writePosts(in, "b2.json", Seq("m3").map(post))
+      epoch(in, out, cp, !firstSparkDefault)
+      val users = readOut(out).select("user").collect().map(_.getString(0)).sorted.toSeq
+      assert(users == Seq("m1", "m2", "m3"),
+        s"first run on Spark's default = $firstSparkDefault: sink holds $users")
+    }
+  }
+
+  test("freshStart's wipe fails loudly, naming the path it could not delete") {
+    val dir = new java.io.File(tmp("graft-wipe"))
+    val offsets = new java.io.File(dir, "offsets")
+    offsets.mkdirs()
+    val stuck = new java.io.File(offsets, "0")
+    writePosts(offsets.toString, "0", Seq("v1"))
+    val e = intercept[java.io.IOException](
+      JobRunner.deleteRecursively(dir, f => f != stuck && f.delete()))
+    assert(e.getMessage.contains(stuck.toString), e.getMessage)
+    assert(stuck.exists() && dir.exists())
+    // a path that is not there is nothing to delete
+    JobRunner.deleteRecursively(new java.io.File(dir, "absent"))
+    JobRunner.deleteRecursively(dir)
+    assert(!dir.exists())
   }
 
   test("nearDupStream tier selection deploys the measured implementations (plan-level)") {
