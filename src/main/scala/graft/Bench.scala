@@ -62,10 +62,6 @@ object Bench {
       d7Bucketed: Option[Double],
       // (name, warm1, warm2): two timed warm reps per serve-again query
       serveWarm: Option[Seq[(String, Double, Double)]],
-      // (name, decimal-on, int64-pinned): the refresh-decision family
-      // A/B — prices the decimal(38,0) default against the pinned
-      // int64 micro-path in the same session
-      decimalAB: Option[Seq[(String, Double, Double)]],
       // defended tier rows whose original pair disagreed > SpikeRatio
       // and re-ran (r16 verdict #2) — both raw pairs stay here
       retries: Seq[TierRetry])
@@ -86,17 +82,17 @@ object Bench {
   private[graft] final case class SpikeRetry(query: String, reps: Seq[Double],
       retryS: Double)
 
-  /** A defended TIER measurement (r16 verdict #2): the warm and decimal
-    * A/B tiers are single-pass by design, so before this a single
+  /** A defended TIER measurement (r16 verdict #2): the serve-again warm
+    * tier is single-pass by design, so before this a single
     * contention burst could put quotable garbage straight into the
     * summary totals (driver r16: s19 warm 107/119 s vs the committed
     * 1.96/1.24, with only a false-negative contended bit to arbitrate).
     * A pair disagreeing beyond the suite's spike rule re-runs once; the
     * reported row takes the per-measurement min of the two executions
-    * (the tier analogue of min-of-reps — regimes/reps are never mixed,
-    * so a REAL dec-vs-int64 regression re-reproduces in the retry and
-    * survives into the reported row), and both raw pairs stay in the
-    * artifact under tier_retries. */
+    * (the tier analogue of min-of-reps — reps are never mixed, so a
+    * REAL regression re-reproduces in the retry and survives into the
+    * reported row), and both raw pairs stay in the artifact under
+    * tier_retries. */
   private[graft] final case class TierRetry(label: String,
       orig: Seq[Double], retry: Seq[Double])
 
@@ -226,26 +222,7 @@ object Bench {
   private def runSuite(cpus: String, sfDir: String, repeat: Int,
       withTiers: Boolean,
       canonicalMins: Option[Map[String, Double]] = None): SuiteResult = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // The r14 local[32] scaling pathology, root-caused (r15): shuffle
-      // map tasks under the bypass-merge writer concatenate their
-      // per-partition files via FileChannel.transferTo, whose trusted-
-      // channel path mmaps the source — 32 executor THREADS in one JVM
-      // doing concurrent mmap/munmap serialize on the process-wide mm
-      // lock and storm TLB-shootdown IPIs (thread dump: 32/33 workers
-      // RUNNABLE in FileChannelImpl.map0/unmap0; c1 120 s at local[32]
-      // vs 3.5 s at local[4], 11 % CPU busy).  Stream-copy instead: the
-      // kernel page cache still short-circuits the I/O, no mm churn.
-      // A real cluster runs executors as separate PROCESSES (each its
-      // own mm), so this is a wide-single-JVM deployment note, not a
-      // plan property — SCALING.md "local[32] pathology".
-      .config("spark.file.transferTo", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
     val cpuBefore = cpuJiffies()
     val loadBefore = loadAvg()
     // Warm-up: touch each table once (parquet footers, codegen, JIT) so the
@@ -263,40 +240,19 @@ object Bench {
     // intermediate (d2/d3/d6/c1) register it in the CacheManager keyed by
     // canonicalized plan, and without the clear the second run would read
     // the first run's materialized blocks and report a warm-cache time for
-    // compute that IS a property of the plan.  RDD-level persists (the
-    // d6/c1 lineage-cut edges) aren't in the CacheManager, so they are
-    // unpersisted explicitly — otherwise their MEMORY_AND_DISK blocks
-    // accumulate across the run and pressure later timings.
+    // compute that IS a property of the plan (Harness.clearCaches also
+    // drops the session memos and the RDD-level lineage-cut persists).
     // A query that THROWS is an error, not a fast run: its name is
     // reported in "errors" and the process exits non-zero, so a regression
     // can never improve the bench number.
     val errors = scala.collection.mutable.LinkedHashSet.empty[String]
-    def clearCaches(): Unit = {
-      spark.catalog.clearCache()
-      graft.queries.TextOps.clearBpeCache()
-      graft.queries.Similarity.clearEmbedCache()
-      graft.queries.Dedup.clearDupGraphCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
+    def clearCaches(): Unit = Harness.clearCaches(spark)
     // Live per-run progress on stderr (the r14 scaling-pathology probe:
     // an external watchdog can thread-dump the JVM the moment a query
     // overruns, instead of diagnosing from the artifact after the fact).
     // SPARK_GRAFT_BENCH_TRACE=1 additionally logs each stage's scheduling
     // shape, separating executor-side time from driver-side gaps.
-    val trace = sys.env.get("SPARK_GRAFT_BENCH_TRACE").contains("1")
-    if (trace) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = sc.stageInfo
-          val wall = for {s <- i.submissionTime; c <- i.completionTime} yield c - s
-          System.err.println(s"[trace] stage ${i.stageId} '${i.name.takeWhile(_ != '\n').take(60)}' " +
-            s"tasks=${i.numTasks} wall=${wall.getOrElse(-1L)}ms " +
-            s"taskTime=${i.taskMetrics.executorRunTime}ms " +
-            s"gc=${i.taskMetrics.jvmGCTime}ms " +
-            s"cpuMs=${i.taskMetrics.executorCpuTime / 1000000}")
-        }
-      })
+    Harness.traceStagesIf(spark, "SPARK_GRAFT_BENCH_TRACE")
     val spikeRetries = scala.collection.mutable.ArrayBuffer.empty[SpikeRetry]
     val tierRetries = scala.collection.mutable.ArrayBuffer.empty[TierRetry]
     val watchdogHits = scala.collection.mutable.ArrayBuffer.empty[WatchdogHit]
@@ -513,57 +469,6 @@ object Bench {
         clearCaches()
         Some(ts)
       }
-    // Decimal(38,0) A/B tier (r15 verdict #4): the refresh-decision
-    // family — every query whose arithmetic consults
-    // RefreshDecision.decimalOn — timed under the promoted DEFAULT
-    // (`spark.graft.decimal128=true`) and the pinned int64 micro-path
-    // in the same session, alternating per query so box drift hits both
-    // regimes equally.  a12/a13 are NOT here: their decimal(38) cross
-    // products are unconditional (no int64 variant exists to A/B).
-    // int64 is pin-safe at sf0.1 (it WAS the default through r14; the
-    // Needs preflights bound it), so no preflight call is needed here.
-    val decimalNames = Seq("c13_refresh_decision", "s15_warmstart_refresh",
-      "s17_pq_refresh", "s18_refreshed_serving", "s19_refreshed_adc",
-      "s20_ivfpq_serving", "c16_refresh_execution", "c17_refreshed_selection")
-    val decimalABTier: Option[Seq[(String, Double, Double)]] =
-      if (tiersOff) None
-      else Some(decimalNames.zipWithIndex.map { case (name, i) =>
-        def timed(regime: String, rep: Int): Double = {
-          spark.conf.set("spark.graft.decimal128", regime)
-          val t0 = System.nanoTime()
-          withWatchdog(s"decimal_$regime:$name", rep, cpus, WatchdogFloorS, watchdogHits) {
-            try { SparkEntry.queries(name)(spark, sfDir).count(): Unit }
-            catch { case e: Throwable =>
-              errors += s"decimal_$regime:$name: ${e.getClass.getSimpleName}" }
-          }
-          val t = (System.nanoTime() - t0) / 1e9
-          spark.conf.unset("spark.graft.decimal128")
-          clearCaches()
-          t
-        }
-        // which regime runs FIRST alternates by index: whatever
-        // first-run advantage remains after clearCaches (JIT, OS page
-        // cache) hits both regimes equally in the tier TOTALS
-        def pair(rep: Int): (Double, Double) =
-          if (i % 2 == 0) { val d = timed("true", rep); (d, timed("false", rep)) }
-          else { val n = timed("false", rep); val d = timed("true", rep); (d, n) }
-        val errs0 = errors.size
-        val (d1, n1) = pair(1)
-        // tier defense (r16 verdict #2): a dec/int64 pair disagreeing
-        // > 4× above the 2 s floor is a contention signature (the
-        // measured regimes sit at ~1× in three independent A/Bs) —
-        // re-run the pair once, report the per-REGIME min so regimes
-        // never mix, and keep both raw pairs in tier_retries.  A real
-        // 4× regression would re-reproduce in the retry and survive
-        // into the reported row.  Errored rows never retry.
-        if (errors.size == errs0 && isSpike(Seq(d1, n1))) {
-          val (d2, n2) = pair(2)
-          if (errors.size == errs0) {
-            tierRetries += TierRetry(s"decimal:$name", Seq(d1, n1), Seq(d2, n2))
-            (name, math.min(d1, d2), math.min(n1, n2))
-          } else (name, d1, n1)
-        } else (name, d1, n1)
-      })
     val loadAfter = loadAvg()
     val cpuBusyPct: Option[Double] = for {
       (b0, t0) <- cpuBefore; (b1, t1) <- cpuJiffies() if t1 > t0
@@ -574,7 +479,7 @@ object Bench {
     SuiteResult(cpus, runs, errors.toSeq, loadBefore, loadAfter, cpuBusyPct,
       if (tiersOff) None
       else Some(TierResults(cacheTier, bandedTier, bpeTier, embedTier,
-        serveWarmTier, decimalABTier, tierRetries.toSeq)),
+        serveWarmTier, tierRetries.toSeq)),
       spikeRetries.toSeq, watchdogHits.synchronized(watchdogHits.toSeq))
   }
 
@@ -625,7 +530,6 @@ object Bench {
       s""""serve_again_warm_tier":${pairTierJson(tr.serveWarm, "warm1", "warm2")},""" +
       s""""serve_again_warm_s":${tr.serveWarm.map(ts => fmt2(ts.map(_._2).sum)).getOrElse("null")},""" +
       s""""serve_again_warm2_s":${tr.serveWarm.map(ts => fmt2(ts.map(_._3).sum)).getOrElse("null")},""" +
-      s""""decimal_ab_tier":${pairTierJson(tr.decimalAB, "dec", "int64")},""" +
       s""""tier_retries":${tierRetriesJson(tr.retries)}}"""
   }.getOrElse("null")
 
@@ -701,11 +605,14 @@ object Bench {
       r.spikeRetries.size + r.watchdog.size +
         r.tiers.map(_.retries.size).getOrElse(0))
 
+  // The summary line is additive-only (consumers key on its fields), so
+  // decimal_dec_s/decimal_int64_s stay, always null: the int64 regime
+  // they compared against no longer exists.
   private def summaryLine(tag: String, r: SuiteResult, repeat: Int, sfDir: String): String = {
     val slowest = r.mins.sortBy(-_._2).take(10)
       .map { case (k, v) => jStr(k) + ":" + fmt2(v) }.mkString("{", ",", "}")
     val t = r.tiers
-    s"""{"summary":"$tag","total_s":${fmt2(r.total)},"cpus":"${r.cpus}","sf":"$sfDir","n_queries":${r.mins.size},"repeat":$repeat,"contended":${contended(r)},"load_before":${fmt2(r.loadBefore)},"load_after":${fmt2(r.loadAfter)},"cpu_busy_pct":${jNumOpt(r.cpuBusyPct)},"dupgraph_exact_tier_total_s":${t.map(x => tierTotal(x.cache)).getOrElse("null")},"dupgraph_banded_tier_total_s":${t.map(x => tierTotal(x.banded)).getOrElse("null")},"dupgraph_exact_prod_c1d6d9_s":${t.map(x => prodSubtotal(x.cache)).getOrElse("null")},"dupgraph_banded_prod_c1d6d9_s":${t.map(x => prodSubtotal(x.banded)).getOrElse("null")},"bpe_apply_only_s":${t.map(x => jNumOpt(x.bpe.map(_._2))).getOrElse("null")},"d7_bucketed_s":${t.map(x => jNumOpt(x.d7Bucketed)).getOrElse("null")},"serve_again_warm_s":${t.map(x => x.serveWarm.map(ts => fmt2(ts.map(_._2).sum)).getOrElse("null")).getOrElse("null")},"serve_again_warm2_s":${t.map(x => x.serveWarm.map(ts => fmt2(ts.map(_._3).sum)).getOrElse("null")).getOrElse("null")},"decimal_dec_s":${t.map(x => x.decimalAB.map(ts => fmt2(ts.map(_._2).sum)).getOrElse("null")).getOrElse("null")},"decimal_int64_s":${t.map(x => x.decimalAB.map(ts => fmt2(ts.map(_._3).sum)).getOrElse("null")).getOrElse("null")},"spike_retries":${r.spikeRetries.size},"tier_retries":${r.tiers.map(_.retries.size).getOrElse(0)},"watchdog_hits":${r.watchdog.size},"n_errors":${r.errors.size},"slowest":$slowest}"""
+    s"""{"summary":"$tag","total_s":${fmt2(r.total)},"cpus":"${r.cpus}","sf":"$sfDir","n_queries":${r.mins.size},"repeat":$repeat,"contended":${contended(r)},"load_before":${fmt2(r.loadBefore)},"load_after":${fmt2(r.loadAfter)},"cpu_busy_pct":${jNumOpt(r.cpuBusyPct)},"dupgraph_exact_tier_total_s":${t.map(x => tierTotal(x.cache)).getOrElse("null")},"dupgraph_banded_tier_total_s":${t.map(x => tierTotal(x.banded)).getOrElse("null")},"dupgraph_exact_prod_c1d6d9_s":${t.map(x => prodSubtotal(x.cache)).getOrElse("null")},"dupgraph_banded_prod_c1d6d9_s":${t.map(x => prodSubtotal(x.banded)).getOrElse("null")},"bpe_apply_only_s":${t.map(x => jNumOpt(x.bpe.map(_._2))).getOrElse("null")},"d7_bucketed_s":${t.map(x => jNumOpt(x.d7Bucketed)).getOrElse("null")},"serve_again_warm_s":${t.map(x => x.serveWarm.map(ts => fmt2(ts.map(_._2).sum)).getOrElse("null")).getOrElse("null")},"serve_again_warm2_s":${t.map(x => x.serveWarm.map(ts => fmt2(ts.map(_._3).sum)).getOrElse("null")).getOrElse("null")},"decimal_dec_s":null,"decimal_int64_s":null,"spike_retries":${r.spikeRetries.size},"tier_retries":${r.tiers.map(_.retries.size).getOrElse(0)},"watchdog_hits":${r.watchdog.size},"n_errors":${r.errors.size},"slowest":$slowest}"""
   }
   private def tierTotal(t: Option[Seq[(String, Double)]]): String =
     t.map(ts => fmt2(ts.map(_._2).sum)).getOrElse("null")
@@ -751,7 +658,7 @@ object Bench {
     // stdout and used to decide which per-query pairs survived a round.
     val fullJson =
       s"""{"sf":"$sfDir","repeat":$repeat,""" +
-        s""""note":"canonical = local[4], the judge methodology (32-way task scheduling dominates sf0.1 partitions — see Bench.scala header); scaling = the env-requested width, queries only; prod_c1d6d9 tier subtotals exclude d13, whose ground truth is pinned to the exact pair source; per-query ISOLATION clears the session memos, so composition queries (c13 refresh decision, c15 pipeline) re-price every upstream audit/stage each run — in a real session those legs ride memoized relations and the marginal cost is ~one audit, so their bench numbers OVERSTATE the operators; spike_retries = reps disagreeing >4x re-ran once (the reported per-query min includes the retry; queries_runs arrays keep exactly `repeat` entries — the retry value lives only in spike_retries); tier_retries = warm/decimal A/B pairs disagreeing >4x re-ran once, reported row = per-measurement min, raw pairs recorded; contended = load_before > 3 OR load_after > pass width + 3 (a local[N] pass's own threads legitimately drive load toward N) OR >=3 defense firings (spikes + dumps + tier retries); watchdog_dumps = in-process thread dumps of overrunning queries (full dumps in BENCH_watchdog.txt; servewarm rep1/rep2 = warm1/warm2, rep3/rep4 = the defended retry); serve_again_warm_tier per-query rows are order-dependent (no cache clear inside the tier) — quote the totals; decimal_ab_tier prices the decimal(38,0) default vs pinned int64 on the refresh-decision family","""  +
+        s""""note":"canonical = local[4], the judge methodology (32-way task scheduling dominates sf0.1 partitions — see Bench.scala header); scaling = the env-requested width, queries only; prod_c1d6d9 tier subtotals exclude d13, whose ground truth is pinned to the exact pair source; per-query ISOLATION clears the session memos, so composition queries (c13 refresh decision, c15 pipeline) re-price every upstream audit/stage each run — in a real session those legs ride memoized relations and the marginal cost is ~one audit, so their bench numbers OVERSTATE the operators; spike_retries = reps disagreeing >4x re-ran once (the reported per-query min includes the retry; queries_runs arrays keep exactly `repeat` entries — the retry value lives only in spike_retries); tier_retries = serve-again warm pairs disagreeing >4x re-ran once, reported row = per-measurement min, raw pairs recorded; contended = load_before > 3 OR load_after > pass width + 3 (a local[N] pass's own threads legitimately drive load toward N) OR >=3 defense firings (spikes + dumps + tier retries); watchdog_dumps = in-process thread dumps of overrunning queries (full dumps in BENCH_watchdog.txt; servewarm rep1/rep2 = warm1/warm2, rep3/rep4 = the defended retry); serve_again_warm_tier per-query rows are order-dependent (no cache clear inside the tier) — quote the totals; decimal_dec_s/decimal_int64_s stay null (the int64 A/B is retired)","""  +
         s""""canonical":${suiteJson(canonical, repeat)},""" +
         s""""scaling":${scaling.map(suiteJson(_, repeat)).getOrElse("null")}}"""
     // Written TWICE: the stable name (driver/judge contract) AND a

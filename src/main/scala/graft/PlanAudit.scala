@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Physical-plan audit: prints `explain("formatted")` for the headline
@@ -786,17 +785,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val dump = args.sliding(2).collectFirst { case Array("--dump", q) => q }
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // spark.file.transferTo=false: the mmap-based transferTo path
-      // serializes wide single-JVM shuffles (SCALING.md "local[32]
-      // pathology"; full rationale at Bench.runSuite)
-      .config("spark.file.transferTo", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session("4", "spark.sql.session.timeZone" -> "UTC")
     spark.sparkContext.setLogLevel("ERROR")
 
     val planCache = scala.collection.mutable.Map.empty[String, String]
@@ -808,15 +797,10 @@ object PlanAudit {
     // a later s13 section rendered THEIR expanded InMemoryRelation trees
     // (BNLJ count 8 → 30 for the identical s13 program), which made the
     // occurrence budgets order-tuned instead of plan-tuned.  Within one
-    // query the family memos still apply (the decimal auto-regime checks
-    // execute their bounded pre-aggregates and the plan honestly renders
-    // the materialized relations the real execution would reuse).
+    // query the family memos still apply (the plan honestly renders the
+    // materialized relations the real execution would reuse).
     def planOf(name: String): String = planCache.getOrElseUpdate(name, {
-      spark.catalog.clearCache()
-      graft.queries.TextOps.clearBpeCache()
-      graft.queries.Similarity.clearEmbedCache()
-      graft.queries.Dedup.clearDupGraphCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Harness.clearCaches(spark)
       SparkEntry.queries(name)(spark, dir)
         .queryExecution.explainString(ExplainMode.fromString("formatted"))
     })

@@ -120,27 +120,17 @@ object StreamBench {
     // over-provision by default so the STAGE is the bottleneck; a stage
     // whose rows/s lands at ~the rate kept up (source-limited lower bound)
     val rate = sys.env.getOrElse("SPARK_GRAFT_STREAM_BENCH_RATE", "200000").toInt
-    implicit val spark: SparkSession = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // spark.file.transferTo=false: the mmap-based transferTo path
-      // serializes wide single-JVM shuffles (SCALING.md "local[32]
-      // pathology"; full rationale at Bench.runSuite)
-      .config("spark.file.transferTo", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    implicit val spark: SparkSession = Harness.session("4",
+      "spark.sql.session.timeZone" -> "UTC",
       // accounting reads q.recentProgress, whose DEFAULT retention is
       // 100 events — a fast stage completes several hundred micro-batches
       // in a 60 s soak and would report only the retained tail's rows
       // divided by the full wall (round-13 review finding: five stages
       // sat exactly at batches=99)
-      .config("spark.sql.streaming.numRecentProgressUpdates", "100000")
-      .config("spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.numRecentProgressUpdates" -> "100000",
+      "spark.sql.streaming.stateStore.providerClass" ->
         sys.env.getOrElse("SPARK_GRAFT_STREAM_BENCH_STATESTORE",
           "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     // stored models the staleness/scoring twins consume (the deployment

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -20,18 +19,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // spark.file.transferTo=false: the mmap-based transferTo path
-      // serializes wide single-JVM shuffles (SCALING.md "local[32]
-      // pathology"; full rationale at Bench.runSuite)
-      .config("spark.file.transferTo", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus, "spark.sql.session.timeZone" -> "UTC")
     new java.io.File(outDir).mkdirs()
     // Per-query watchdog: one hung query must not eat the whole round's
     // correctness gate.  Each query runs in its own job group; a timer

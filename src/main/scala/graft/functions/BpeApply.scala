@@ -10,8 +10,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** JVM kernel with a static forwarder so generated Java can call it
   * directly: applies an ordered BPE merge-rule list to a token array,
   * ONE greedy left-to-right non-overlapping pass per rule — the
-  * per-document-local form of the trainer's windowed merge pass
-  * (`TextOps.bpeMergePass`), to which it is provably equivalent:
+  * per-document-local form of the declarative windowed merge pass (the
+  * shape the t20/t21 DuckDB oracles unroll, kept executable in
+  * BpeTrainSpec), to which it is provably equivalent:
   *
   *  - A merge at position i consumes positions (i, i+1); the fold keeps
   *    the merged token `l||r` at the top of the output and the next

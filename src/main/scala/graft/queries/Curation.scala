@@ -995,10 +995,11 @@ object Curation {
     * [[RefreshDecision.selectorLegOf]] (shared with the live
     * composition). */
   private[queries] def selectorRefreshLeg(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    RefreshDecision.selectorLegOf(dsirDriftCounts(s, dir), DsirBuckets,
-        decimal = RefreshDecision.decimalOn(s))
+      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
+    RefreshDecision.rejectInt64Pin(s)
+    RefreshDecision.selectorLegOf(dsirDriftCounts(s, dir), DsirBuckets)
       .select(lit("selector").as("family"), col("staleness_bp"), col("benefit_bp"))
+  }
 
   /** REFRESH DECISION — the operator a 100 TB pipeline actually
     * schedules, composed from the stored-model maintenance triad: s13
@@ -1161,8 +1162,7 @@ object Curation {
         .select(col("family"), col("comp_a"), col("comp_b"),
           col("dim").cast("long").as("dim"), col("v").cast("long").as("value"),
           col("verdict"))
-      val sel = RefreshDecision.selectorWeights(dsirDriftCounts(s, dir), DsirBuckets,
-          RefreshDecision.decimalOn(s))
+      val sel = RefreshDecision.selectorWeights(dsirDriftCounts(s, dir), DsirBuckets)
         .select(lit("selector").as("family"), col("b").cast("long").as("comp_a"),
           lit(0L).as("comp_b"), col("w_old"), col("w_new"))
         .join(broadcast(dec), Seq("family"))
@@ -1285,8 +1285,7 @@ object Curation {
     val (minSt, minBen) = RefreshDecision.thresholds(s)
     val verdict = RefreshDecision.decide(selectorRefreshLeg(s, dir), minSt, minBen)
       .select(col("verdict"))
-    val wts = RefreshDecision.selectorWeights(dsirDriftCounts(s, dir), DsirBuckets,
-        RefreshDecision.decimalOn(s))
+    val wts = RefreshDecision.selectorWeights(dsirDriftCounts(s, dir), DsirBuckets)
       .crossJoin(broadcast(verdict))
       .select(col("b"),
         when(col("verdict") === "refresh", col("w_new"))
@@ -1326,8 +1325,7 @@ object Curation {
     val (minSt, minBen) = RefreshDecision.thresholds(s)
     val v = RefreshDecision.decide(selectorRefreshLeg(s, dir), minSt, minBen)
       .select(col("verdict")).collect().head.getString(0)
-    val rows = RefreshDecision.selectorWeights(dsirDriftCounts(s, dir), DsirBuckets,
-        RefreshDecision.decimalOn(s))
+    val rows = RefreshDecision.selectorWeights(dsirDriftCounts(s, dir), DsirBuckets)
       .select(col("b"),
         (if (v == "refresh") col("w_new") else col("w_old")).as("w"),
         col("nt_a"), col("nr_a"), col("ti_t"), col("ti_r"))

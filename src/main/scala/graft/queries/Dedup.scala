@@ -551,7 +551,7 @@ object Dedup {
   private[queries] def lineageCut(s: org.apache.spark.sql.SparkSession,
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     withLineageCutConfs(s)(
-      org.apache.spark.sql.graftshim.PartitioningPreservingCut.cut(df, persist = true))
+      org.apache.spark.sql.graftshim.PartitioningPreservingCut.cut(df))
 
   /** Connected components over an undirected pair list — the reusable CC
     * core, with two propagation strategies selected by the graph's
@@ -663,7 +663,7 @@ object Dedup {
 
   /** Session-scoped dup-graph memo for the opt-in
     * `spark.graft.dupgraph.cache` path: (session, dataset dir, cc rounds,
-    * prefix-filter conf) → the labels DataFrame.  Reusing the DataFrame reuses the persisted
+    * pair source) → the labels DataFrame.  Reusing the DataFrame reuses the persisted
     * lineage-cut blocks inside it, so the pair graph materializes once
     * per session instead of once per query.  Strong session refs are
     * intentional (library-lifetime cache, cleared via
@@ -737,12 +737,11 @@ object Dedup {
   /** The ≥0.5 global Jaccard pairs, cache-aware — the shared input
     * of [[clusterLabels]] and the d13 audit.  Per-query isolation by
     * default; one persisted materialization per session under the cache
-    * conf (keying discipline as [[clusterLabels]]: every conf that shapes
-    * the build — prefix filter AND pair source — is part of the key). */
+    * conf (keying discipline as [[clusterLabels]]: the pair source, the
+    * one conf that shapes the build, is the key). */
   def dupPairs(s: org.apache.spark.sql.SparkSession, dir: String,
       sourceOverride: Option[String] = None): org.apache.spark.sql.DataFrame = {
-    val prefixConf =
-      s.conf.getOption("spark.graft.jaccard.prefixFilter").getOrElse("auto")
+    TextOps.rejectPrefixFilterOverride(s)
     val source = sourceOverride.getOrElse(pairSourceConf(s))
     def build() = source match {
       case "banded" => bandedJaccardPairs(s, dir).select(col("doc_a"), col("doc_b"))
@@ -751,7 +750,7 @@ object Dedup {
     }
     def built() =
       if (s.conf.getOption("spark.graft.dupgraph.cache").exists(_.toBoolean))
-        dupPairsMemo.computeIfAbsent((s, dir, s"$prefixConf/$source"),
+        dupPairsMemo.computeIfAbsent((s, dir, source),
           _ => constructionPersist(s, build()))
       else build()
     // RECALL-FLOOR GUARD — `spark.graft.embed.minRecallBp`'s dedup analog
@@ -847,16 +846,11 @@ object Dedup {
     // session+dir key would hand back the under-provisioned plan forever
     val ccRounds = s.conf.getOption("spark.graft.cc.rounds")
       .map(_.toInt).getOrElse(DefaultCcRounds)
-    // every conf that shapes the memoized BUILD is part of the key:
-    // flipping spark.graft.jaccard.prefixFilter mid-session with the cache
-    // on must select the other pair-generation plan on the next call, not
-    // silently hand back one built under the old setting ("auto" = unset —
-    // the plan-stats switch inside adaptiveJaccardPairs decides)
-    val prefixConf =
-      s.conf.getOption("spark.graft.jaccard.prefixFilter").getOrElse("auto")
-    // the pair-SOURCE conf shapes the memoized build exactly like the
-    // prefix-filter conf does: flipping it mid-session must select a
-    // fresh plan, never hand back one built from the other relation
+    // the pair-SOURCE conf shapes the memoized build: flipping it
+    // mid-session must select a fresh plan, never hand back one built
+    // from the other relation (the prefix-filter plan is picked by input
+    // size inside adaptiveJaccardPairs, a function of `dir`)
+    TextOps.rejectPrefixFilterOverride(s)
     val pairSource = pairSourceConf(s)
     def build(): org.apache.spark.sql.DataFrame = {
       // exact global Jaccard pairs at >= 0.5 — scale-adaptive: the naive
@@ -871,7 +865,7 @@ object Dedup {
       // build() only CONSTRUCTS the plan (zero-jobs-at-construction
       // contract — lineage cuts materialize at first action), so holding
       // the map bin during computeIfAbsent is milliseconds, not minutes
-      dupGraphMemo.computeIfAbsent((s, dir, ccRounds, s"$prefixConf/$pairSource"), _ => build())
+      dupGraphMemo.computeIfAbsent((s, dir, ccRounds, pairSource), _ => build())
     else build()
   }
 

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.tables.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Knob sweep for the bucketed embedding pair source (round-10 verdict
@@ -20,13 +19,7 @@ import org.apache.spark.sql.functions._
 object EmbedSweep {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session("4")
     graft.sentiment.GraftFunctions.register(spark)
     import spark.implicits._
 

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.tables.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Synopsis-size sweep for the d17 cross-source overlap sketch: measures
@@ -17,13 +16,7 @@ import org.apache.spark.sql.functions._
 object OverlapSweep {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session("4")
     graft.sentiment.GraftFunctions.register(spark)
 
     // exact ground truth: per-source distinct shingle counts + pairwise

@@ -18,131 +18,41 @@ import org.apache.spark.sql.functions._
   * technique — no float crosses an engine boundary), so the whole
   * decision replays bit-for-bit in DuckDB.
   *
-  * Magnitude regime — now a TESTED CONFIG PATH, not a comment (r13 nit
-  * #3): the cross-multiplied staleness numerators reach 10⁴·Σdist·n ≈
-  * 7·10¹⁸ at sf0.1 — inside int64 with ~25% headroom — and the selector
-  * leg's w_old/w_new products grow as per-bucket-count × total-count ×
-  * 10⁴, which overflows EARLIER (roughly beyond ~10⁹ total tokens with a
-  * hot bucket).  Under ANSI both fail correct-by-crash.  Since round 15
-  * the DEFAULT regime is PROMOTED ([[decimalOn]] — a 100× corpus needs
-  * no conf flip; the promotion is free because every promoted expression
-  * lives on a bounded audit relation, and the int64-vs-CASE alternatives
-  * are ruled out at decimalOn's doc).  Setting
-  * `spark.graft.decimal128=false` pins the int64 micro-path (preflight
-  * with the Needs checkers first); `true` pins the promotion of every
-  * overflow-capable product
-  * (staleness cross-products, the selector shift mass and weight
-  * numerators/denominators, the benefit numerators) to decimal(38,0) —
-  * the integral `div` still returns bigint, so OUTPUT schemas and values
-  * are identical where int64 doesn't overflow (Decimal128ParitySpec pins
-  * both: parity on real data, survival on a planted overflow-scale
-  * fixture).  DuckDB replays the promoted arithmetic as HUGEINT (int128
-  * — the a12/a13 convention), so the decision still value-oracles when a
-  * deployment flips the conf. */
+  * Magnitude regime: the cross-multiplied staleness numerators reach
+  * 10⁴·Σdist·n ≈ 7·10¹⁸ at sf0.1 — inside int64 with ~25% headroom —
+  * and the selector leg's w_old/w_new products grow as per-bucket-count
+  * × total-count × 10⁴, which would overflow int64 EARLIER (roughly
+  * beyond ~10⁹ total tokens with a hot bucket; under ANSI
+  * correct-by-crash).  So every overflow-capable product (staleness
+  * cross-products, the selector shift mass and weight numerators and
+  * denominators, the benefit numerators) is promoted to decimal(38,0)
+  * through [[big]].  The integral `div` still returns bigint, so output
+  * schemas and values are what int64 gives wherever int64 does not
+  * overflow (Decimal128ParitySpec pins the promoted answers against
+  * BigInt recounts, on real-scale and planted overflow-scale fixtures).
+  * The promotion is free: every promoted expression lives on a bounded
+  * audit relation (≤ B buckets / ≤ k cells / ≤ PqM·PqK codes / 1-row
+  * totals); the corpus-sized arithmetic upstream (token bucketing,
+  * distance masses) stays int64.  An int64 pin lost every A/B against
+  * the promotion (0.91×, 0.96×, 19.45 s vs 20.77 s, 17.34 s vs 17.40 s)
+  * and was deleted ([[rejectInt64Pin]]).  DuckDB replays the promoted
+  * arithmetic as HUGEINT (int128 — the a12/a13 convention). */
 object RefreshDecision {
 
-  /** The decimal(38,0) promotion conf — see the magnitude-regime note
-    * above.  Three states (r14 verdict #5 — the flip used to be manual,
-    * so a 100× corpus under default conf got correct-by-crash):
-    * `"true"`/`"false"` PIN the regime; unset or `"auto"` (the default)
-    * resolves to PROMOTED via [[decimalOn]] — the rationale there. */
-  def decimal128Conf(s: SparkSession): Option[Boolean] =
-    s.conf.getOption("spark.graft.decimal128").flatMap {
-      case "auto" => None
-      case v => Some(v.toBoolean)
-    }
+  /** The int64 pin is retired: `false` fails loudly at each site that
+    * used to pick the regime; the former default spellings pass. */
+  private[queries] def rejectInt64Pin(s: SparkSession): Unit =
+    graft.RetiredConf.reject(s, "spark.graft.decimal128", "true", "auto")
 
-  /** The AUTO regime is PROMOTED.  Why not "peek at the counts and pick
-    * int64 when safe" (the literal r14 ask): (a) a plan-time peek
-    * executes an aggregate during query CONSTRUCTION, which violates the
-    * construction-purity gate (QueryPacksSpec: building a DataFrame
-    * launches zero action jobs) and made every later plan's evidence
-    * order-dependent; (b) a runtime CASE over both arithmetics cannot
-    * preserve the int64 path either — Spark's common-type coercion types
-    * the CASE result decimal(38,0) regardless of which branch runs.  So
-    * the only way to KEEP int64 is a conf pin, and auto must choose one
-    * type: decimal(38,0) is exact at any corpus scale and costs nothing
-    * here, because every promoted expression lives on a bounded audit
-    * relation (≤ B buckets / ≤ k cells / ≤ PqM·PqK codes / 1-row totals)
-    * — the corpus-sized arithmetic upstream (token bucketing, distance
-    * masses) is int64 in BOTH regimes.  Values are bit-identical where
-    * int64 doesn't overflow (Decimal128ParitySpec), so the oracle is
-    * unaffected; a deployment pinning `false` for the int64 micro-win
-    * should preflight [[selectorNeedsDecimal128]]/[[crossNeedsDecimal128]]. */
-  def decimalOn(s: SparkSession): Boolean =
-    decimal128Conf(s).getOrElse(true)
-
-  /** Pinned-int64 preflight headroom: the regime is safe only while
-    * every product BOUND stays under half of int64 — the bound is exact
-    * worst-case per the relation's own maxima/totals, the 2× margin
-    * absorbs the one growth step between this audit and the next
-    * (counts are epoch-monotone, they can't double silently inside a
-    * decision). */
-  private val Int64Headroom: BigInt = BigInt(Long.MaxValue) / 2
-
-  /** Pinned-int64 PREFLIGHT for the SELECTOR leg (run it before setting
-    * `spark.graft.decimal128=false` — it executes one tiny aggregate, so
-    * it must never be called during query construction): does any
-    * product in [[selectorWeights]]/[[selectorLegOf]]'s int64 path risk
-    * overflow at this relation's magnitudes?  One aggregate over the
-    * ≤ B-row drift counts (maxima + totals), then exact BigInt bounds on
-    * each product: shift terms n_inc·NRₐ and cr_arch·TIᵣ, their 10⁴·Σ
-    * numerator, the w_old/w_new numerators and denominators, and the
-    * 2·NRₐ·TIᵣ normalizer. */
-  def selectorNeedsDecimal128(per: DataFrame, buckets: Long): Boolean = {
-    val r = per.agg(
-      count(lit(1)).as("n"),
-      coalesce(max(col("ct_arch")), lit(0L)).as("xct"),
-      coalesce(max(col("cr_arch")), lit(0L)).as("xcr"),
-      coalesce(max(col("ct_inc")), lit(0L)).as("xci"),
-      coalesce(max(col("n_inc")), lit(0L)).as("xni"),
-      coalesce(sum(col("ct_arch")), lit(0L)).as("nta"),
-      coalesce(sum(col("cr_arch")), lit(0L)).as("nra"),
-      coalesce(sum(col("ct_inc")), lit(0L)).as("tit"),
-      coalesce(sum(col("n_inc")), lit(0L)).as("tir")).collect().head
-    val Seq(n, xct, xcr, xci, xni, nta, nra, tit, tir) =
-      (0 to 8).map(i => BigInt(r.getLong(i)))
-    val b = BigInt(buckets)
-    val shTerm = (xni * nra).max(xcr * tir)
-    val bounds = Seq(
-      shTerm,                                     // per-bucket shift products
-      BigInt(10000) * n * shTerm,                 // 10⁴·Σsh numerator
-      BigInt(2) * nra * tir,                      // staleness normalizer
-      (xct + 1) * (nra + b) * 10000,              // w_old numerator
-      (xcr + 1) * (nta + b),                      // w_old denominator
-      (xct + xci + 1) * (nra + tir + b) * 10000,  // w_new numerator
-      (xcr + xni + 1) * (nta + tit + b))          // w_new denominator
-    bounds.exists(_ > Int64Headroom)
-  }
-
-  /** Pinned-int64 PREFLIGHT for a CROSS-STALENESS leg (+ its
-    * priced-benefit sibling, whose 10⁴·Σd_before numerator is bounded by
-    * 10⁴·(ma+mi) — d_before is the same stale-model mass split this
-    * relation totals).  Executes one tiny aggregate — never call during
-    * query construction. */
-  def crossNeedsDecimal128(per: DataFrame,
-      nA: String, nI: String, mA: String, mI: String): Boolean = {
-    val r = per.agg(
-      coalesce(sum(col(nA)), lit(0L)).as("na"),
-      coalesce(sum(col(nI)), lit(0L)).as("ni"),
-      coalesce(sum(col(mA)), lit(0L)).as("ma"),
-      coalesce(sum(col(mI)), lit(0L)).as("mi")).collect().head
-    val Seq(na, ni, ma, mi) = (0 to 3).map(i => BigInt(r.getLong(i)))
-    Seq(BigInt(10000) * mi * na, ma * ni, BigInt(10000) * (ma + mi))
-      .exists(_ > Int64Headroom)
-  }
-
-
-  /** Wrap a SQL term in the decimal(38,0) promotion when `dec` — ONE
-    * promoted factor per product is enough: decimal is sticky through
-    * `*`/`-`, and integral `div` over decimals returns bigint. */
-  private def big(e: String, dec: Boolean): String =
-    if (dec) s"cast(($e) as decimal(38,0))" else s"($e)"
+  /** Wrap a SQL term in the decimal(38,0) promotion — ONE promoted
+    * factor per product is enough: decimal is sticky through `*`/`-`,
+    * and integral `div` over decimals returns bigint. */
+  private def big(e: String): String = s"cast(($e) as decimal(38,0))"
 
   /** `10⁴·(before − after) div before` in bp — the priced-retrain
-    * benefit expression the ivf/pq legs share, promotion-aware. */
-  def benefitBp(before: String, after: String, decimal: Boolean): Column =
-    expr(s"(10000 * (${big(before, decimal)} - ($after))) div nullif($before, 0)")
+    * benefit expression the ivf/pq legs share. */
+  def benefitBp(before: String, after: String): Column =
+    expr(s"(10000 * (${big(before)} - ($after))) div nullif($before, 0)")
 
   /** Default decision thresholds, baked into the DuckDB oracle; a
     * deployment overrides via `spark.graft.refresh.minStalenessBp` /
@@ -173,8 +83,7 @@ object RefreshDecision {
     * composition passes the monitor's reportOf output — same columns,
     * same expression. */
   def crossStalenessBp(per: DataFrame,
-      nA: String, nI: String, mA: String, mI: String,
-      decimal: Boolean = false): DataFrame =
+      nA: String, nI: String, mA: String, mI: String): DataFrame =
     // nullif: the live composition's cold start (monitors booted, no
     // incoming data yet) coalesces the incoming side to TRUE ZEROS (not
     // the nulls an empty batch aggregate yields), and an un-guarded
@@ -182,8 +91,8 @@ object RefreshDecision {
     // null staleness (→ 'keep'), never crash the decision query
     per.agg(sum(col(nA)).as("na"), sum(col(nI)).as("ni"),
         sum(col(mA)).as("ma"), sum(col(mI)).as("mi"))
-      .select(expr(s"(10000 * ${big("mi", decimal)} * na) " +
-          s"div nullif(${big("ma", decimal)} * ni, 0) - 10000")
+      .select(expr(s"(10000 * ${big("mi")} * na) " +
+          s"div nullif(${big("ma")} * ni, 0) - 10000")
         .as("staleness_bp"))
 
   /** Selector staleness AND refresh benefit in one pass over c12's
@@ -210,38 +119,36 @@ object RefreshDecision {
     * c11 weight per bucket, totals riding a window over the ≤ B-row
     * counts relation.  Extracted so [[selectorLegOf]]'s aggregate and
     * c16's serving-weight export read the SAME expressions. */
-  def selectorWeights(per: DataFrame, buckets: Long,
-      decimal: Boolean = false): DataFrame = {
+  def selectorWeights(per: DataFrame, buckets: Long): DataFrame = {
     val w = Window.partitionBy()
-    // every count × total product is promotion-wrapped: these are the
-    // expressions whose int64 ceiling arrives FIRST (the header's
-    // w_old/w_new regime — per-bucket-count × total-count × 10⁴)
+    // every count × total product is promoted: these are the expressions
+    // whose int64 ceiling would arrive FIRST (the header's w_old/w_new
+    // regime — per-bucket-count × total-count × 10⁴)
     per
       .withColumn("nt_a", sum(col("ct_arch")).over(w))
       .withColumn("nr_a", sum(col("cr_arch")).over(w))
       .withColumn("ti_t", sum(col("ct_inc")).over(w))
       .withColumn("ti_r", sum(col("n_inc")).over(w))
       .withColumn("sh", expr(
-        s"abs(${big("n_inc", decimal)} * nr_a - ${big("cr_arch", decimal)} * ti_r)"))
+        s"abs(${big("n_inc")} * nr_a - ${big("cr_arch")} * ti_r)"))
       .withColumn("w_old", expr(
-        s"(${big("ct_arch + 1", decimal)} * (nr_a + $buckets) * 10000) " +
-          s"div (${big("cr_arch + 1", decimal)} * (nt_a + $buckets))"))
+        s"(${big("ct_arch + 1")} * (nr_a + $buckets) * 10000) " +
+          s"div (${big("cr_arch + 1")} * (nt_a + $buckets))"))
       .withColumn("w_new", expr(
-        s"(${big("ct_arch + ct_inc + 1", decimal)} * (nr_a + ti_r + $buckets) * 10000) " +
-          s"div (${big("cr_arch + n_inc + 1", decimal)} * (nt_a + ti_t + $buckets))"))
+        s"(${big("ct_arch + ct_inc + 1")} * (nr_a + ti_r + $buckets) * 10000) " +
+          s"div (${big("cr_arch + n_inc + 1")} * (nt_a + ti_t + $buckets))"))
   }
 
-  def selectorLegOf(per: DataFrame, buckets: Long,
-      decimal: Boolean = false): DataFrame =
-    selectorWeights(per, buckets, decimal)
+  def selectorLegOf(per: DataFrame, buckets: Long): DataFrame =
+    selectorWeights(per, buckets)
       .agg(
         // nullif: the crossStalenessBp cold-start rationale — a live
         // stream with zero incoming tokens must read null, not crash
-        expr(s"(10000 * ${big("sum(sh)", decimal)}) " +
-            s"div nullif(2 * ${big("max(nr_a)", decimal)} * max(ti_r), 0)")
+        expr(s"(10000 * ${big("sum(sh)")}) " +
+            s"div nullif(2 * ${big("max(nr_a)")} * max(ti_r), 0)")
           .as("staleness_bp"),
-        // w_old/w_new are bigint either way (div's output type), so the
-        // benefit mean needs no promotion
+        // w_old/w_new are bigint (div's output type), so the benefit
+        // mean needs no promotion
         expr("sum(abs(w_new - w_old)) div nullif(count(*), 0)").as("benefit_bp"))
 
   /** The DuckDB totals CTEs of an ivf/pq decision leg — archive/incoming

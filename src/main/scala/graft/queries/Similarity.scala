@@ -2617,12 +2617,11 @@ object Similarity {
           .cast("long").as("d_arch"),
         sum(when(isNew(col("vec_id")), col("dist")).otherwise(0.0))
           .cast("long").as("d_inc"))
-    val dec = RefreshDecision.decimalOn(s)
-    val st = RefreshDecision.crossStalenessBp(per, "n_arch", "n_inc", "d_arch", "d_inc",
-      decimal = dec)
+    RefreshDecision.rejectInt64Pin(s)
+    val st = RefreshDecision.crossStalenessBp(per, "n_arch", "n_inc", "d_arch", "d_inc")
     val ben = s15RefreshReport(s, dir)
       .agg(sum(col("d_before")).as("db"), sum(col("d_after")).as("da"))
-      .select(RefreshDecision.benefitBp("db", "da", dec).as("benefit_bp"))
+      .select(RefreshDecision.benefitBp("db", "da").as("benefit_bp"))
     st.crossJoin(broadcast(ben))
       .select(lit("ivf").as("family"), col("staleness_bp"), col("benefit_bp"))
   }
@@ -2722,12 +2721,12 @@ object Similarity {
           .cast("long").as("err_arch"),
         sum(when(isNew(col("vec_id")), col("dist")).otherwise(0.0))
           .cast("long").as("err_inc"))
-    val dec = RefreshDecision.decimalOn(s)
+    RefreshDecision.rejectInt64Pin(s)
     val st = RefreshDecision.crossStalenessBp(per, "n_arch", "n_inc",
-      "err_arch", "err_inc", decimal = dec)
+      "err_arch", "err_inc")
     val ben = s17PqRefreshReport(s, dir)
       .agg(sum(col("err_before")).as("eb"), sum(col("err_after")).as("ea"))
-      .select(RefreshDecision.benefitBp("eb", "ea", dec).as("benefit_bp"))
+      .select(RefreshDecision.benefitBp("eb", "ea").as("benefit_bp"))
     st.crossJoin(broadcast(ben))
       .select(lit("pq").as("family"), col("staleness_bp"), col("benefit_bp"))
   }

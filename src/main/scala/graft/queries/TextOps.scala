@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.NamedQuery
+import graft.{NamedQuery, RetiredConf}
 import graft.tables.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -823,21 +823,23 @@ object TextOps {
     * results — proven by QueryPacksSpec in both scopes): for small corpora
     * the naive shingle join beats the prefix filter's extra shuffles; at
     * scale, quadratic blowup on frequent shingles dominates and the
-    * prefix-filtered join is the only viable plan.  The decision uses
-    * driver-side plan statistics (file-listing sizeInBytes — no Spark job;
-    * round 1 ran a full count() action inside query CONSTRUCTION) with an
-    * explicit conf override for deployments that know their corpus. */
+    * prefix-filtered join is the only viable plan.  The input size alone
+    * decides, from driver-side plan statistics (file-listing sizeInBytes
+    * — no Spark job; round 1 ran a full count() action inside query
+    * CONSTRUCTION); no conf overrides it ([[rejectPrefixFilterOverride]]). */
   def adaptiveJaccardPairs(s: SparkSession, dir: String, t: Double,
       global: Boolean = false, sh0: Option[DataFrame] = None): DataFrame = {
-    val usePrefix = s.conf.getOption("spark.graft.jaccard.prefixFilter") match {
-      case Some(v) => v.toBoolean
-      case None =>
-        Tables.documents(s, dir).queryExecution.optimizedPlan
-          .stats.sizeInBytes > (512L << 20) // ≈ a 500 k-doc switch
-    }
+    rejectPrefixFilterOverride(s)
+    val usePrefix = Tables.documents(s, dir).queryExecution.optimizedPlan
+      .stats.sizeInBytes > (512L << 20) // ≈ a 500 k-doc switch
     if (usePrefix) jaccardPairsPrefixFiltered(s, dir, t, global, sh0)
     else shingleJaccardPairs(s, dir, global, sh0).filter(col("jaccard") >= t)
   }
+
+  /** The prefix-filter override is retired: every value fails loudly at
+    * each site that used to read it (here and the dup-graph memo keys). */
+  private[queries] def rejectPrefixFilterOverride(s: SparkSession): Unit =
+    RetiredConf.reject(s, "spark.graft.jaccard.prefixFilter")
 
   /** The distinct word-trigram shingle ARRAY of a token-array column —
     * THE single definition of the dedup tier's shingle set, shared by
@@ -1936,105 +1938,18 @@ object TextOps {
     * Round k+1's plan consumes round k's persisted occurrences (the
     * propagateLabels lineage-cut pattern); K rounds = K tiny shuffles +
     * K in-place window passes over the sample. */
-  /** AQE must be OFF while a BPE plan is CONSTRUCTED: with AQE on, even a
-    * lazy localCheckpoint's execute() materializes every adaptive query
-    * stage eagerly — action jobs at construction, violating the zero-jobs
-    * contract.  Non-adaptive execute() just builds the RDD chain lazily;
-    * the conf is restored in the finally, and the OUTER query still runs
-    * under whatever the session has — only the lineage-truncated inner
-    * rounds (small, fixed-shape shuffles that AQE would not improve) are
-    * pinned non-adaptive.  Query CONSTRUCTION is single-threaded per
-    * session by library convention (the same contract as
-    * Dedup.withLineageCutConfs — all `queries` entries build their plan
-    * synchronously); a concurrent construction on the same session could
-    * observe the toggled value for the duration of `body`, and a
-    * construction-time crash restores the conf on this thread before the
-    * exception unwinds. */
-  private[queries] def withBpeConstructionConfs[T](s: SparkSession)(body: => T): T = {
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrior = s.conf.getOption(aqeKey)
-    s.conf.set(aqeKey, "false")
-    try body
-    finally aqePrior match {
-      case Some(v) => s.conf.set(aqeKey, v)
-      case None => s.conf.unset(aqeKey)
-    }
-  }
-
-  private def bpeWindow = org.apache.spark.sql.expressions.Window
-    .partitionBy(col("doc_id")).orderBy(col("seq"))
-
-  /** One PERSISTED relation per round: the adjacency view (occ + next
-    * token + dense row index, all from a single window pass).  Both
-    * consumers of a round — the argmax job and the merge application —
-    * read the cached blocks, so a round materializes its input once.
-    * Lineage truncation per round, all LAZY: re-wrap the round's
-    * relation as a fresh LogicalRDD via the layout-preserving cut
-    * (building the execution RDD launches no job with AQE off; even a
-    * lazy localCheckpoint launches one) and persist it so the round's
-    * consumers and the next round share one materialization — the cut
-    * keeps the (doc_id) hash partitioning + (doc_id, seq) ordering, so
-    * later rounds' windows run exchange- and sort-free.  Without the
-    * truncation the k-th round's plan nests k crossJoin+window subtrees
-    * and Catalyst re-optimization of the growing tree dominates wall
-    * time (measured min-of-2: 21 s → ~3 s at sf0.1).  Call inside
-    * [[withBpeConstructionConfs]]. */
-  private def bpeAdjacency(s: SparkSession,
-      occ: DataFrame): DataFrame = {
-    val computed = occ
-      .withColumn("ntok", lead(col("tok"), 1).over(bpeWindow))
-      .withColumn("rn", row_number().over(bpeWindow))
-    // partitioning-preserving cut: the adjacency leaves here hash-
-    // partitioned by doc_id and sorted (doc_id, seq) — exactly what the
-    // next round's windows need — so the cut must not erase that layout
-    // or every round pays a redundant full shuffle + sort (the public
-    // createDataFrame(df.rdd) cut did; see the shim's scaladoc).  The
-    // persist rides the cut's RDD (ContextCleaner-reclaimed, row-copied).
-    org.apache.spark.sql.graftshim.PartitioningPreservingCut.cut(computed, persist = true)
-  }
-
-  /** One greedy left-to-right merge pass of the 1-row rule `best(l, r)`
-    * over an adjacency relation, returning the NEXT round's adjacency.
-    * Chain arithmetic rides the DENSE row index rn (seq keeps gaps
-    * after deletions but rn re-derives densely every round):
-    * candidates overlapping = consecutive rn, greedy = even offset
-    * from the chain start.  Shared verbatim by the t20 trainer's round
-    * body and the t21 application loop — the application IS the
-    * trainer's merge step, just with the rule given instead of argmaxed. */
-  private def bpeMergePass(s: SparkSession, adj: DataFrame,
-      best: DataFrame): DataFrame = {
-    val wCum = bpeWindow
-    val flagged = adj.crossJoin(broadcast(best))
-      .withColumn("cand", col("tok") === col("l") && col("ntok") === col("r"))
-      .withColumn("chain_start", max(when(col("cand") &&
-        !coalesce(lag(col("cand"), 1).over(wCum), lit(false)), col("rn")))
-        .over(wCum))
-      .withColumn("is_m",
-        col("cand") && (col("rn") - col("chain_start")) % 2 === 0)
-      .withColumn("is_d", coalesce(lag(col("is_m"), 1).over(wCum), lit(false)))
-    bpeAdjacency(s, flagged.filter(!col("is_d"))
-      .select(col("doc_id"), col("seq"),
-        when(col("is_m"), concat(col("tok"), col("r")))
-          .otherwise(col("tok")).as("tok")))
-  }
-
-  /** (doc_id, seq, tok) occurrences of `docs` — the BPE state relation. */
-  private def bpeOcc(docs: DataFrame): DataFrame =
-    docs.filter(col("text").isNotNull && col("text") =!= "")
-      .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("seq", "tok")))
-
   /** The t20 trainer loop on the 5% id-sample: returns the per-round
     * 1-row argmax relations (`best(l, r, c)`, rank = position + 1) and
-    * the sample's final post-merge adjacency.  Call inside
-    * [[withBpeConstructionConfs]].
+    * the sample's final post-merge `(doc_id, seq, tok)` occurrences
+    * (lazy and uncut: only BpeTrainSpec's round-trip reads them).
     *
     * KERNEL-TRAIN form (r17): round k counts pairs on the sample
     * RE-ENCODED from scratch by the one-pass native
     * [[graft.functions.BpeApplyMerges]] kernel under rules 1..k−1 —
     * the state the old per-round window chain maintained incrementally.
     * The two are value-identical by the round-trip BpeTrainSpec pins
-    * (apply(rules 1..k) lands exactly on the trainer's round-k
-    * occurrence table; the kernel ≡ the declarative passes ≡ the
+    * (the spec's declarative window passes under rules 1..k land
+    * exactly on the trainer's round-k occurrences; the kernel ≡ the
     * plain-Scala reference), so the argmax sees the same pair counts.
     * What changes is the cost shape: the old loop persisted a
     * SAMPLE-WIDE occurrence relation and ran 3–4 window passes per
@@ -2073,49 +1988,23 @@ object TextOps {
         .orderBy(col("c").desc, col("l"), col("r")).limit(1))
       bests = bests :+ best
     }
-    val finalOcc = encodedUnder(bests)
-      .select(col("doc_id"), posexplode(col("toks")).as(Seq("seq", "tok")))
-    (bests, bpeAdjacency(s, finalOcc.repartition(col("doc_id"))))
+    (bests, encodedUnder(bests)
+      .select(col("doc_id"), posexplode(col("toks")).as(Seq("seq", "tok"))))
   }
-
-  /** The initial (pre-merge) adjacency of an occurrence relation —
-    * t21's before-count reads it, and [[bpeApplyMerges]] starts from it.
-    * Call inside [[withBpeConstructionConfs]]. */
-  private[queries] def bpeInitialAdjacency(s: SparkSession, occ: DataFrame): DataFrame =
-    bpeAdjacency(s, occ.repartition(col("doc_id")))
-
-  /** Applies an ordered merge-rule list to an initial adjacency — rank
-    * order, one greedy pass per rule (exactly what the trainer's own
-    * merge step does each round).  Returns the final adjacency.  THE
-    * application loop: t21's fn and BpeTrainSpec's round-trip both call
-    * this, so the spec's guarantee covers the code production t21 runs.
-    * Call inside [[withBpeConstructionConfs]]. */
-  private[queries] def bpeApplyMerges(s: SparkSession, adj0: DataFrame,
-      bests: Seq[DataFrame]): DataFrame =
-    bests.foldLeft(adj0)((adj, best) => bpeMergePass(s, adj, best))
-
-  /** The trainer's 5% id-sample occurrences — the single definition of
-    * the sample, consumed by [[bpeTrainLoop]] and the spec round-trip. */
-  private[queries] def bpeSampleOcc(s: SparkSession, dir: String): DataFrame =
-    bpeOcc(Tables.documents(s, dir).filter(col("doc_id") % 20 === 0))
 
   /** Session-scoped trainer memo for the opt-in
     * `spark.graft.bpe.cache` path (the `Dedup.dupGraphMemo` discipline):
     * (session, dataset dir) → the trainer loop's (bests, final
-    * adjacency).  A composed pipeline that runs t20 (inspect the merge
+    * occurrences).  A composed pipeline that runs t20 (inspect the merge
     * table) and then t21 (encode the corpus) trains ONCE — reusing the
     * DataFrames reuses the persisted lineage-cut blocks inside them, so
     * the sample rounds materialize once per session.  Per-query
     * isolation (the gate contract) stays the default; strong session
-    * refs are intentional (cleared via [[clearBpeCache]]).  The sample
-    * and round count are compile-time constants; the ONE conf that
-    * shapes the build — `spark.graft.cut.persist`, baked into every
-    * round's cut leaves — is part of the key (the
-    * `Dedup.clusterLabels` keying discipline: flipping it mid-session
-    * must build the other form, never silently replay the old one). */
+    * refs are intentional (cleared via [[clearBpeCache]]).  No conf
+    * shapes the build, so (session, dir) is the whole key. */
   private[queries] val bpeTrainMemo =
     new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String), (Seq[DataFrame], DataFrame)]()
+      (SparkSession, String), (Seq[DataFrame], DataFrame)]()
 
   /** Drops memoized trainers (blocks reclaimed by the ContextCleaner
     * once the plans are unreachable — the [[Dedup.clearDupGraphCache]]
@@ -2123,18 +2012,16 @@ object TextOps {
   def clearBpeCache(): Unit = bpeTrainMemo.clear()
 
   /** [[bpeTrainLoop]], memoized per (session, dir) under
-    * `spark.graft.bpe.cache=true`.  Call inside
-    * [[withBpeConstructionConfs]]. */
+    * `spark.graft.bpe.cache=true`. */
   private def bpeTrainLoopCached(s: SparkSession,
       dir: String): (Seq[DataFrame], DataFrame) =
-    if (s.conf.getOption("spark.graft.bpe.cache").exists(_.toBoolean)) {
-      val cutForm = s.conf.getOption("spark.graft.cut.persist").getOrElse("rdd")
-      bpeTrainMemo.computeIfAbsent((s, dir, cutForm), _ => bpeTrainLoop(s, dir))
-    } else bpeTrainLoop(s, dir)
+    if (s.conf.getOption("spark.graft.bpe.cache").exists(_.toBoolean))
+      bpeTrainMemo.computeIfAbsent((s, dir), _ => bpeTrainLoop(s, dir))
+    else bpeTrainLoop(s, dir)
 
   val t20BpeTrain = NamedQuery(
     "t20_bpe_train",
-    (s, dir) => withBpeConstructionConfs(s) {
+    (s, dir) => {
       val (bests, _) = bpeTrainLoopCached(s, dir)
       bests.zipWithIndex.map { case (best, i) =>
         best.select(lit(i + 1).as("merge_rank"), col("l").as("left_tok"),
@@ -2190,83 +2077,43 @@ object TextOps {
     * tokenizer loop: train on the 5% sample (t20's loop, composed — same
     * single source of truth discipline as d13/s9), then ENCODE the whole
     * corpus with the learned rules in rank order, one greedy
-    * left-to-right pass per rule ([[bpeMergePass]] — the application IS
-    * the trainer's merge step, so trainer and encoder can never disagree
-    * on merge semantics; BpeTrainSpec pins the round-trip).  Output: the
-    * per-source encoding budget — tokens before/after, merges applied,
-    * compression in integer basis points — the number a tokenizer
-    * deployment actually reports.
+    * left-to-right pass per rule.  Output: the per-source encoding
+    * budget — tokens before/after, merges applied, compression in
+    * integer basis points — the number a tokenizer deployment actually
+    * reports.
     *
-    * Scale shape (the `onepass` default — see [[bpeApplyModeConf]]):
-    * BPE application needs NO cross-document state, so the encode is a
-    * single corpus scan — per document, tokenize and run the broadcast
-    * merge table through [[graft.functions.BpeApplyKernel]] (one greedy
-    * pass per rule over the in-memory token array), then one tiny
-    * per-source aggregate.  The corpus is touched exactly once and
+    * Scale shape: BPE application needs NO cross-document state, so the
+    * encode is a single corpus scan — per document, tokenize and run the
+    * broadcast 1-row merge table through [[graft.functions.BpeApplyKernel]]
+    * (one greedy pass per rule over the in-memory token array), then one
+    * tiny per-source aggregate.  The corpus is touched exactly once and
     * nothing corpus-wide materializes; the trainer's sample-bound loop
-    * is the only iterative cost.  The declarative K-pass form (`passes`)
-    * is kept as the executable oracle reference — it is what the DuckDB
-    * oracle unrolls — but re-materialized the full occurrence relation
-    * once per rule for per-document-local work, which made it the
-    * suite's slowest query (round-8 verdict finding #2). */
-  /** t21's per-source encoding-budget summary over per-doc
-    * (source, nb, na) token counts — shared by both application paths. */
-  private def bpeBudgetSummary(perDoc: DataFrame): DataFrame =
-    perDoc.groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("nb")).as("tokens_before"),
-        sum(col("na")).as("tokens_after"),
-        (sum(col("nb")) - sum(col("na"))).as("merges_applied"),
-        expr("sum(na) * 10000 DIV sum(nb)").as("compression_bp"))
-      .orderBy(col("source"))
-
-  /** `spark.graft.bpe.apply = onepass | passes` (default `onepass`) —
-    * which encoder runs the full-corpus merge application:
-    *
-    *  - `onepass` (production): the merge table rides ONE broadcast
-    *    1-row relation and [[graft.functions.BpeApplyMerges]] applies
-    *    all rules per document inside a single corpus scan — BPE
-    *    application is per-document local, so no adjacency relation,
-    *    no window passes, no per-round materialization: the corpus is
-    *    touched ONCE.  This was the round-8 verdict's top structural
-    *    finding: the declarative form re-materialized the full
-    *    occurrence relation K times for per-document-local work
-    *    (22 s at local[32], the suite's slowest query).
-    *  - `passes`: the declarative K-window-pass form sharing the
-    *    trainer's own [[bpeMergePass]] — the oracle/spec reference
-    *    (the DuckDB oracle unrolls exactly this shape).
-    *
-    * BpeTrainSpec pins the two paths equal on the planted corpus (and
-    * kernel ≡ plain-Scala reference); the driver's DuckDB hash gate
-    * pins the default path against the unrolled oracle every round. */
-  private def bpeApplyModeConf(s: SparkSession): String =
-    s.conf.getOption("spark.graft.bpe.apply").getOrElse("onepass") match {
-      case v @ ("onepass" | "passes") => v
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.bpe.apply must be 'onepass' or 'passes', got '$other'")
-    }
-
+    * is the only iterative cost.  A declarative K-window-pass encode
+    * would re-materialize the full occurrence relation once per rule
+    * for per-document-local work (22 s at local[32], measured in round
+    * 8); the DuckDB oracle unrolls exactly that shape and hash-gates
+    * this path against it, and BpeTrainSpec pins the kernel against a
+    * plain-Scala reference. */
   val t21BpeApply = NamedQuery(
     "t21_bpe_apply",
-    (s, dir) => withBpeConstructionConfs(s) {
+    (s, dir) => {
+      RetiredConf.reject(s, "spark.graft.bpe.apply", "onepass")
       val (bests, _) = bpeTrainLoopCached(s, dir)
-      if (bpeApplyModeConf(s) == "passes") {
-        val adj0 = bpeInitialAdjacency(s, bpeOcc(Tables.documents(s, dir)))
-        val adjN = bpeApplyMerges(s, adj0, bests)
-        val before = adj0.groupBy(col("doc_id")).agg(count(lit(1)).as("nb"))
-        val after = adjN.groupBy(col("doc_id")).agg(count(lit(1)).as("na"))
-        bpeBudgetSummary(Tables.documents(s, dir).select(col("doc_id"), col("source"))
-          .join(before, "doc_id").join(after, "doc_id"))
-      } else {
-        graft.sentiment.GraftFunctions.register(s)
-        bpeBudgetSummary(Tables.documents(s, dir)
-          .filter(col("text").isNotNull && col("text") =!= "")
-          .select(col("source"), tokens(col("text")).as("toks"))
-          .crossJoin(broadcast(bpeMergesRow(bests)))
-          .select(col("source"), size(col("toks")).cast("long").as("nb"),
-            size(call_function("graft_bpe_apply", col("toks"), col("merges")))
-              .cast("long").as("na")))
-      }
+      graft.sentiment.GraftFunctions.register(s)
+      Tables.documents(s, dir)
+        .filter(col("text").isNotNull && col("text") =!= "")
+        .select(col("source"), tokens(col("text")).as("toks"))
+        .crossJoin(broadcast(bpeMergesRow(bests)))
+        .select(col("source"), size(col("toks")).cast("long").as("nb"),
+          size(call_function("graft_bpe_apply", col("toks"), col("merges")))
+            .cast("long").as("na"))
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("nb")).as("tokens_before"),
+          sum(col("na")).as("tokens_after"),
+          (sum(col("nb")) - sum(col("na"))).as("merges_applied"),
+          expr("sum(na) * 10000 DIV sum(nb)").as("compression_bp"))
+        .orderBy(col("source"))
     },
     Some {
       raw"""WITH $bpeOracleChain,
@@ -2283,10 +2130,9 @@ object TextOps {
     },
     doc = "BPE merge application (t20's 8 learned rules, rank order, " +
       "greedy non-overlap): per-source before/after token budget + " +
-      "integer-bp compression; default ONE-PASS native encoder " +
-      "(broadcast merge table + graft_bpe_apply, single corpus scan), " +
-      "spark.graft.bpe.apply=passes selects the declarative K-pass " +
-      "reference; FULL value oracle unrolling trainer + application stages")
+      "integer-bp compression; one-pass native encoder " +
+      "(broadcast merge table + graft_bpe_apply, single corpus scan); " +
+      "FULL value oracle unrolling trainer + application stages")
 
   // ---------------------------------------------------------------- t22
   /** Tokenizer FERTILITY — the number tokenizer work is actually tuned
@@ -2339,7 +2185,7 @@ object TextOps {
 
   val t22BpeFertility = NamedQuery(
     "t22_bpe_fertility",
-    (s, dir) => withBpeConstructionConfs(s) {
+    (s, dir) => {
       val (bests, _) = bpeTrainLoopCached(s, dir)
       graft.sentiment.GraftFunctions.register(s)
       Tables.documents(s, dir)

@@ -43,16 +43,13 @@ object LiveRefreshDecision {
   def decisionOf(ivfPer: DataFrame, pqPer: DataFrame, selPer: DataFrame,
       benefits: StoredBenefits,
       minStalenessBp: Long = RefreshDecision.DefaultMinStalenessBp,
-      minBenefitBp: Long = RefreshDecision.DefaultMinBenefitBp,
-      decimal: Boolean = true): DataFrame = {
+      minBenefitBp: Long = RefreshDecision.DefaultMinBenefitBp): DataFrame = {
     val ivf = RefreshDecision
-      .crossStalenessBp(ivfPer, "n_arch", "n_inc", "d_arch", "d_inc",
-        decimal = decimal)
+      .crossStalenessBp(ivfPer, "n_arch", "n_inc", "d_arch", "d_inc")
       .select(lit("ivf").as("family"), col("staleness_bp"),
         lit(benefits.ivfBp).as("benefit_bp"))
     val pq = RefreshDecision
-      .crossStalenessBp(pqPer, "n_arch", "n_inc", "err_arch", "err_inc",
-        decimal = decimal)
+      .crossStalenessBp(pqPer, "n_arch", "n_inc", "err_arch", "err_inc")
       .select(lit("pq").as("family"), col("staleness_bp"),
         lit(benefits.pqBp).as("benefit_bp"))
     // ct_inc = 0: the live raw-slice monitor carries no incoming TARGET
@@ -60,7 +57,7 @@ object LiveRefreshDecision {
     // column, which the stored figure replaces (see the module doc)
     val sel = RefreshDecision
       .selectorLegOf(selPer.withColumn("ct_inc", lit(0L)),
-        graft.queries.Curation.DsirBuckets, decimal = decimal)
+        graft.queries.Curation.DsirBuckets)
       .select(lit("selector").as("family"), col("staleness_bp"),
         lit(benefits.selectorBp).as("benefit_bp"))
     RefreshDecision.decide(ivf.unionByName(pq).unionByName(sel),

@@ -1,14 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Targeted query timer for local A/B iteration:
   *
   *   SPARK_GRAFT_CPUS=4 java -cp ... graft.tools.QuickTime \
   *     /root/testdata/sf0.1 s20_ivfpq_serving,c16_refresh_execution \
   *     [confKey=confValue ...]
   *
-  * Runs each named query Bench-style (count + Bench's clearCaches
+  * Runs each named query Bench-style (count + Harness.clearCaches
   * between runs, min-of-2 reported per query) under the given confs.
   * Diagnostic only — the committed numbers come from graft.Bench. */
 object QuickTime {
@@ -19,38 +17,10 @@ object QuickTime {
       val Array(k, v) = kv.split("=", 2); (k, v)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val b = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.file.transferTo", "false")
-      .config("spark.ui.enabled", "false")
-    confs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(cpus, confs.toSeq: _*)
     // SPARK_GRAFT_QT_TRACE=1: Bench's per-stage trace listener, so an A/B
     // can attribute wall time to stages vs driver-side gaps (guide §1.5).
-    if (sys.env.get("SPARK_GRAFT_QT_TRACE").contains("1"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val i = sc.stageInfo
-            val wall = for {s <- i.submissionTime; c <- i.completionTime} yield c - s
-            System.err.println(s"[trace] stage ${i.stageId} '${i.name.takeWhile(_ != '\n').take(60)}' " +
-              s"tasks=${i.numTasks} wall=${wall.getOrElse(-1L)}ms " +
-              s"taskTime=${i.taskMetrics.executorRunTime}ms " +
-              s"gc=${i.taskMetrics.jvmGCTime}ms " +
-              s"cpuMs=${i.taskMetrics.executorCpuTime / 1000000}")
-          }
-        })
-    def clearCaches(): Unit = {
-      spark.catalog.clearCache()
-      graft.queries.TextOps.clearBpeCache()
-      graft.queries.Similarity.clearEmbedCache()
-      graft.queries.Dedup.clearDupGraphCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
+    graft.Harness.traceStagesIf(spark, "SPARK_GRAFT_QT_TRACE")
     // SPARK_GRAFT_QT_JOBS=1: per-job wall + total job count, so an A/B can
     // attribute wall time to job-count overhead (broadcast builds, AQE
     // stages) vs in-job work (guide §1.5).
@@ -81,7 +51,7 @@ object QuickTime {
         val t0 = System.nanoTime()
         graft.SparkEntry.queries(name)(spark, sfDir).count(): Unit
         val t = (System.nanoTime() - t0) / 1e9
-        clearCaches()
+        graft.Harness.clearCaches(spark)
         t
       }
       println(f"[quicktime] $name%-28s min=${ts.min}%.2f s runs=${ts.map(t => f"$t%.2f").mkString(",")}")

@@ -1,6 +1,9 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{NamedQuery, SparkSpec}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
 /** t20's trainer pinned against a THIRD implementation (the
   * SemDedupRecountSpec pattern): a plain-Scala greedy BPE loop over a
@@ -33,6 +36,45 @@ class BpeTrainSpec extends SparkSpec {
         Some((k, l, r, c))
       }
     }
+  }
+
+  // ---- the declarative K-window-pass encoder (the shape the t20/t21
+  // DuckDB oracles unroll), kept executable here as the trainer's
+  // round-trip reference.
+  private def bpeWindow = Window.partitionBy(col("doc_id")).orderBy(col("seq"))
+
+  /** Adjacency view (occ + next token + dense row index), lineage-cut
+    * per round so the 8-round plan never nests. */
+  private def adjacency(occ: DataFrame): DataFrame =
+    Dedup.lineageCut(spark, occ
+      .withColumn("ntok", lead(col("tok"), 1).over(bpeWindow))
+      .withColumn("rn", row_number().over(bpeWindow)))
+
+  /** One greedy left-to-right pass of the 1-row rule `best(l, r)`:
+    * candidates overlap only as consecutive rn, greedy = even offset
+    * from the chain start. */
+  private def mergePass(adj: DataFrame, best: DataFrame): DataFrame = {
+    val flagged = adj.crossJoin(broadcast(best))
+      .withColumn("cand", col("tok") === col("l") && col("ntok") === col("r"))
+      .withColumn("chain_start", max(when(col("cand") &&
+        !coalesce(lag(col("cand"), 1).over(bpeWindow), lit(false)), col("rn")))
+        .over(bpeWindow))
+      .withColumn("is_m",
+        col("cand") && (col("rn") - col("chain_start")) % 2 === 0)
+      .withColumn("is_d", coalesce(lag(col("is_m"), 1).over(bpeWindow), lit(false)))
+    adjacency(flagged.filter(!col("is_d"))
+      .select(col("doc_id"), col("seq"),
+        when(col("is_m"), concat(col("tok"), col("r"))).otherwise(col("tok")).as("tok")))
+  }
+
+  /** `(doc_id, seq, tok)` occurrences of the trainer's 5% id-sample
+    * encoded under `bests` in rank order, one window pass per rule. */
+  private def applyMerges(dir: String, bests: Seq[DataFrame]): DataFrame = {
+    val occ = graft.tables.Tables.documents(spark, dir)
+      .filter(col("doc_id") % 20 === 0)
+      .filter(col("text").isNotNull && col("text") =!= "")
+      .select(col("doc_id"), posexplode(TextOps.tokens(col("text"))).as(Seq("seq", "tok")))
+    bests.foldLeft(adjacency(occ.repartition(col("doc_id"))))(mergePass)
   }
 
   test("learned merge table == plain-Scala greedy BPE on a planted corpus") {
@@ -70,17 +112,12 @@ class BpeTrainSpec extends SparkSpec {
     // Re-encoding the SAMPLE with the learned rule list must land exactly
     // on the trainer's final occurrence table (the trainer applied those
     // same rules incrementally as it learned them).
-    val (bests, finalAdj) = TextOps.withBpeConstructionConfs(spark) {
-      TextOps.bpeTrainLoop(spark, dir)
-    }
-    val reApplied = TextOps.withBpeConstructionConfs(spark) {
-      TextOps.bpeApplyMerges(spark,
-        TextOps.bpeInitialAdjacency(spark, TextOps.bpeSampleOcc(spark, dir)), bests)
-    }
-    def occSet(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
-      df.select("doc_id", "rn", "tok").collect()
-        .map(r => (r.getLong(0), r.getInt(1) + ":" + r.getString(2))).toSet
-    assert(occSet(reApplied) == occSet(finalAdj),
+    val (bests, finalOcc) = TextOps.bpeTrainLoop(spark, dir)
+    val reApplied = applyMerges(dir, bests)
+    def tokensPerDoc(df: DataFrame): Map[Long, Seq[String]] =
+      df.select("doc_id", "seq", "tok").collect().toSeq.groupBy(_.getLong(0))
+        .view.mapValues(_.sortBy(_.getInt(1)).map(_.getString(2))).toMap
+    assert(tokensPerDoc(reApplied) == tokensPerDoc(finalOcc),
       "apply(t20 merges) does not round-trip the trainer's final occurrence table")
 
     // ---- t21: full-corpus encode == plain-Scala reference application.
@@ -100,42 +137,37 @@ class BpeTrainSpec extends SparkSpec {
     val allDocs = sampled ++ decoy
     val wantBefore = allDocs.map(_._2.split("\\s+").length.toLong).sum
     val wantAfter = allDocs.map(d => referenceApply(d._2.split("\\s+").toSeq).length.toLong).sum
-    // BOTH application paths — the one-pass native encoder (the default)
-    // and the declarative K-window-pass oracle reference — must agree
-    // with the plain-Scala reference AND with each other, byte for byte.
-    // The planted corpus covers the two subtle cases: doc 40's odd
-    // equal-token run (greedy alternation) and doc 60's merge-of-merge.
-    val byMode = Seq("onepass", "passes").map { mode =>
-      spark.conf.set("spark.graft.bpe.apply", mode)
-      try mode -> TextOps.t21BpeApply.fn(spark, dir).collect()
-      finally spark.conf.unset("spark.graft.bpe.apply")
-    }.toMap
-    byMode.foreach { case (mode, t21) =>
-      assert(t21.length == 1 && t21.head.getAs[String]("source") == "s0", s"mode=$mode")
-      assert(t21.head.getAs[Long]("n_docs") == allDocs.length.toLong, s"mode=$mode")
-      assert(t21.head.getAs[Long]("tokens_before") == wantBefore,
-        s"mode=$mode: tokens_before ${t21.head.getAs[Long]("tokens_before")} != $wantBefore")
-      assert(t21.head.getAs[Long]("tokens_after") == wantAfter,
-        s"mode=$mode: tokens_after ${t21.head.getAs[Long]("tokens_after")} != $wantAfter")
-      assert(t21.head.getAs[Long]("merges_applied") == wantBefore - wantAfter, s"mode=$mode")
-      assert(t21.head.getAs[Long]("compression_bp") == wantAfter * 10000 / wantBefore,
-        s"mode=$mode")
+    // the one-pass native encoder must agree with the plain-Scala
+    // reference byte for byte; the planted corpus covers the two subtle
+    // cases: doc 40's odd equal-token run (greedy alternation) and doc
+    // 60's merge-of-merge
+    val t21 = TextOps.t21BpeApply.fn(spark, dir).collect()
+    assert(t21.length == 1 && t21.head.getAs[String]("source") == "s0")
+    assert(t21.head.getAs[Long]("n_docs") == allDocs.length.toLong)
+    assert(t21.head.getAs[Long]("tokens_before") == wantBefore,
+      s"tokens_before ${t21.head.getAs[Long]("tokens_before")} != $wantBefore")
+    assert(t21.head.getAs[Long]("tokens_after") == wantAfter,
+      s"tokens_after ${t21.head.getAs[Long]("tokens_after")} != $wantAfter")
+    assert(t21.head.getAs[Long]("merges_applied") == wantBefore - wantAfter)
+    assert(t21.head.getAs[Long]("compression_bp") == wantAfter * 10000 / wantBefore)
+    // the retired alternatives fail loudly, naming key and value: the
+    // K-pass encoder (t21 reads spark.graft.bpe.apply) and the columnar
+    // lineage cut (t20 cuts on every round); the former defaults still
+    // pass and change nothing
+    def withConf[T](k: String, v: String)(body: => T): T = {
+      spark.conf.set(k, v)
+      try body finally spark.conf.unset(k)
     }
-    assert(byMode("onepass").map(_.toSeq).toSeq == byMode("passes").map(_.toSeq).toSeq,
-      "onepass and passes encoders disagree")
-    // default is the one-pass path (the round-9 flip): an unset conf must
-    // produce the same rows the explicit onepass run did
-    val dflt = TextOps.t21BpeApply.fn(spark, dir).collect()
-    assert(dflt.map(_.toSeq).toSeq == byMode("onepass").map(_.toSeq).toSeq,
-      "default path is not the one-pass encoder")
-    // loud rejection of an unknown mode
-    spark.conf.set("spark.graft.bpe.apply", "bogus")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        TextOps.t21BpeApply.fn(spark, dir).collect()
-      }
-      assert(e.getMessage.contains("spark.graft.bpe.apply"))
-    } finally spark.conf.unset("spark.graft.bpe.apply")
+    def run(q: NamedQuery): Seq[Seq[Any]] = q.fn(spark, dir).collect().map(_.toSeq).toSeq
+    for ((k, v, q) <- Seq(("spark.graft.bpe.apply", "passes", TextOps.t21BpeApply),
+        ("spark.graft.cut.persist", "columnar", TextOps.t20BpeTrain))) {
+      val e = withConf(k, v)(intercept[IllegalArgumentException](run(q)))
+      assert(e.getMessage.contains(k) && e.getMessage.contains(v), e.getMessage)
+    }
+    assert(withConf("spark.graft.bpe.apply", "onepass")(run(TextOps.t21BpeApply)) ==
+      t21.map(_.toSeq).toSeq)
+    val t20 = run(TextOps.t20BpeTrain)
+    assert(withConf("spark.graft.cut.persist", "rdd")(run(TextOps.t20BpeTrain)) == t20)
   }
 
   test("spark.graft.bpe.cache: t20+t21 share one memoized trainer; results unchanged") {

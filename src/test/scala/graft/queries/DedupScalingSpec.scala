@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Gates the committed SCALING.md appendix (produced by
-  * DedupScalingSweep): both curves — dup-graph cache off and on — must be
+  * DedupScalingSweep): the curves — dup-graph cache off and on — must be
   * present for the 1×/2×/4× sf0.1 composition, both growth exponents
   * must be sub-quadratic, and the cached composition must not be slower
   * than the uncached one at the largest size (the cache exists to SHARE
@@ -52,14 +52,17 @@ class DedupScalingSpec extends AnyFunSuite {
       f"cached composition ($on4%.2f s) no longer beats uncached ($off4%.2f s) at 4x")
   }
 
-  // --- regeneration safety: the sweep splices its fenced blocks and ---
+  // --- regeneration safety: the sweep splices its fenced block and ---
   // --- leaves hand-written analysis untouched (it once clobbered it) ---
 
-  test("committed SCALING.md carries both sweep fences") {
-    for (n <- Seq("dedup-tier", "cut-ab"); edge <- Seq("begin", "end"))
-      assert(lines.exists(_.contains(s"<!-- sweep:$n:$edge")),
-        s"fence sweep:$n:$edge missing — the sweep would fall back to a " +
-          "skeleton overwrite and drop the hand-written sections")
+  test("committed SCALING.md carries the sweep's dedup-tier fence") {
+    for (edge <- Seq("begin", "end"))
+      assert(lines.exists(_.contains(s"<!-- sweep:dedup-tier:$edge")),
+        s"fence sweep:dedup-tier:$edge missing — the sweep would refuse to " +
+          "run rather than touch the hand-written sections")
+    // the cut A/B is hand-written evidence now: no fence left to splice
+    assert(!lines.exists(_.contains("<!-- sweep:cut-ab")),
+      "a sweep:cut-ab fence remains, but no sweep owns it")
   }
 
   test("splice replaces only the fenced block") {
@@ -75,5 +78,19 @@ class DedupScalingSpec extends AnyFunSuite {
 
   test("splice returns None when the fence is absent") {
     assert(DedupScalingSweep.splice("no fences here", "dedup-tier", "x").isEmpty)
+  }
+
+  test("an existing file without the fence fails loudly instead of being clobbered") {
+    val e = intercept[IllegalStateException](
+      DedupScalingSweep.updatedDoc(Some("# hand-written analysis only\n"), "numbers"))
+    assert(e.getMessage.contains("sweep:dedup-tier"), e.getMessage)
+    // no file at all → a fresh skeleton carrying the one owned fence
+    val fresh = DedupScalingSweep.updatedDoc(None, "numbers")
+    assert(fresh.contains("numbers") &&
+      DedupScalingSweep.splice(fresh, "dedup-tier", "x").isDefined)
+    // an existing fenced file keeps its prose
+    val doc = "prose\n\n" + DedupScalingSweep.fence("dedup-tier", "old") + "\n\nmore prose\n"
+    val out = DedupScalingSweep.updatedDoc(Some(doc), "new")
+    assert(out.contains("new") && !out.contains("old") && out.contains("more prose"))
   }
 }

@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * beyond linear in the measurement is therefore the engine's own
   * super-linearity, not the fixture's.
   *
-  * Writes the two curves to SCALING.md (gated by DedupScalingSpec) and
-  * exits non-zero if either curve's 1×→4× growth exponent reaches 2.
+  * Writes the curves to SCALING.md (gated by DedupScalingSpec) and
+  * exits non-zero if any curve's 1×→4× growth exponent reaches 2.
   * Run: `sbt "Test/runMain graft.queries.DedupScalingSweep"`. */
 object DedupScalingSweep {
 
@@ -30,13 +30,28 @@ object DedupScalingSweep {
     s"<!-- sweep:$name:begin (regenerated by DedupScalingSweep; hand-edits inside are lost) -->\n" +
       body + s"\n<!-- sweep:$name:end -->"
 
-  /** Replace the named fenced block in `doc`; None if the fence is absent
-    * (caller falls back to writing a fresh skeleton). */
+  /** Replace the named fenced block in `doc`; None if the fence is absent. */
   def splice(doc: String, name: String, body: String): Option[String] = {
     val re = ("(?s)<!-- sweep:" + name + ":begin[^>]*-->.*?<!-- sweep:" + name + ":end -->").r
     re.findFirstIn(doc).map(_ => re.replaceFirstIn(
       doc, java.util.regex.Matcher.quoteReplacement(fence(name, body))))
   }
+
+  /** The SCALING.md text to write.  With no file yet, a minimal skeleton
+    * around the `dedup-tier` block; an existing file gets ONLY that
+    * block replaced, and an existing file without the fence fails
+    * loudly (naming it) rather than being rewritten as a skeleton — the
+    * rest of the document is hand-written evidence. */
+  def updatedDoc(existing: Option[String], tierBlock: String): String =
+    existing match {
+      case None =>
+        "# Dedup-tier wall-time scaling (c1 + d6 + d9 composition)\n\n" +
+          fence("dedup-tier", tierBlock) + "\n"
+      case Some(doc) => splice(doc, "dedup-tier", tierBlock).getOrElse(
+        throw new IllegalStateException("SCALING.md has no <!-- sweep:dedup-tier:begin/end --> " +
+          "fence; restore it around the dedup-tier table instead of letting the sweep " +
+          "overwrite the hand-written sections"))
+    }
 
   def synthesize(spark: SparkSession, baseDir: String, outDir: String, k: Int): Unit = {
     val base = spark.read.parquet(s"$baseDir/documents.parquet")
@@ -58,17 +73,15 @@ object DedupScalingSweep {
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Harness.session(cpus, "spark.sql.session.timeZone" -> "UTC")
     spark.sparkContext.setLogLevel("ERROR")
     def loadAvg(): Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val load0 = loadAvg()
+    val path = java.nio.file.Paths.get("SCALING.md")
+    val existing =
+      if (java.nio.file.Files.exists(path)) Some(java.nio.file.Files.readString(path)) else None
+    updatedDoc(existing, "") // a missing fence fails before the sweep, not after it
 
     val composition = Seq("d6_dup_clusters", "d9_cluster_canonical", "c1_corpus_curation")
     val sizes = Seq(1, 2, 4)
@@ -87,9 +100,7 @@ object DedupScalingSweep {
     def timeComposition(dir: String, confs: Seq[(String, String)]): Double = {
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       val t = (1 to 2).map { _ =>
-        Dedup.clearDupGraphCache()
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        graft.Harness.clearCaches(spark)
         val t0 = System.nanoTime()
         composition.foreach(q => graft.SparkEntry.queries(q)(spark, dir).count(): Unit)
         (System.nanoTime() - t0) / 1e9
@@ -111,32 +122,6 @@ object DedupScalingSweep {
     val results = for ((mode, confs) <- modes; k <- sizes)
       yield (mode, k, timeComposition(dirs(k), confs))
     Dedup.clearDupGraphCache()
-
-    // Lineage-cut persist A/B (round-9 verdict item 1): the cached exact
-    // composition + t20 (the heaviest cut consumers) on the REAL base
-    // corpus under both spark.graft.cut.persist forms, interleaved
-    // min-of-2 so ambient drift hits both arms alike.
-    def timeOne(q: String, confs: Seq[(String, String)]): Double = {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      val t = (1 to 2).map { _ =>
-        Dedup.clearDupGraphCache()
-        TextOps.clearBpeCache() // a memoized trainer would void the t20 arm
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(q)(spark, baseDir).count(): Unit
-        (System.nanoTime() - t0) / 1e9
-      }.min
-      confs.foreach { case (k, _) => spark.conf.unset(k) }
-      t
-    }
-    val cutModes = Seq("rdd", "columnar")
-    val cutAb: Map[(String, String), Double] = (for {
-      rep <- 1 to 2; m <- cutModes; q <- Seq("d6_dup_clusters", "t20_bpe_train")
-    } yield ((m, q, rep), timeOne(q,
-      Seq("spark.graft.cut.persist" -> m, "spark.graft.dedup.pairs" -> "exact"))))
-      .groupBy { case ((m, q, _), _) => (m, q) }
-      .view.mapValues(_.map(_._2).min).toMap
     val load1 = loadAvg()
 
     def wall(mode: String, k: Int): Double =
@@ -145,10 +130,7 @@ object DedupScalingSweep {
       math.log(wall(mode, 4) / wall(mode, 1)) / math.log(4.0)
 
     // SCALING.md also carries hand-written analysis sections; this tool
-    // owns ONLY the two marker-fenced blocks below and splices them into
-    // the existing file (a full-file overwrite here once clobbered the
-    // hand-written half of the document).  Markers absent/file missing →
-    // write a minimal skeleton with both blocks.
+    // owns ONLY the marker-fenced dedup-tier block ([[updatedDoc]]).
     val md = new StringBuilder
     md ++= s"Base corpus: `$baseDir` replicated 1x/2x/4x with per-replica word\n"
     md ++= "remapping (disjoint shingle spaces - dup structure scales exactly\n"
@@ -172,33 +154,8 @@ object DedupScalingSweep {
     md ++= f"- banded:    **${exponent("banded")}%.2f**"
     val tierBlock = md.toString
 
-    val ab = new StringBuilder
-    ab ++= "Interleaved min-of-2 x2 on the real base corpus, exact pair source\n"
-    ab ++= "(the heaviest cut consumers). `rdd` = row-copied execution-RDD\n"
-    ab ++= "persist under a layout-advertising LogicalRDD; `columnar` = a\n"
-    ab ++= "CacheManager-free InMemoryRelation (same weak ContextCleaner\n"
-    ab ++= "reclamation either way). The winner is the library default.\n\n"
-    ab ++= "| query | rdd (s) | columnar (s) |\n|---|---|---|\n"
-    Seq("d6_dup_clusters", "t20_bpe_train").foreach { q =>
-      ab ++= f"| $q | ${cutAb(("rdd", q))}%.2f | ${cutAb(("columnar", q))}%.2f |\n"
-    }
-    val abBlock = ab.toString.stripLineEnd
-
-    val path = java.nio.file.Paths.get("SCALING.md")
-    val existing =
-      if (java.nio.file.Files.exists(path)) Some(java.nio.file.Files.readString(path)) else None
-    val spliced = for {
-      doc <- existing
-      d1 <- splice(doc, "dedup-tier", tierBlock)
-      d2 <- splice(d1, "cut-ab", abBlock)
-    } yield d2
-    val out = spliced.getOrElse(
-      "# Dedup-tier wall-time scaling (c1 + d6 + d9 composition)\n\n" +
-        fence("dedup-tier", tierBlock) +
-        "\n\n## Lineage-cut persist A/B (`spark.graft.cut.persist`)\n\n" +
-        fence("cut-ab", abBlock) + "\n")
-    java.nio.file.Files.writeString(path, out)
-    println(tierBlock); println(); println(abBlock)
+    java.nio.file.Files.writeString(path, updatedDoc(existing, tierBlock))
+    println(tierBlock)
     spark.stop()
     if (modes.exists { case (m, _) => exponent(m) >= 2.0 }) {
       System.err.println("SCALING SWEEP FAILED: growth exponent reached quadratic")

@@ -49,21 +49,20 @@ class DupGraphCacheSpec extends SparkSpec {
       }
       assert(d6Other == d6OtherIso,
         "cached d6 on a second dataset dir differs from its isolated run")
-      // the pair-generation implementation conf is part of the key:
-      // flipping prefixFilter mid-session must build under the new
-      // setting, not silently reuse the plan built under the old one
-      val priorPf = spark.conf.getOption("spark.graft.jaccard.prefixFilter")
-      try {
-        spark.conf.set("spark.graft.jaccard.prefixFilter", "true")
-        val pf = Dedup.clusterLabels(spark, sf())
-        assert(!(pf eq first),
-          "flipped prefixFilter returned the plan built under the old setting")
-        spark.conf.set("spark.graft.jaccard.prefixFilter", "false")
-        assert(!(Dedup.clusterLabels(spark, sf()) eq pf))
-      } finally priorPf match {
-        case Some(v) => spark.conf.set("spark.graft.jaccard.prefixFilter", v)
-        case None    => spark.conf.unset("spark.graft.jaccard.prefixFilter")
+      // the prefix-filter override is retired: input size alone picks the
+      // pair-generation plan, so it is no longer part of the key, and any
+      // value fails loudly — even where the memo already holds a plan
+      for (v <- Seq("true", "false")) {
+        spark.conf.set("spark.graft.jaccard.prefixFilter", v)
+        try for (build <- Seq[() => Any](() => Dedup.clusterLabels(spark, sf()),
+            () => Dedup.dupPairs(spark, sf()),
+            () => TextOps.adaptiveJaccardPairs(spark, sf(), 0.5))) {
+          val e = intercept[IllegalArgumentException](build())
+          assert(e.getMessage.contains("spark.graft.jaccard.prefixFilter") &&
+            e.getMessage.contains(v), e.getMessage)
+        } finally spark.conf.unset("spark.graft.jaccard.prefixFilter")
       }
+      assert(Dedup.clusterLabels(spark, sf()) eq first, "memo lost across the rejection")
       // the CC round count is part of the key: raising it after a fixpoint
       // failure must yield a fresh plan, not the memoized short one
       val priorRounds = spark.conf.getOption("spark.graft.cc.rounds")

@@ -104,11 +104,7 @@ class QueryPacksSpec extends SparkSpec {
       // first materialized under a previous count()) — clear the session
       // caches so the iterative constructions build their relations fresh
       // and every stage names its true creation site
-      spark.catalog.clearCache()
-      TextOps.clearBpeCache()
-      Similarity.clearEmbedCache()
-      Dedup.clearDupGraphCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.Harness.clearCaches(spark)
       iterative.foreach(name => SparkEntry.queries(name)(spark, sf()): Unit)
       Thread.sleep(2000)
       val offLimits = sites.toArray(Array.empty[String]).filterNot(iterativeAllowed)
