@@ -1918,30 +1918,19 @@ object TextOps {
     * reproducible, same rule both engines).  Output: the learned merge
     * table (rank, pair, support) — the artifact a tokenizer ships.
     *
-    * The whole trainer is DECLARATIVE — no driver-side collect anywhere:
-    * each round's argmax is a 1-row relation broadcast back into the
-    * plan, and the merge application is pure running-window arithmetic.
-    * Greedy left-to-right non-overlap (the one subtle BPE rule: in
-    * `a a a` the pair `(a,a)` merges positions 1–2, not 2–3) is resolved
-    * windowed: overlapping candidates only arise in maximal chains of
-    * CONSECUTIVE candidate positions (possible only when left = right),
-    * and the greedy choice is exactly every other chain member — Spark
-    * keeps `(seq − chain_start) even` via one running max; the oracle
-    * keeps odd `row_number` within `seq − rn` islands; both select the
-    * same set (alternate members of each maximal run).
+    * No driver-side collect anywhere: each round's argmax is a 1-row
+    * relation broadcast back into the plan, and the sample is
+    * re-encoded with `graft_bpe_apply` every round (below), so the
+    * only cut is that 1-row argmax.  The kernel resolves greedy
+    * left-to-right non-overlap (in `a a a` the pair `(a,a)` merges
+    * positions 1–2, not 2–3); the oracle replays the rounds as unrolled
+    * window stages ([[bpeStageSql]]: odd `row_number` within `seq − rn`
+    * islands picks the same alternate chain members).
     *
-    * Scale shape: the occurrence relation partitions by doc_id ONCE;
-    * every per-round window (adjacency, candidate flags, chain starts,
-    * re-sequencing) reuses that partitioning with in-partition sorts,
-    * so a round's only data shuffle is the map-side-combined pair-count
-    * aggregate — whose width is the PAIR VOCABULARY, not the corpus.
-    * Round k+1's plan consumes round k's persisted occurrences (the
-    * propagateLabels lineage-cut pattern); K rounds = K tiny shuffles +
-    * K in-place window passes over the sample. */
-  /** The t20 trainer loop on the 5% id-sample: returns the per-round
-    * 1-row argmax relations (`best(l, r, c)`, rank = position + 1) and
-    * the sample's final post-merge `(doc_id, seq, tok)` occurrences
-    * (lazy and uncut: only BpeTrainSpec's round-trip reads them).
+    * Returns the per-round 1-row argmax relations (`best(l, r, c)`,
+    * rank = position + 1) and the sample's final post-merge
+    * `(doc_id, seq, tok)` occurrences (lazy and uncut: only
+    * BpeTrainSpec's round-trip reads them).
     *
     * KERNEL-TRAIN form (r17): round k counts pairs on the sample
     * RE-ENCODED from scratch by the one-pass native

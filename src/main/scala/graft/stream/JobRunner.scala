@@ -74,6 +74,8 @@ object JobRunner {
   private val SourceInitTimeoutMs = 60000L
   private val FileSystemCheckpointManager =
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+  private val FileImplKey = "fs.file.impl"
+  private val FileImplCacheKey = "fs.file.impl.disable.cache"
 
   /** SCALING.md's measured per-stage state-store policy, as code: the
     * standalone verified tiers hold corpus-growing state → RocksDB;
@@ -86,42 +88,54 @@ object JobRunner {
       case _ => None
     }
 
-  /** The checkpoint-file policy, as code: a query whose checkpoint and
-    * output paths are all on the local file system commits through
-    * Spark's `FileSystem`-based manager.  Spark's default (`FileContext`)
-    * manager on a local file system without the Hadoop native library
-    * forks a `readlink` process per rename — on every offset-log,
-    * commit-log, source-log, sink-log and state-store file of every
-    * trigger (SCALING.md "Checkpoint I/O").  The two managers write the
-    * same files (`.crc` sidecars included), so a checkpoint restarts
-    * under either.  A path without a scheme resolves against the
-    * default FS; any non-`file` scheme (hdfs, s3a, …) keeps Spark's
-    * default, and so does a manager the caller set explicitly in
-    * `hadoopConf`.  None = don't touch the session conf. */
+  /** The checkpoint-file policy, as code: the confs a query whose
+    * checkpoint and output paths are all on the local file system
+    * starts under.
+    *  - `spark.sql.streaming.checkpointFileManagerClass` = Spark's
+    *    `FileSystem`-based manager.  Spark's default (`FileContext`)
+    *    manager on a local file system without the Hadoop native
+    *    library forks a `readlink` process per rename — on every
+    *    offset-log, commit-log, source-log, sink-log and state-store
+    *    file of every trigger.
+    *  - `fs.file.impl` = [[NioLocalFileSystem]], which sets file modes
+    *    without the `chmod` fork Hadoop's local file system pays on
+    *    every file and `.crc` sidecar it creates, and
+    *    `fs.file.impl.disable.cache` = true: Hadoop caches file systems
+    *    by scheme and user, not by class, so the session's cached
+    *    default `file` instance would be returned otherwise.
+    * Both write the same files, `.crc` sidecars and modes included, so
+    * a checkpoint restarts under either (SCALING.md "Checkpoint I/O").
+    * A path without a scheme resolves against the default FS; any
+    * non-`file` scheme (hdfs, s3a, …) keeps Spark's defaults, and so
+    * does a manager the caller set explicitly in `hadoopConf`.  A
+    * caller-set `fs.file.impl` is kept too.  Empty = don't touch the
+    * session conf. */
   def checkpointManagerFor(paths: Seq[String],
-      hadoopConf: org.apache.hadoop.conf.Configuration): Option[String] = {
+      hadoopConf: org.apache.hadoop.conf.Configuration): Map[String, String] = {
     def isLocal(p: String): Boolean =
       Option(new org.apache.hadoop.fs.Path(p).toUri.getScheme)
         .orElse(Option(org.apache.hadoop.fs.FileSystem.getDefaultUri(hadoopConf).getScheme))
         .contains("file")
-    if (hadoopConf.get(CheckpointManagerKey) != null || !paths.forall(isLocal)) None
-    else Some(FileSystemCheckpointManager)
+    def callerSet(key: String): Boolean = Option(hadoopConf.get(key)).exists(_.trim.nonEmpty)
+    if (callerSet(CheckpointManagerKey) || !paths.forall(isLocal)) Map.empty
+    else if (callerSet(FileImplKey)) Map(CheckpointManagerKey -> FileSystemCheckpointManager)
+    else Map(CheckpointManagerKey -> FileSystemCheckpointManager,
+      FileImplKey -> classOf[NioLocalFileSystem].getName,
+      FileImplCacheKey -> "true")
   }
 
-  /** Starts one query under the per-query conf policies.  Both confs
+  /** Starts one query under the per-query conf policies.  The confs
     * are snapshot into the query's cloned session (and its checkpoint
-    * and sink logs) at `start()`, so they are set around this one start
-    * and restored in the finally: other queries, and the caller's
-    * session after [[run]], keep the caller's settings.  Not safe
-    * against another thread starting a query on the same session
-    * concurrently.  `paths` are the query's checkpoint and output
-    * locations, for [[checkpointManagerFor]]. */
+    * logs, sink and state stores) at `start()`, so they are set around
+    * this one start and restored in the finally: other queries, and
+    * the caller's session after [[run]], keep the caller's settings.
+    * Not safe against another thread starting a query on the same
+    * session concurrently.  `paths` are the query's checkpoint and
+    * output locations, for [[checkpointManagerFor]]. */
   private[graft] def startQuery(spark: SparkSession, writer: DataStreamWriter[_],
       paths: Seq[String], stateStoreProvider: Option[String] = None): StreamingQuery = {
-    val confs = Seq(
-      CheckpointManagerKey -> checkpointManagerFor(paths, spark.sessionState.newHadoopConf()),
-      StateStoreProviderKey -> stateStoreProvider)
-      .collect { case (k, Some(v)) => k -> v }
+    val confs = checkpointManagerFor(paths, spark.sessionState.newHadoopConf()).toSeq ++
+      stateStoreProvider.map(StateStoreProviderKey -> _)
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {

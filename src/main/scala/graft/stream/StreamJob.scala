@@ -27,6 +27,10 @@ object StreamJob {
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
+      // stream-copy shuffle files: a wide local[*] JVM serializes on
+      // concurrent mmap/munmap otherwise (Harness.session, SCALING.md
+      // "local[32] pathology")
+      .config("spark.file.transferTo", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.streams.addListener(JobRunner.progressListener())

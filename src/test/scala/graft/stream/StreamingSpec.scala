@@ -43,13 +43,52 @@ class StreamingSpec extends SparkSpec {
   private val FileContextManager =
     "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
 
+  /** The confs the checkpoint-file policy adds for a local query's
+    * file system. */
+  private val NioFsConfs = Map("fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
   /** The checkpoint manager a started query's offset log commits
     * through (`fileManager` is protected in Scala, public in bytecode). */
-  private def managerOf(q: StreamingQuery): String = q match {
+  private def fileManagerOf(q: StreamingQuery): AnyRef = q match {
     case w: StreamingQueryWrapper =>
       val log = w.streamingQuery.offsetLog
-      log.getClass.getMethod("fileManager").invoke(log).getClass.getName
+      log.getClass.getMethod("fileManager").invoke(log)
     case other => fail(s"not a wrapped micro-batch query: $other")
+  }
+  private def managerOf(q: StreamingQuery): String = fileManagerOf(q).getClass.getName
+
+  /** The file system a FileSystem-based manager writes through. */
+  private def fileSystemOf(q: StreamingQuery): String = {
+    val fm = fileManagerOf(q)
+    fm.getClass.getMethod("fs").invoke(fm).getClass.getName
+  }
+
+  /** `body`'s result and the `chmod` and `readlink` launches during it
+    * whose command line names a path under one of `dirs`, from an
+    * in-process JFR recording of `jdk.ProcessStart`.  A `true` launched
+    * inside the recording must show up, so an empty answer is not a
+    * recording that saw nothing. */
+  private def fileToolLaunchesUnder[A](dirs: Seq[String])(body: => A): (A, Seq[String]) = {
+    val jfr = Files.createTempFile("graft-launches", ".jfr")
+    val rec = new jdk.jfr.Recording()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.setDestination(jfr)
+      rec.start()
+      val result = try {
+        val a = body
+        new ProcessBuilder("true").start().waitFor()
+        a
+      } finally rec.stop()
+      val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command")).toSeq
+      assert(commands.contains("true"), s"the recording missed a known launch: $commands")
+      val roots = dirs.flatMap(d => Seq(d, new java.io.File(d).getCanonicalPath)).distinct
+      (result, commands.filter { c =>
+        Set("chmod", "readlink")(c.takeWhile(_ != ' ').split('/').last) && roots.exists(c.contains)
+      })
+    } finally { rec.close(); Files.deleteIfExists(jfr) }
   }
 
   test("file source → enrich → json sink, incremental micro-batches, checkpoint recovery") {
@@ -229,16 +268,30 @@ class StreamingSpec extends SparkSpec {
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val before = spark.conf.getOption(providerKey)
     val managerBefore = spark.conf.getOption(ManagerKey)
-    val r = JobRunner.run(spark, FileJsonSource(in),
-      fastCfg(out, cp).copy(withNearDups = true))
-    r.processAllAvailable(); r.stopAll()
+    val fsBefore = NioFsConfs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    // the launch-count guard: no per-file `readlink` (FileContext
+    // renames) and no per-file `chmod` (Hadoop's setPermission) on
+    // anything the queries wrote
+    val (r, forks) = fileToolLaunchesUnder(Seq(cp, out)) {
+      val r = JobRunner.run(spark, FileJsonSource(in),
+        fastCfg(out, cp).copy(withNearDups = true))
+      r.processAllAvailable(); r.stopAll()
+      r
+    }
+    if (forks.nonEmpty)
+      fail(s"${forks.size} chmod/readlink launches on checkpoint or output files, e.g. ${forks.take(3)}")
     assert(spark.conf.getOption(providerKey) == before,
       "run() leaked the per-query provider conf into the session")
     assert(spark.conf.getOption(ManagerKey) == managerBefore,
       "run() leaked the per-query checkpoint manager conf into the session")
-    // local paths: every query commits through the FileSystem-based manager
+    assert(NioFsConfs.keys.map(k => k -> spark.conf.getOption(k)).toMap == fsBefore,
+      "run() leaked the per-query file-system confs into the session")
+    // local paths: every query commits through the FileSystem-based
+    // manager on the java.nio-permission local file system
     assert(r.queries.size == 2 && r.queries.forall(managerOf(_) == FileSystemManager),
       s"queries started on ${r.queries.map(managerOf)}")
+    assert(r.queries.forall(fileSystemOf(_) == classOf[NioLocalFileSystem].getName),
+      s"queries write through ${r.queries.map(fileSystemOf)}")
     val ids = readOut(out)
       .select(xxhash64(col("user"), col("cleaned_text"), col("timestamp")).as("id"))
       .collect().map(_.getLong(0)).sorted
@@ -266,8 +319,9 @@ class StreamingSpec extends SparkSpec {
   test("checkpointManagerFor: local paths select the FileSystem-based manager, remote ones Spark's default") {
     import org.apache.hadoop.conf.Configuration
     val conf = new Configuration()
+    val localConfs = Map(ManagerKey -> FileSystemManager) ++ NioFsConfs
     for (local <- Seq(Seq("/tmp/x"), Seq("file:/tmp/x"), Seq("/tmp/cp", "file:///tmp/out")))
-      assert(JobRunner.checkpointManagerFor(local, conf).contains(FileSystemManager), local)
+      assert(JobRunner.checkpointManagerFor(local, conf) == localConfs, local)
     // a remote scheme in either position keeps Spark's default
     for (remote <- Seq("hdfs://nn:8020/x", "s3a://bucket/x")) {
       assert(JobRunner.checkpointManagerFor(Seq(remote, "/tmp/out"), conf).isEmpty, remote)
@@ -277,11 +331,16 @@ class StreamingSpec extends SparkSpec {
     val hdfsDefault = new Configuration()
     hdfsDefault.set("fs.defaultFS", "hdfs://nn:8020")
     assert(JobRunner.checkpointManagerFor(Seq("/tmp/x"), hdfsDefault).isEmpty)
-    assert(JobRunner.checkpointManagerFor(Seq("file:/tmp/x"), hdfsDefault).contains(FileSystemManager))
+    assert(JobRunner.checkpointManagerFor(Seq("file:/tmp/x"), hdfsDefault) == localConfs)
     // a manager the caller set explicitly is kept
     val explicit = new Configuration()
     explicit.set(ManagerKey, FileContextManager)
     assert(JobRunner.checkpointManagerFor(Seq("/tmp/x"), explicit).isEmpty)
+    // and so is a local file system the caller set explicitly
+    val explicitFs = new Configuration()
+    explicitFs.set("fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem")
+    assert(JobRunner.checkpointManagerFor(Seq("/tmp/x"), explicitFs) ==
+      Map(ManagerKey -> FileSystemManager))
   }
 
   test("a JobRunner checkpoint restarts across checkpoint managers exactly once, both ways") {
@@ -302,6 +361,9 @@ class StreamingSpec extends SparkSpec {
           val want = if (sparkDefault) FileContextManager else FileSystemManager
           assert(r.queries.size == 3 && r.queries.forall(managerOf(_) == want),
             s"queries started on ${r.queries.map(managerOf)}, expected $want")
+          if (!sparkDefault)
+            assert(r.queries.forall(fileSystemOf(_) == classOf[NioLocalFileSystem].getName),
+              s"policy queries write through ${r.queries.map(fileSystemOf)}")
           assert(r.queries.forall(_.exception.isEmpty))
         } finally r.stopAll()
       } finally before match {
@@ -318,6 +380,20 @@ class StreamingSpec extends SparkSpec {
       val users = readOut(out).select("user").collect().map(_.getString(0)).sorted.toSeq
       assert(users == Seq("m1", "m2", "m3"),
         s"first run on Spark's default = $firstSparkDefault: sink holds $users")
+      // every offset, commit and state file either epoch wrote keeps its
+      // .crc sidecar
+      val written = for {
+        q <- Seq(cp, cp + "_windowed", cp + "_neardups")
+        root = java.nio.file.Paths.get(q)
+        f <- Files.walk(root).iterator.asScala.map(_.toFile).toSeq
+        if f.isFile && !f.getName.startsWith(".") &&
+          Set("offsets", "commits", "state")(root.relativize(f.toPath).getName(0).toString)
+      } yield f
+      assert(written.exists(_.getPath.contains(s"_windowed${java.io.File.separator}state")) &&
+        written.exists(_.getPath.contains(s"_neardups${java.io.File.separator}state")),
+        s"no state files found: $written")
+      val bare = written.filterNot(f => new java.io.File(f.getParentFile, s".${f.getName}.crc").isFile)
+      assert(bare.isEmpty, s"first run on Spark's default = $firstSparkDefault: no .crc beside $bare")
     }
   }
 
