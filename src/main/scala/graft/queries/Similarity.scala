@@ -33,76 +33,6 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Embedding dimensionality — a CONTRACT constant, not a measurement:
-    * every oracle CTE walks `range(1, 65)` and [[PqM]]·[[PqD]] = 64. */
-  private val EmbDim = 64
-
-  /** One-row packed image of a `(idCol, cent, cc)` centroid relation for
-    * the map-side [[graft.functions.NearestCentroid]] assignment
-    * (`graft_nearest`): `ids` ascending (unique, so `array_sort` over
-    * `struct(id, …)` is deterministic whatever partitioning produced
-    * `cents`), `flat` = the centroid vectors concatenated in id order,
-    * `ccs` parallel.  ≤ k rows in, ONE row out — the aggregate is the
-    * same tiny job the old broadcast paid; what changes is downstream:
-    * the assignment becomes a pure projection instead of a
-    * crossJoin+groupBy whose exchange re-shuffled the whole corpus
-    * (guide §2.4 — the argmin was already complete map-side). */
-  private def packedCentroids(cents: DataFrame, idCol: String): DataFrame =
-    cents.agg(array_sort(collect_list(struct(
-        col(idCol).cast("int").as("i"), col("cent").as("cent"),
-        col("cc").as("cc")))).as("cs"))
-      .select(
-        transform(col("cs"), c => c.getField("i")).as("ids"),
-        flatten(transform(col("cs"), c => c.getField("cent"))).as("flat"),
-        transform(col("cs"), c => c.getField("cc")).as("ccs"))
-
-  /** [[packedCentroids]] additionally carrying a constant verdict column
-    * (constant across the serving relation's rows by construction —
-    * pickByVerdict cross-joins ONE verdict row onto every parameter row),
-    * so a probe site needs neither a second raw broadcast of the serving
-    * index nor a re-derivation of the 1-row decide subtree (r18: the
-    * re-derivation spelling added ~4 broadcast-build jobs and a duplicate
-    * audit subtree to every serving plan). */
-  private def packedCentroidsWithVerdict(cents: DataFrame, idCol: String,
-      vCol: String): DataFrame =
-    cents.agg(array_sort(collect_list(struct(
-        col(idCol).cast("int").as("i"), col("cent").as("cent"),
-        col("cc").as("cc")))).as("cs"),
-      first(col(vCol)).as(vCol))
-      .select(
-        transform(col("cs"), c => c.getField("i")).as("ids"),
-        flatten(transform(col("cs"), c => c.getField("cent"))).as("flat"),
-        transform(col("cs"), c => c.getField("cc")).as("ccs"),
-        col(vCol))
-
-  /** [[packedCentroids]] per PQ subspace: one packed row per `m`, joined
-    * broadcast on `m` by the per-subspace assignment sites. */
-  private def packedCodebooks(cents: DataFrame): DataFrame =
-    cents.groupBy(col("m")).agg(array_sort(collect_list(struct(
-        col("code").cast("int").as("i"), col("cent").as("cent"),
-        col("cc").as("cc")))).as("cs"))
-      .select(col("m"),
-        transform(col("cs"), c => c.getField("i")).as("ids"),
-        flatten(transform(col("cs"), c => c.getField("cent"))).as("flat"),
-        transform(col("cs"), c => c.getField("cc")).as("ccs"))
-
-  /** The map-side argmin column: `graft_nearest` over a packed centroid
-    * row — `struct(id, d)` minimal under (d, id), arithmetic- and
-    * tie-break-identical to the old `min_by(…, struct(dist, id))`
-    * aggregate form (the kernel's scaladoc proves the equivalence). */
-  private def nearestBest(vec: Column): Column =
-    call_function("graft_nearest", vec, col("ids"), col("flat"), col("ccs"))
-
-  /** The map-side top-`p` probe column: `graft_probe_cells` over a packed
-    * centroid row — `array<struct<id, d>>` ascending under (d, id),
-    * arithmetic- and tie-break-identical to both declarative multi-probe
-    * forms (`slice(array_sort(collect_list(struct(dist, id))), 1, p)` and
-    * `row_number() OVER (ORDER BY dist, id) <= p` — the kernel's scaladoc
-    * proves the equivalences). */
-  private def probeCellsTop(vec: Column, p: Int): Column =
-    call_function("graft_probe_cells", vec, col("ids"), col("flat"),
-      col("ccs"), lit(p))
-
   /** Persisted intermediates registered by the embedding pair/audit
     * builders (the bucketed quantized corpus, d15's two pair relations,
     * s13's shared quantized relation).  These live inside LAZY returned
@@ -425,37 +355,14 @@ object Similarity {
       // 4 consumers (seeds, first assignment, final lists, query side)
       // would otherwise re-scan and re-quantize the corpus 4×; persist
       // MEMORY_AND_DISK (must spill, not OOM — the d3-shingles rule).
-      val e = Tables.embeddings(s, dir)
-        .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-        // quantized vector as array<double> holding exact small integers:
-        // graft_dot then does EXACT integer arithmetic in double registers
-        .withColumn("qv", transform(col("emb"),
-          x => floor(x * QuantScale)).cast("array<double>"))
-        .withColumn("vv", dot(col("qv"), col("qv")))
+      val e = embGridOf(Tables.embeddings(s, dir))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-      // Argmin over the packed broadcast centroid set via the map-side
-      // graft_nearest projection (r17): min over (dist, list_id)
-      // reproduces ORDER BY dist, list_id rank-1 exactly — and because
-      // every dist is an exact integer, the argmin is
-      // partition-order-free.  The old ONE-aggregate form still paid a
-      // corpus-row exchange (groupBy vec_id after the k× fan-out); the
-      // projection pays none.
-      def nearest(points: DataFrame, cents: DataFrame): DataFrame =
-        points.crossJoin(broadcast(packedCentroids(cents, "list_id")))
-          .withColumn("best", nearestBest(col("qv")))
-          .filter(col("best").isNotNull)
-          .select(col("vec_id"), col("best.id").as("list_id"),
-            col("emb"), col("qv"), col("vv"))
       // seeds → assign → integer-mean centroids → re-assign (one k-means
       // step, deterministic at any partitioning)
-      val seeds = e.filter(col("vec_id") < IvfLists)
-        .select(col("vec_id").cast("int").as("list_id"),
-          col("qv").as("cent"), col("vv").as("cc"))
-      val assigned0 = nearest(e, seeds)
-      // exact integer sum / count, floored: centroids stay on the grid
-      val centroids = integerMeanVectors(
-        assigned0.select(col("list_id"), col("qv")), Seq("list_id"), "qv", EmbDim)
+      val seeds = Quantizer.seeds(e, Quantizer.Cells, col("vec_id") < IvfLists)
+      val centroids = Quantizer.update(
+        Quantizer.assign(e, seeds, Quantizer.Cells, "list_id", "qv"),
+        Quantizer.Cells)
         // the centroid relation is IvfLists tiny rows but DERIVING it is
         // a full O(n·k) assignment pass — and BOTH consumers (the final
         // list assignment and the query-side probe) broadcast it, so
@@ -465,20 +372,15 @@ object Similarity {
         // (the vector corpus is tiny); at a real vector count the
         // duplicated pass is the dominant cost of the query.
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val lists = nearest(e, centroids)
+      val lists = Quantizer.assign(e, centroids, Quantizer.Cells,
+        "vec_id", "list_id", "emb")
 
-      // query side: probe the IvfProbe nearest lists by the same metric —
-      // map-side via graft_probe_cells under the SAME packed broadcast the
-      // list assignment rides (r18: the old row_number window paid an
-      // exchange + sort over the query×k cross product, and its raw
-      // centroid broadcast was a second distinct broadcast build; values
-      // and (dist, list_id) tie-break identical — ProbeCellsKernel)
+      // query side: probe the IvfProbe nearest lists by the same metric,
+      // under the same packed broadcast the list assignment rides
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("emb").as("qe"),
           norm(col("emb")).as("qn"), col("qv").as("qqv"))
-      val probed = q.crossJoin(broadcast(packedCentroids(centroids, "list_id")))
-        .withColumn("top", probeCellsTop(col("qqv"), IvfProbe))
-        .filter(col("top").isNotNull)
+      val probed = Quantizer.probe(q, "qqv", centroids, IvfProbe)
         .select(col("q_id"), col("qe"), col("qn"), explode(col("top")).as("t"))
         .select(col("q_id"), col("qe"), col("qn"), col("t.id").as("list_id"))
 
@@ -866,44 +768,24 @@ object Similarity {
     (s, dir) => {
       graft.sentiment.GraftFunctions.register(s)
       import org.apache.spark.sql.expressions.Window
-      val e = Tables.embeddings(s, dir)
-        .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-        .withColumn("qv", transform(col("emb"),
-          x => floor(x * QuantScale)).cast("array<double>"))
+      val e = embGridOf(Tables.embeddings(s, dir))
       // the m-th subvector of every grid vector: (vec_id, m, sv, svv)
       // 4 consumers (seeds, both codebook assignments, the query side)
       // would re-explode the corpus into its PqM subvectors each time;
       // persist MEMORY_AND_DISK (must spill, not OOM).
-      val sub = e
-        .withColumn("m", explode(array((0 until PqM).map(lit): _*)))
-        .withColumn("sv", slice(col("qv"), col("m") * PqD + 1, lit(PqD)))
-        .withColumn("svv", dot(col("sv"), col("sv")))
-        .select(col("vec_id"), col("m"), col("sv"), col("svv"))
+      val sub = Quantizer.subvectors(e)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // per-subspace argmin assignment via the per-m packed map-side
-      // graft_nearest projection (r17: the old min_by aggregate
-      // re-shuffled PqM× corpus rows for an argmin already complete
-      // map-side; values and tie-breaks identical, zero exchanges)
-      def nearestCode(points: DataFrame, cents: DataFrame): DataFrame =
-        points.join(broadcast(packedCodebooks(cents)), Seq("m"))
-          .withColumn("best", nearestBest(col("sv")))
-          .filter(col("best").isNotNull)
-          .select(col("vec_id"), col("m"), col("best.id").as("code"),
-            col("sv"), col("svv"))
-      val seeds = sub.filter(col("vec_id") < PqK)
-        .select(col("m"), col("vec_id").cast("int").as("code"),
-          col("sv").as("cent"), col("svv").as("cc"))
-      val a0 = nearestCode(sub, seeds)
-      // floored-integer-mean update: codebooks stay on the grid
-      val cents1 = integerMeanVectors(
-        a0.select(col("m"), col("code"), col("sv")), Seq("m", "code"), "sv", PqD)
+      val seeds = Quantizer.seeds(sub, Quantizer.Codebooks, col("vec_id") < PqK)
+      val cents1 = Quantizer.update(
+        Quantizer.assign(sub, seeds, Quantizer.Codebooks, "m", "code", "sv"),
+        Quantizer.Codebooks)
         // tiny (PqM·PqK rows) but derived by a full per-subspace
         // assignment pass; both consumers (the corpus coding and the
         // query-side ADC table) broadcast it — persist so the codebook
         // trains once, not twice (the s4-centroids fix, same shape).
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val codes = nearestCode(sub, cents1)
-        .select(col("vec_id"), col("m"), col("code"))
+      val codes = Quantizer.assign(sub, cents1, Quantizer.Codebooks,
+        "vec_id", "m", "code")
       // ADC: per-query distance table over all (m, code) centroids
       val qsub = sub.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("m"),
@@ -1109,40 +991,19 @@ object Similarity {
     // persist MEMORY_AND_DISK (must spill, not OOM — the d3-shingles
     // rule).  The persisted subtree is scan+transform only (no joins),
     // so no broadcast ever hides inside a cached entry.
-    val e = trackedPersist(corpus.toDF("vec_id", "emb", "nrm")
-      .withColumn("qv", transform(col("emb"),
-        x => floor(x * QuantScale)).cast("array<double>"))
-      .withColumn("vv", dot(col("qv"), col("qv"))))
-    val seeds = e.filter(col("vec_id") % seedStride === 0 &&
-        col("vec_id") < cells * seedStride)
-      .select((col("vec_id") / seedStride).cast("int").as("list_id"),
-        col("qv").as("cent"), col("vv").as("cc"))
-    // the standard FAISS IVF metric v·v − 2v·c + c·c — no norms, no
-    // division, exact integers throughout (the s4 argmin is therefore
-    // partition-order-free)
-    // one k-means refinement round: argmin-assign to the current
-    // centroids, then the floored-integer-mean update (centroids stay on
-    // the grid — s4's form).  `kmeansSteps` rounds run at construction;
-    // each embeds one more copy of the (tiny) centroid subtree, so the
-    // sweep range {1, 2} costs plan size, never a lineage explosion.
-    def refine(cents: DataFrame): DataFrame =
-      integerMeanVectors(
-        e.crossJoin(broadcast(packedCentroids(cents, "list_id")))
-          .withColumn("best", nearestBest(col("qv")))
-          .filter(col("best").isNotNull)
-          .select(col("best.id").as("list_id"), col("qv")),
-        Seq("list_id"), "qv", EmbDim)
-    val centroids =
-      (1 to kmeansSteps).foldLeft(seeds.select(col("list_id"),
-        col("cent"), col("cc")))((c, _) => refine(c))
-    // top-`probe` cells per vector in ONE aggregate: all `cells` distance
-    // rows of a vector sit in one partition (broadcast cross join), so the
-    // partial collect_list collapses them map-side to a single
-    // `cells`-bounded struct array per vector before the shuffle;
-    // array_sort orders by (dist, list_id) — the exact-integer total
-    // order, so the cut is deterministic at any partitioning.  (The
-    // array is bounded by the CELL COUNT, never the corpus; a deployment
-    // with k ~ 10⁵ cells shards the centroid set instead.)
+    val e = trackedPersist(Quantizer.grid(corpus.toDF("vec_id", "emb", "nrm")))
+    // `kmeansSteps` assign + update rounds run at construction; each
+    // embeds one more copy of the (tiny) centroid subtree, so the sweep
+    // range {1, 2} costs plan size, never a lineage explosion.
+    val centroids = (1 to kmeansSteps).foldLeft(
+      Quantizer.strideSeeds(e, Quantizer.Cells, cells, seedStride))((c, _) =>
+      Quantizer.update(Quantizer.assign(e, c, Quantizer.Cells, "list_id", "qv"),
+        Quantizer.Cells))
+    // top-`probe` cells per vector, ordered by (dist, list_id) — the
+    // exact-integer total order, so the cut is deterministic at any
+    // partitioning.  (The packed row is bounded by the CELL COUNT, never
+    // the corpus; a deployment with k ~ 10⁵ cells shards the centroid
+    // set instead.)
     //
     // BOUNDARY GATE on the runner-up assignments: a vector keeps its
     // p-th cell (p ≥ 2) only when that cell's distance is within 25% of
@@ -1156,22 +1017,12 @@ object Similarity {
     // planted-cluster corpus: 44% of all-pairs without the gate, exactly
     // the linear within-cell volume with it, at IDENTICAL measured
     // recall on the driver corpus — d15's numbers are unchanged).
-    // r18: the top-`probe` cut rides the map-side graft_probe_cells
-    // kernel under the same packed broadcast the refine passes use —
-    // the old groupBy(vec_id) collect_list aggregate re-shuffled one
-    // `cells`-struct buffer per corpus vector to finish a cut already
-    // complete map-side (guide §2.4; values and (dist, list_id)
-    // tie-break identical — ProbeCellsKernel scaladoc).  Empty centroid
-    // relation → packed empty arrays → kernel null → filtered: the old
-    // zero-rows shape.
     // persisted: `am` feeds BOTH sides of the cell self-join below, and a
     // kernel projection (unlike the old groupBy form) has no exchange for
     // ReuseExchange to share — without the persist each join side re-runs
     // the assignment pass
     val am = trackedPersist(
-      e.crossJoin(broadcast(packedCentroids(centroids, "list_id")))
-      .withColumn("top", probeCellsTop(col("qv"), probe))
-      .filter(col("top").isNotNull)
+      Quantizer.probe(e, "qv", centroids, probe)
       .select(col("vec_id"), col("top")(0).getField("d").as("dbest"),
         posexplode(col("top")).as(Seq("pos", "t")))
       .filter(col("pos") === 0 ||
@@ -1582,7 +1433,7 @@ object Similarity {
     * coordinate, and similarity test replays exactly in DuckDB.
     *
     * Scale shape: centroids are broadcast (k rows) — the corpus is never
-    * shuffled for assignment (one map-side argmin aggregate per stage);
+    * shuffled for assignment ([[Quantizer.assign]], zero exchanges);
     * the pair stage shuffles once, on `list_id`, and compares Θ(n·c̄)
     * pairs where c̄ is mean cluster size — at 100 TB, k grows with n to
     * hold c̄ constant (the paper's cost model), and the vectors riding
@@ -1599,35 +1450,19 @@ object Similarity {
     "d11_semantic_dedup",
     (s, dir) => {
       graft.sentiment.GraftFunctions.register(s)
-      val e = Tables.embeddings(s, dir)
-        .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-        .withColumn("qv", transform(col("emb"),
-          x => floor(x * QuantScale)).cast("array<double>"))
-        .withColumn("vv", dot(col("qv"), col("qv")))
+      val e = embGridOf(Tables.embeddings(s, dir))
         .select(col("vec_id"), col("qv"), col("vv"))
-
-      // s4's argmin plus the winning distance (the prune rule needs it)
-      // — the map-side packed graft_nearest projection (r17): exact
-      // integer dists make the argmin partition-order-free, and the
-      // projection pays no corpus exchange at all.
-      def nearestWithDist(points: DataFrame, cents: DataFrame): DataFrame =
-        points.crossJoin(broadcast(packedCentroids(cents, "list_id")))
-          .withColumn("best", nearestBest(col("qv")))
-          .filter(col("best").isNotNull)
-          .select(col("vec_id"), col("best.id").as("list_id"),
-            col("best.d").as("dist"), col("qv"), col("vv"))
-
-      val seeds = e.filter(col("vec_id") < IvfLists)
-        .select(col("vec_id").cast("int").as("list_id"),
-          col("qv").as("cent"), col("vv").as("cc"))
-      val centroids = integerMeanVectors(
-        nearestWithDist(e, seeds).select(col("list_id"), col("qv")),
-        Seq("list_id"), "qv", EmbDim)
-      // 3 consumers (both pair sides + the final kept-join) would each
-      // re-derive the whole k-means assignment — including the centroid
-      // training subtree — without a persist (the s4-centroids fix);
-      // MEMORY_AND_DISK so the labeled corpus spills rather than OOMs.
-      val m = nearestWithDist(e, centroids)
+      val seeds = Quantizer.seeds(e, Quantizer.Cells, col("vec_id") < IvfLists)
+      val centroids = Quantizer.update(
+        Quantizer.assign(e, seeds, Quantizer.Cells, "list_id", "qv"),
+        Quantizer.Cells)
+      // s4's assignment plus the winning distance (the prune rule needs
+      // it).  3 consumers (both pair sides + the final kept-join) would
+      // each re-derive the whole k-means assignment — including the
+      // centroid training subtree — without a persist (the s4-centroids
+      // fix); MEMORY_AND_DISK so the labeled corpus spills rather than OOMs.
+      val m = Quantizer.assign(e, centroids, Quantizer.Cells,
+        "vec_id", "list_id", "dist", "qv", "vv")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
       // ONE shuffle on list_id; pairs never leave their cluster.
@@ -1996,12 +1831,24 @@ object Similarity {
     * ≲ 2³⁵ at sf0.1, cross-multiplied ≲ 2⁴⁶ — int64-safe with orders of
     * margin; a 10⁹-vector deployment promotes the cross-products to
     * decimal(38) (the a12 regime note).  Scale shape: seeds and
-    * centroids broadcast; ONE map-side argmin aggregate per assignment
-    * (s4's shape); the report is a k-row aggregate joined to a 1-row
+    * centroids broadcast; every assignment a map-side
+    * [[Quantizer.assign]] projection; the report is a k-row aggregate joined to a 1-row
     * total by the d13 constant-side broadcast. */
   /** The incoming-slice predicate shared by s13 and d14 (the "today's
     * crawl" convention). */
   private[graft] val s13IsNew: Column => Column = c => c % 10 === 7
+
+  /** Per-`key` archive/incoming occupancy and integer distance mass of an
+    * assignment `(vec_id, key, dist)` — the staleness split of s13, s14
+    * and both c13 legs: `(key, n_arch, n_inc, <mass>_arch, <mass>_inc)`. */
+  private def archIncSplit(assigned: DataFrame, key: String, mass: String): DataFrame = {
+    val isNew = s13IsNew(col("vec_id"))
+    assigned.groupBy(col(key)).agg(
+      sum(when(!isNew, 1L).otherwise(0L)).as("n_arch"),
+      sum(when(isNew, 1L).otherwise(0L)).as("n_inc"),
+      sum(when(!isNew, col("dist")).otherwise(0.0)).cast("long").as(s"${mass}_arch"),
+      sum(when(isNew, col("dist")).otherwise(0.0)).cast("long").as(s"${mass}_inc"))
+  }
 
   /** Session memo for the s13/s14 staleness builders' shared relations
     * (quantized corpus, subvector explode, trained centroids/codebooks),
@@ -2042,28 +1889,9 @@ object Similarity {
   private def s13Quantized(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "s13Quantized") {
       graft.sentiment.GraftFunctions.register(s)
-      trackedPersist(Tables.embeddings(s, dir)
-        .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-        .withColumn("qv", transform(col("emb"),
-          x => floor(x * QuantScale)).cast("array<double>"))
-        .withColumn("vv", dot(col("qv"), col("qv")))
+      trackedPersist(embGridOf(Tables.embeddings(s, dir))
         .select(col("vec_id"), col("qv"), col("vv")))
     }
-
-  /** One-sided nearest-trained-centroid assignment (s13's argmin) —
-    * map-side via the packed `graft_nearest` projection (r17): the old
-    * crossJoin+groupBy(vec_id) form re-shuffled one corpus row per
-    * vector (qv payload included) to finish an argmin its own map task
-    * had already completed.  Values and tie-breaks identical
-    * ([[nearestBest]]); an empty `cents` still yields zero rows (the
-    * packed row's empty arrays make the kernel return null, filtered
-    * here).  Zero exchanges. */
-  private def s13Nearest(points: DataFrame, cents: DataFrame): DataFrame =
-    points.crossJoin(broadcast(packedCentroids(cents, "list_id")))
-      .withColumn("best", nearestBest(col("qv")))
-      .filter(col("best").isNotNull)
-      .select(col("vec_id"), col("best.id").as("list_id"),
-        col("best.d").as("dist"), col("qv"))
 
   /** s13's ARCHIVE-trained centroids over the quantized corpus `e`:
     * 10 archive seeds (ids 0..10 minus the incoming id 7 — cells keep
@@ -2072,10 +1900,9 @@ object Similarity {
     * influences the index — the staleness statistic depends on it. */
   private def s13Centroids(e: DataFrame): DataFrame = {
     val archive = e.filter(!s13IsNew(col("vec_id")))
-    val seeds = archive.filter(col("vec_id") <= IvfLists)
-      .select(col("vec_id").cast("int").as("list_id"),
-        col("qv").as("cent"), col("vv").as("cc"))
-    integerMeanCentroids(s13Nearest(archive, seeds))
+    val seeds = Quantizer.seeds(archive, Quantizer.Cells, col("vec_id") <= IvfLists)
+    Quantizer.update(Quantizer.assign(archive, seeds, Quantizer.Cells, "list_id", "qv"),
+      Quantizer.Cells)
   }
 
   /** The trained (stale, archive-only) index as a memoized persisted
@@ -2085,40 +1912,6 @@ object Similarity {
   private def s13TrainedCentroids(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "s13TrainedCentroids")(
       trackedPersist(s13Centroids(s13Quantized(s, dir))))
-
-  /** One floored-integer-mean k-means update from an assignment
-    * `(list_id, qv)` — THE update step, shared by s13's archive training
-    * pass and s15's warm-start refresh (the retrain must apply the exact
-    * step the original training applied, or the two indexes differ by
-    * recipe instead of by data). */
-  private def integerMeanCentroids(assigned: DataFrame): DataFrame =
-    integerMeanVectors(assigned, Seq("list_id"), "qv", EmbDim)
-
-  /** ONE-exchange floored-integer-mean k-means update over a keyed
-    * assignment: the native [[graft.functions.VecSumAgg]] element-wise
-    * vector sum + a count per key, the mean array then one `transform`
-    * over the ≤ k result rows — value-identical to the old posexplode →
-    * groupBy(key, pos) → groupBy(key) collect_list form
-    * (`floor(sum/count)` per dimension over exact grid integers,
-    * order-free), but ONE exchange instead of two and no dim× row
-    * blow-up feeding the first shuffle (guide §2.3: aggregate before
-    * you shuffle — partial aggregation ships one ≤ dim-double buffer
-    * per key per map task instead of dim× corpus rows).  Kept as ONE
-    * plan expression deliberately: the `dim` separate `sum(vec[i])`
-    * spelling of the same aggregate measurably REGRESSED the
-    * composition queries by inflating Catalyst time across the shared
-    * audit subtrees' many plan copies (see VecSumAgg's scaladoc).
-    * `dim` documents the contract dimensionality; the aggregate itself
-    * is length-driven and fails loudly on ragged groups. */
-  private def integerMeanVectors(assigned: DataFrame, keys: Seq[String],
-      vecCol: String, dim: Int): DataFrame =
-    assigned.groupBy(keys.map(col): _*)
-      .agg(call_function("graft_vec_sum", col(vecCol)).as("_sv"),
-        count(lit(1)).as("_n"))
-      .select(keys.map(col) :+
-        transform(col("_sv"),
-          x => floor(x / col("_n")).cast("double")).as("cent"): _*)
-      .withColumn("cc", dot(col("cent"), col("cent")))
 
   /** s13's trained index as a DRIVER-SIDE value — how a production
     * consumer loads a stored IVF index (10 cells × 64 dims, not a
@@ -2135,7 +1928,8 @@ object Similarity {
     * index story), which is exactly how the live twin consumes it. */
   def s13ArchiveCellStats(s: SparkSession, dir: String): DataFrame = {
     val e = s13Quantized(s, dir)
-    s13Nearest(e.filter(!s13IsNew(col("vec_id"))), s13TrainedCentroids(s, dir))
+    Quantizer.assign(e.filter(!s13IsNew(col("vec_id"))), s13TrainedCentroids(s, dir),
+        Quantizer.Cells, "list_id", "dist")
       .groupBy(col("list_id"))
       .agg(count(lit(1)).as("n_arch"),
         sum(col("dist")).cast("long").as("d_arch"))
@@ -2185,18 +1979,9 @@ object Similarity {
     "s13_index_staleness",
     (s, dir) => {
       graft.sentiment.GraftFunctions.register(s)
-      val isNew = s13IsNew
-      val e = s13Quantized(s, dir)
-      val centroids = s13TrainedCentroids(s, dir)
-      val m = s13Nearest(e, centroids)
-      val per = m.groupBy(col("list_id"))
-        .agg(
-          sum(when(!isNew(col("vec_id")), 1L).otherwise(0L)).as("n_arch"),
-          sum(when(isNew(col("vec_id")), 1L).otherwise(0L)).as("n_inc"),
-          sum(when(!isNew(col("vec_id")), col("dist")).otherwise(0.0))
-            .cast("long").as("d_arch"),
-          sum(when(isNew(col("vec_id")), col("dist")).otherwise(0.0))
-            .cast("long").as("d_inc"))
+      val per = archIncSplit(Quantizer.assign(s13Quantized(s, dir),
+        s13TrainedCentroids(s, dir), Quantizer.Cells, "vec_id", "list_id", "dist"),
+        "list_id", "d")
       val tot = per.agg(sum(col("n_arch")).as("t_arch"), sum(col("n_inc")).as("t_inc"))
       per.crossJoin(broadcast(tot))
         .select(col("list_id"), col("n_arch"), col("n_inc"),
@@ -2234,14 +2019,15 @@ object Similarity {
     * slice's fresh argmin — d14's stored-index story again. */
   private def s15StaleAssignment(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "s15StaleAssignment")(
-      trackedPersist(s13Nearest(s13Quantized(s, dir), s13TrainedCentroids(s, dir))))
+      trackedPersist(Quantizer.assign(s13Quantized(s, dir), s13TrainedCentroids(s, dir),
+        Quantizer.Cells, "vec_id", "list_id", "dist", "qv")))
 
   /** IVF warm-start REFRESH — the "what would retraining buy" companion
     * to s13's "how stale is it": start from the STORED (archive-trained,
     * stale) centroids, apply ONE floored-integer-mean k-means update over
     * the FULL corpus (archive + incoming — warm start: no re-seeding; the
     * update is the exact step the original training applied,
-    * [[integerMeanCentroids]], or the two indexes would differ by recipe
+    * [[Quantizer.update]], or the two indexes would differ by recipe
     * instead of by data), and report per cell what the refresh delivers:
     *
     *   n_before / n_after   full-corpus occupancy under stale vs refreshed
@@ -2271,60 +2057,58 @@ object Similarity {
   private[queries] def s15RefreshedCentroids(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "s15RefreshedCentroids") {
       graft.sentiment.GraftFunctions.register(s)
-      val m = s15StaleAssignment(s, dir)
-      val upd = integerMeanCentroids(m.select(col("list_id"), col("qv")))
-      s13TrainedCentroids(s, dir)
-        .select(col("list_id"), col("cent").as("cent_old"), col("cc").as("cc_old"))
-        .join(broadcast(upd.select(col("list_id"),
-          col("cent").as("cent_new"), col("cc").as("cc_new"))),
-          Seq("list_id"), "left")
-        .select(col("list_id"),
-          coalesce(col("cent_new"), col("cent_old")).as("cent"),
-          coalesce(col("cc_new"), col("cc_old")).as("cc"),
-          col("cent_old"), col("cc_old"))
+      Quantizer.warmUpdate(s13TrainedCentroids(s, dir),
+        s15StaleAssignment(s, dir), Quantizer.Cells)
     }
 
   private[queries] def s15RefreshReport(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "s15RefreshReport") {
       graft.sentiment.GraftFunctions.register(s)
-      val e = s13Quantized(s, dir)
-      val m = s15StaleAssignment(s, dir)
       val refreshed = s15RefreshedCentroids(s, dir)
-      val m2 = s13Nearest(e, refreshed.select(col("list_id"), col("cent"), col("cc")))
-      // before/after stats in ONE aggregate over the tagged union (r18):
-      // the two-relation form paid two exchanges, two broadcast builds
-      // and two joins to land four columns next to each other.  Exact
-      // equivalence: the dist values are exact integers-in-double, so
-      // conditional sums with 0.0 padding are bit-identical to the
-      // per-relation sums, and a cell absent from one side reads 0 from
-      // the conditional sum exactly as the old left-join+coalesce did —
-      // except a cell with NO rows on either side, which neither form
-      // emits (left join then coalesced it; the group simply doesn't
-      // exist here either way because the union has no row to group).
-      val ba = m.select(col("list_id"), col("dist"), lit(true).as("is_b"))
-        .unionByName(m2.select(col("list_id"), col("dist"), lit(false).as("is_b")))
-        .groupBy(col("list_id"))
-        .agg(
-          sum(when(col("is_b"), 1L).otherwise(0L)).as("n_before"),
-          sum(when(!col("is_b"), 1L).otherwise(0L)).as("n_after"),
-          sum(when(col("is_b"), col("dist")).otherwise(0.0))
-            .cast("long").as("d_before"),
-          sum(when(!col("is_b"), col("dist")).otherwise(0.0))
-            .cast("long").as("d_after"))
-      val report = refreshed
-        .withColumn("disp",
-          (col("cc_old") - lit(2) * dot(col("cent_old"), col("cent")) + col("cc"))
-            .cast("long"))
-        .join(broadcast(ba), Seq("list_id"), "left")
-        .select(col("list_id"),
-          coalesce(col("n_before"), lit(0L)).as("n_before"),
-          coalesce(col("n_after"), lit(0L)).as("n_after"),
-          col("disp"),
-          coalesce(col("d_before"), lit(0L)).as("d_before"),
-          coalesce(col("d_after"), lit(0L)).as("d_after"))
-        .orderBy(col("list_id"))
-      trackedPersist(report)
+      refreshReport(refreshed, s15StaleAssignment(s, dir),
+        Quantizer.assign(s13Quantized(s, dir), refreshed, Quantizer.Cells, "list_id", "dist"),
+        Quantizer.Cells, "d")
     }
+
+  /** The per-centroid report of a warm-start refresh: `refreshed` is a
+    * [[Quantizer.warmUpdate]] relation, `before`/`after` the assignments
+    * `(keys…, dist)` under its stale and refreshed centroids.  Returns
+    * `(keys…, n_before, n_after, disp, <mass>_before, <mass>_after)`,
+    * ordered and persisted.
+    *
+    * Before/after stats come from ONE aggregate over the tagged union
+    * (r18): the two-relation form paid two exchanges, two broadcast
+    * builds and two joins to land four columns next to each other.  The
+    * dist values are exact integers-in-double, so conditional sums with
+    * 0.0 padding are bit-identical to per-relation sums, and a centroid
+    * absent from one side reads 0 exactly as a left-join+coalesce would;
+    * a centroid with no rows on either side has no group either way. */
+  private def refreshReport(refreshed: DataFrame, before: DataFrame,
+      after: DataFrame, sp: Quantizer.Space, mass: String): DataFrame = {
+    val keys = (sp.by :+ sp.id).map(col)
+    val ba = before.select(keys ++ Seq(col("dist"), lit(true).as("is_b")): _*)
+      .unionByName(after.select(keys ++ Seq(col("dist"), lit(false).as("is_b")): _*))
+      .groupBy(keys: _*)
+      .agg(
+        sum(when(col("is_b"), 1L).otherwise(0L)).as("n_before"),
+        sum(when(!col("is_b"), 1L).otherwise(0L)).as("n_after"),
+        sum(when(col("is_b"), col("dist")).otherwise(0.0))
+          .cast("long").as(s"${mass}_before"),
+        sum(when(!col("is_b"), col("dist")).otherwise(0.0))
+          .cast("long").as(s"${mass}_after"))
+    trackedPersist(refreshed
+      .withColumn("disp",
+        (col("cc_old") - lit(2) * dot(col("cent_old"), col("cent")) + col("cc"))
+          .cast("long"))
+      .join(broadcast(ba), sp.by :+ sp.id, "left")
+      .select(keys ++ Seq(
+        coalesce(col("n_before"), lit(0L)).as("n_before"),
+        coalesce(col("n_after"), lit(0L)).as("n_after"),
+        col("disp"),
+        coalesce(col(s"${mass}_before"), lit(0L)).as(s"${mass}_before"),
+        coalesce(col(s"${mass}_after"), lit(0L)).as(s"${mass}_after")): _*)
+      .orderBy(keys: _*))
+  }
 
   /** The s15 warm-start-refresh CTE chain appended to [[s13OracleCtes]]:
     * one integer-mean update from the full-corpus stale assignment `m`
@@ -2404,8 +2188,8 @@ object Similarity {
     * int64-safe with margin (the a12/decimal(38) regime note applies
     * beyond ~10⁸ vectors).  Scale shape: the subvector explode is the
     * one corpus-sized relation (persisted — s7's rule), codebooks are
-    * PqM·PqK rows broadcast everywhere, assignments are ONE map-side
-    * argmin aggregate per pass, the report is a PqM-row aggregate. */
+    * PqM·PqK rows broadcast everywhere, assignments are map-side
+    * [[Quantizer.assign]] projections, the report is a PqM-row aggregate. */
   /** s14's persisted per-subspace subvector relation over `embeddings`:
     * `(vec_id, m, sv, svv)` on the integer grid (s7's explode).
     * Memoized per (session, dir) — the batch audit, the codebook export
@@ -2413,30 +2197,10 @@ object Similarity {
   private def s14Subvectors(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "s14Subvectors") {
       graft.sentiment.GraftFunctions.register(s)
-      // derived from the memoized s13 quantized relation (r17): the two
-      // staleness families used to scan + re-quantize `embeddings`
-      // independently — the qv derivation is character-identical, so
-      // slicing the shared persisted relation keeps every value and
-      // drops one full corpus scan per composed session
-      trackedPersist(s13Quantized(s, dir)
-        .withColumn("m", explode(array((0 until PqM).map(lit): _*)))
-        .withColumn("sv", slice(col("qv"), col("m") * PqD + 1, lit(PqD)))
-        .withColumn("svv", dot(col("sv"), col("sv")))
-        .select(col("vec_id"), col("m"), col("sv"), col("svv")))
+      // derived from the memoized s13 quantized relation: both staleness
+      // families share one corpus scan per composed session
+      trackedPersist(Quantizer.subvectors(s13Quantized(s, dir)))
     }
-
-  /** Per-subspace argmin assignment against a codebook relation,
-    * carrying the quantization error (s14's form of s7's nearestCode) —
-    * map-side via the per-m packed `graft_nearest` projection (r17: the
-    * old groupBy(vec_id, m) re-shuffled PqM× corpus rows, sv payloads
-    * included, for an argmin already complete map-side; values and
-    * tie-breaks identical, zero exchanges). */
-  private def s14Assign(points: DataFrame, cents: DataFrame): DataFrame =
-    points.join(broadcast(packedCodebooks(cents)), Seq("m"))
-      .withColumn("best", nearestBest(col("sv")))
-      .filter(col("best").isNotNull)
-      .select(col("vec_id"), col("m"), col("best.id").as("code"),
-        col("best.d").as("dist"), col("sv"))
 
   /** s14's ARCHIVE-trained per-subspace codebooks: seeds = the archive
     * subvectors with vec_id < PqK, one floored-integer-mean k-means
@@ -2444,11 +2208,9 @@ object Similarity {
     * influences the codebooks; the staleness statistic depends on it). */
   private def s14Codebooks(sub: DataFrame): DataFrame = {
     val asub = sub.filter(!s13IsNew(col("vec_id")))
-    val seeds = asub.filter(col("vec_id") < PqK)
-      .select(col("m"), col("vec_id").cast("int").as("code"),
-        col("sv").as("cent"), col("svv").as("cc"))
-    integerMeanVectors(s14Assign(asub, seeds)
-      .select(col("m"), col("code"), col("sv")), Seq("m", "code"), "sv", PqD)
+    val seeds = Quantizer.seeds(asub, Quantizer.Codebooks, col("vec_id") < PqK)
+    Quantizer.update(Quantizer.assign(asub, seeds, Quantizer.Codebooks, "m", "code", "sv"),
+      Quantizer.Codebooks)
   }
 
   /** The trained (stale, archive-only) codebooks as a memoized persisted
@@ -2473,7 +2235,8 @@ object Similarity {
     * maintained with the index at scale, consumed by the live twin. */
   def s14ArchiveSubspaceStats(s: SparkSession, dir: String): DataFrame = {
     val sub = s14Subvectors(s, dir)
-    s14Assign(sub.filter(!s13IsNew(col("vec_id"))), s14TrainedCodebooks(s, dir))
+    Quantizer.assign(sub.filter(!s13IsNew(col("vec_id"))), s14TrainedCodebooks(s, dir),
+        Quantizer.Codebooks, "m", "dist")
       .groupBy(col("m"))
       .agg(count(lit(1)).as("n_arch"),
         sum(col("dist")).cast("long").as("err_arch"))
@@ -2559,18 +2322,8 @@ object Similarity {
     "s14_pq_staleness",
     (s, dir) => {
       graft.sentiment.GraftFunctions.register(s)
-      val isNew = s13IsNew
-      val sub = s14Subvectors(s, dir)
-      val cents1 = s14TrainedCodebooks(s, dir)
-      s14Assign(sub, cents1)
-        .groupBy(col("m"))
-        .agg(
-          sum(when(!isNew(col("vec_id")), 1L).otherwise(0L)).as("n_arch"),
-          sum(when(isNew(col("vec_id")), 1L).otherwise(0L)).as("n_inc"),
-          sum(when(!isNew(col("vec_id")), col("dist")).otherwise(0.0))
-            .cast("long").as("err_arch"),
-          sum(when(isNew(col("vec_id")), col("dist")).otherwise(0.0))
-            .cast("long").as("err_inc"))
+      archIncSplit(Quantizer.assign(s14Subvectors(s, dir), s14TrainedCodebooks(s, dir),
+          Quantizer.Codebooks, "vec_id", "m", "dist"), "m", "err")
         .select(col("m"), col("n_arch"), col("n_inc"),
           col("err_arch"), col("err_inc"),
           (col("err_inc") * col("n_arch") - col("err_arch") * col("n_inc"))
@@ -2607,16 +2360,7 @@ object Similarity {
     *                 warm-start update removes, in bp */
   private[queries] def ivfRefreshLeg(s: SparkSession, dir: String): DataFrame = {
     graft.sentiment.GraftFunctions.register(s)
-    val isNew = s13IsNew
-    val per = s15StaleAssignment(s, dir)
-      .groupBy(col("list_id"))
-      .agg(
-        sum(when(!isNew(col("vec_id")), 1L).otherwise(0L)).as("n_arch"),
-        sum(when(isNew(col("vec_id")), 1L).otherwise(0L)).as("n_inc"),
-        sum(when(!isNew(col("vec_id")), col("dist")).otherwise(0.0))
-          .cast("long").as("d_arch"),
-        sum(when(isNew(col("vec_id")), col("dist")).otherwise(0.0))
-          .cast("long").as("d_inc"))
+    val per = archIncSplit(s15StaleAssignment(s, dir), "list_id", "d")
     RefreshDecision.rejectInt64Pin(s)
     val st = RefreshDecision.crossStalenessBp(per, "n_arch", "n_inc", "d_arch", "d_inc")
     val ben = s15RefreshReport(s, dir)
@@ -2632,7 +2376,8 @@ object Similarity {
     * (the s15StaleAssignment pattern at the fine level). */
   private def s17StaleAssignment(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "s17StaleAssignment")(
-      trackedPersist(s14Assign(s14Subvectors(s, dir), s14TrainedCodebooks(s, dir))))
+      trackedPersist(Quantizer.assign(s14Subvectors(s, dir), s14TrainedCodebooks(s, dir),
+        Quantizer.Codebooks, "vec_id", "m", "code", "dist", "sv")))
 
   /** PQ warm-start REFRESH report — s15's recipe applied to the fine
     * level, completing the per-family symmetry (every stored model now
@@ -2654,57 +2399,18 @@ object Similarity {
   private[queries] def s17RefreshedCodebooks(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "s17RefreshedCodebooks") {
       graft.sentiment.GraftFunctions.register(s)
-      val cb = s14TrainedCodebooks(s, dir)
-      val a = s17StaleAssignment(s, dir)
-      val upd = integerMeanVectors(
-        a.select(col("m"), col("code"), col("sv")), Seq("m", "code"), "sv", PqD)
-      cb
-        .select(col("m"), col("code"),
-          col("cent").as("cent_old"), col("cc").as("cc_old"))
-        .join(broadcast(upd.select(col("m"), col("code"),
-          col("cent").as("cent_new"), col("cc").as("cc_new"))),
-          Seq("m", "code"), "left")
-        .select(col("m"), col("code"),
-          coalesce(col("cent_new"), col("cent_old")).as("cent"),
-          coalesce(col("cc_new"), col("cc_old")).as("cc"),
-          col("cent_old"), col("cc_old"))
+      Quantizer.warmUpdate(s14TrainedCodebooks(s, dir),
+        s17StaleAssignment(s, dir), Quantizer.Codebooks)
     }
 
   private[queries] def s17PqRefreshReport(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "s17PqRefreshReport") {
       graft.sentiment.GraftFunctions.register(s)
-      val sub = s14Subvectors(s, dir)
-      val a = s17StaleAssignment(s, dir)
       val refreshed = s17RefreshedCodebooks(s, dir)
-      val a2 = s14Assign(sub, refreshed.select(col("m"), col("code"),
-        col("cent"), col("cc")))
-      // before/after stats in ONE aggregate over the tagged union — the
-      // s15RefreshReport rationale at the fine level (exact integer
-      // sums, bit-identical to the two-relation form)
-      val ba = a.select(col("m"), col("code"), col("dist"), lit(true).as("is_b"))
-        .unionByName(a2.select(col("m"), col("code"), col("dist"),
-          lit(false).as("is_b")))
-        .groupBy(col("m"), col("code"))
-        .agg(
-          sum(when(col("is_b"), 1L).otherwise(0L)).as("n_before"),
-          sum(when(!col("is_b"), 1L).otherwise(0L)).as("n_after"),
-          sum(when(col("is_b"), col("dist")).otherwise(0.0))
-            .cast("long").as("err_before"),
-          sum(when(!col("is_b"), col("dist")).otherwise(0.0))
-            .cast("long").as("err_after"))
-      val report = refreshed
-        .withColumn("disp",
-          (col("cc_old") - lit(2) * dot(col("cent_old"), col("cent")) + col("cc"))
-            .cast("long"))
-        .join(broadcast(ba), Seq("m", "code"), "left")
-        .select(col("m"), col("code"),
-          coalesce(col("n_before"), lit(0L)).as("n_before"),
-          coalesce(col("n_after"), lit(0L)).as("n_after"),
-          col("disp"),
-          coalesce(col("err_before"), lit(0L)).as("err_before"),
-          coalesce(col("err_after"), lit(0L)).as("err_after"))
-        .orderBy(col("m"), col("code"))
-      trackedPersist(report)
+      refreshReport(refreshed, s17StaleAssignment(s, dir),
+        Quantizer.assign(s14Subvectors(s, dir), refreshed, Quantizer.Codebooks,
+          "m", "code", "dist"),
+        Quantizer.Codebooks, "err")
     }
 
   /** The PQ row of c13's refresh decision: staleness from the memoized
@@ -2712,15 +2418,7 @@ object Similarity {
     * (memoized — composing the decision costs ~one audit). */
   private[queries] def pqRefreshLeg(s: SparkSession, dir: String): DataFrame = {
     graft.sentiment.GraftFunctions.register(s)
-    val isNew = s13IsNew
-    val per = s17StaleAssignment(s, dir).groupBy(col("m"))
-      .agg(
-        sum(when(!isNew(col("vec_id")), 1L).otherwise(0L)).as("n_arch"),
-        sum(when(isNew(col("vec_id")), 1L).otherwise(0L)).as("n_inc"),
-        sum(when(!isNew(col("vec_id")), col("dist")).otherwise(0.0))
-          .cast("long").as("err_arch"),
-        sum(when(isNew(col("vec_id")), col("dist")).otherwise(0.0))
-          .cast("long").as("err_inc"))
+    val per = archIncSplit(s17StaleAssignment(s, dir), "m", "err")
     RefreshDecision.rejectInt64Pin(s)
     val st = RefreshDecision.crossStalenessBp(per, "n_arch", "n_inc",
       "err_arch", "err_inc")
@@ -2802,36 +2500,33 @@ object Similarity {
   private val RadiusCertTaus = Seq(4000, 5000, 7000, 9000, 9500)
 
   /** The normalized quantized corpus `(vec_id, emb, nrm, qn, vv)` on the
-    * [[RadiusQuantScale]] grid — persisted + memoized (the cert query and
-    * the pair source share one materialization per session).  Zero
-    * vectors are dropped (no direction ⟹ no cosine). */
+    * [[RadiusQuantScale]] grid, persisted, from a `(vec_id, emb, nrm)`
+    * relation: [[Quantizer.guarded]] first (a dirty vector fails the
+    * action), then zero vectors are dropped (no direction ⟹ no cosine). */
+  private def radiusGridOf(corpus: DataFrame): DataFrame =
+    trackedPersist(Quantizer.guarded(corpus)
+      .filter(col("nrm") > 0)
+      .withColumn("qn", transform(col("emb"),
+        x => floor(x / col("nrm") * RadiusQuantScale)).cast("array<double>"))
+      .withColumn("vv", dot(col("qn"), col("qn"))))
+
+  /** [[radiusGridOf]] over `embeddings`, memoized (the cert query and the
+    * pair source share one materialization per session). */
   private def s16NormQuantized(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "s16NormQuantized") {
       graft.sentiment.GraftFunctions.register(s)
-      trackedPersist(Tables.embeddings(s, dir)
+      radiusGridOf(Tables.embeddings(s, dir)
         .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-        .withColumn("nrm", norm(col("emb")))
-        .filter(col("nrm") > 0)
-        .withColumn("qn", transform(col("emb"),
-          x => floor(x / col("nrm") * RadiusQuantScale)).cast("array<double>"))
-        .withColumn("vv", dot(col("qn"), col("qn"))))
+        .withColumn("nrm", norm(col("emb"))))
     }
 
   /** Integer k-means cells over a normalized-quantized relation
     * `(vec_id, qn, vv)` — the bucketed tier's trainer on the radius
-    * grid (seeds = stride-spaced leading ids, ONE floored-integer-mean
-    * update; everything exact int64-in-double, replays in DuckDB). */
-  private def s16Cells(e: DataFrame, cells: Int, seedStride: Long): DataFrame = {
-    val seeds = e.filter(col("vec_id") % seedStride === 0 &&
-        col("vec_id") < cells * seedStride)
-      .select((col("vec_id") / seedStride).cast("int").as("list_id"),
-        col("qn").as("cent"), col("vv").as("cc"))
-    integerMeanCentroids(
-      e.crossJoin(broadcast(packedCentroids(seeds, "list_id")))
-        .withColumn("best", nearestBest(col("qn")))
-        .filter(col("best").isNotNull)
-        .select(col("best.id").as("list_id"), col("qn").as("qv")))
-  }
+    * grid (stride seeds, ONE floored-integer-mean update). */
+  private def s16Cells(e: DataFrame, cells: Int, seedStride: Long): DataFrame =
+    Quantizer.update(Quantizer.assign(e,
+      Quantizer.strideSeeds(e, Quantizer.RadiusCells, cells, seedStride),
+      Quantizer.RadiusCells, "list_id", "qn"), Quantizer.RadiusCells)
 
   /** The ASSIGNMENT stage of [[radiusCompleteEmbeddingPairsOf]] — split
     * out so RadiusCompleteSpec can measure assignment mass (the cost
@@ -2845,11 +2540,7 @@ object Similarity {
       cells: Int,
       seedStride: Long): (DataFrame, DataFrame) = {
     graft.sentiment.GraftFunctions.register(s)
-    val e = trackedPersist(corpus.toDF("vec_id", "emb", "nrm")
-      .filter(col("nrm") > 0)
-      .withColumn("qn", transform(col("emb"),
-        x => floor(x / col("nrm") * RadiusQuantScale)).cast("array<double>"))
-      .withColumn("vv", dot(col("qn"), col("qn"))))
+    val e = radiusGridOf(corpus.toDF("vec_id", "emb", "nrm"))
     (radiusAssignFromGrid(e, tauBp, cells, seedStride), e)
   }
 
@@ -3109,7 +2800,7 @@ object Similarity {
     * plan, and the corpus pays ONE argmin pass regardless of which side
     * wins).  ONE corpus scan (emb + quantized view, persisted for the
     * assignment, the query side and the candidate re-rank), one
-    * broadcast argmin collapsing map-side (s4's min_by — no window over
+    * map-side broadcast argmin ([[Quantizer.assign]] — no window over
     * corpus-sized pairs), candidate re-rank confined to the probed
     * cells via a broadcast hash join.  All index arithmetic is exact
     * int64 on the [[QuantScale]] grid; only the final cosine touches
@@ -3132,21 +2823,14 @@ object Similarity {
       val servingIdx = trackedPersist(pickByVerdict(
         s15RefreshedCentroids(s, dir), verdict, "verdict", Seq("list_id")))
       val e = servingEmbGrid(s, dir)
-      val lists = postingListsOf(e, servingIdx.select("list_id", "cent", "cc"))
-      // query-side coarse probe via the map-side graft_probe_cells kernel
-      // under the SAME packed broadcast the posting-list assignment rides
-      // (r18: the old row_number window paid an exchange + sort and a
-      // second raw broadcast of servingIdx; the 1-row verdict re-attaches
-      // through the already-broadcast decide relation, reused by AQE).
-      // Values and (dist, list_id) tie-break identical (ProbeCellsKernel).
+      val lists = postingListsOf(e, servingIdx)
+      // query-side coarse probe under the SAME packed broadcast the
+      // posting-list assignment rides; the 1-row verdict rides the packed
+      // row, so servingIdx is broadcast once
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("emb").as("qe"),
           norm(col("emb")).as("qn"), col("qv").as("qqv"))
-      val probed = q
-        .crossJoin(broadcast(packedCentroidsWithVerdict(
-          servingIdx, "list_id", "verdict")))
-        .withColumn("top", probeCellsTop(col("qqv"), IvfProbe))
-        .filter(col("top").isNotNull)
+      val probed = Quantizer.probe(q, "qqv", servingIdx, IvfProbe, Some("verdict"))
         .select(col("q_id"), col("qe"), col("qn"), col("verdict"),
           explode(col("top")).as("t"))
         .select(col("q_id"), col("qe"), col("qn"), col("t.id").as("list_id"),
@@ -3233,14 +2917,11 @@ object Similarity {
         col(vCol)): _*)
 
   /** Emb-carrying quantized view of an embeddings-shaped relation —
-    * `(vec_id, emb, qv, vv)` on the s4 grid.  The quantization stated
-    * once for the batch serving query and the live twin's postings. */
+    * `(vec_id, emb, qv, vv)` on the s4 grid ([[Quantizer.grid]], so a
+    * dirty vector fails the action).  The corpus view of s4, s7, d11,
+    * s13/s14 and the serving queries, and of the live twin's postings. */
   private[graft] def embGridOf(corpus: DataFrame): DataFrame =
-    corpus
-      .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      .withColumn("qv", transform(col("emb"),
-        x => floor(x * QuantScale)).cast("array<double>"))
-      .withColumn("vv", dot(col("qv"), col("qv")))
+    Quantizer.grid(corpus.select(col("vec_id"), asDouble(col("embedding")).as("emb")))
 
   /** The serving queries' ONE corpus scan, memoized + persisted (the
     * memoized s13 relation deliberately drops emb, and the final cosine
@@ -3258,10 +2939,7 @@ object Similarity {
     * ([[graft.stream.LiveServing.postingsOf]]), so live ≡ batch holds by
     * construction, not by copy (review r14). */
   private[graft] def postingListsOf(e: DataFrame, idx: DataFrame): DataFrame =
-    e.crossJoin(broadcast(packedCentroids(idx, "list_id")))
-      .withColumn("best", nearestBest(col("qv")))
-      .filter(col("best").isNotNull)
-      .select(col("vec_id"), col("best.id").as("list_id"), col("emb"))
+    Quantizer.assign(e, idx, Quantizer.Cells, "vec_id", "list_id", "emb")
 
   /** The SERVING index as a DRIVER-SIDE value — the c16 IVF hand-off as
     * a deployment loads it (the s13IndexArray pattern): the c13 IVF
@@ -3305,7 +2983,7 @@ object Similarity {
     * codebooks are the memoized PqM·PqK-row s17 relation with the 1-row
     * broadcast verdict picking the parameter set declaratively; corpus
     * encoding is ONE broadcast argmin pass over the memoized subvector
-    * relation (map-side min_by — no shuffle of candidate pairs); the
+    * relation ([[Quantizer.assign]] — no shuffle of candidate pairs); the
     * distance table is a ≤ 640-row broadcast; the ADC sum is ONE
     * map-side-combined (q_id, vec_id) aggregate — shuffle volume
     * |queries|·|corpus| rows of three longs, the same linear-in-corpus
@@ -3328,8 +3006,7 @@ object Similarity {
       val serving = trackedPersist(pickByVerdict(
         s17RefreshedCodebooks(s, dir), verdict, "verdict", Seq("m", "code")))
       val sub = s14Subvectors(s, dir)
-      val codes = s14Assign(sub, serving.select("m", "code", "cent", "cc"))
-        .select(col("vec_id"), col("m"), col("code"))
+      val codes = Quantizer.assign(sub, serving, Quantizer.Codebooks, "vec_id", "m", "code")
       val dt = sub.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("m"), col("sv"), col("svv"))
         .join(broadcast(serving), Seq("m"))
@@ -3439,28 +3116,16 @@ object Similarity {
       val e = s13Quantized(s, dir)
       // posting-list layout in ONE lineage: cell argmin, then — still
       // carrying the cell — subvector explode + code argmin
-      val cells = s13Nearest(e, servIdx.select("list_id", "cent", "cc"))
-      val codes = cells
-        .withColumn("m", explode(array((0 until PqM).map(lit): _*)))
-        .withColumn("sv", slice(col("qv"), col("m") * PqD + 1, lit(PqD)))
-        .join(broadcast(packedCodebooks(
-          servBooks.select("m", "code", "cent", "cc"))), Seq("m"))
-        .withColumn("best", nearestBest(col("sv")))
-        .filter(col("best").isNotNull)
-        .select(col("vec_id"), col("m"), col("best.id").as("code"),
-          col("list_id"))
-      // query side: probe cells off the quantized relation, distance
-      // tables off the memoized subvector relation
-      // coarse probe via graft_probe_cells under the same packed broadcast
-      // the cell assignment rides; the 1-row ivf verdict re-attaches
-      // through the already-broadcast decide relation (r18 — the s18 probe
-      // rationale; values and tie-break identical, ProbeCellsKernel)
-      val probe = e.filter(col("vec_id") < 5)
+      val cells = Quantizer.assign(e, servIdx, Quantizer.Cells,
+        "vec_id", "list_id", "qv")
+      val codes = Quantizer.assign(Quantizer.subvectors(cells, "list_id"),
+        servBooks, Quantizer.Codebooks, "vec_id", "m", "code", "list_id")
+      // query side: probe cells off the quantized relation (under the same
+      // packed broadcast the cell assignment rides, verdict carried — the
+      // s18 probe), distance tables off the memoized subvector relation
+      val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("qv").as("qqv"))
-        .crossJoin(broadcast(packedCentroidsWithVerdict(
-          servIdx, "list_id", "ivf_verdict")))
-        .withColumn("top", probeCellsTop(col("qqv"), IvfProbe))
-        .filter(col("top").isNotNull)
+      val probe = Quantizer.probe(q, "qqv", servIdx, IvfProbe, Some("ivf_verdict"))
         .select(col("q_id"), col("ivf_verdict"), explode(col("top")).as("t"))
         .select(col("q_id"), col("t.id").as("list_id"), col("ivf_verdict"))
       val dt = s14Subvectors(s, dir).filter(col("vec_id") < 5)

@@ -2031,9 +2031,9 @@ object TextOps {
       SELECT CAST(merge_rank AS INT) AS merge_rank, left_tok, right_tok, pair_count
       FROM ($unions) ORDER BY merge_rank"""
     },
-    doc = "BPE tokenizer training (8 merge rounds, 5% id-sample): " +
-      "declarative count->argmax->merge loop, broadcast 1-row argmax, " +
-      "windowed greedy non-overlap, one doc_id partitioning throughout; " +
+    doc = "BPE tokenizer training (8 merge rounds, 5% id-sample): each " +
+      "round re-encodes the sample with graft_bpe_apply under the merges " +
+      "so far, counts adjacent pairs and cuts only the 1-row argmax; " +
       "FULL value oracle via unrolled materialized stages")
 
   // ---------------------------------------------------------------- t21

@@ -213,8 +213,9 @@ class RecallGuardSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // read an unconditional 10000 bp — vacuous exactly in the at-scale
     // sampling mode it exists for.  This corpus makes the fixed stride
     // observable: ids 0,10,..,90 are 10 orthogonal cluster seeds
-    // (4·e_i, 16 dims), id 100 sits 15° off e_0, id 110 sits 15° off
-    // e_1 (75° off e_0).  Over the mod-10 slice the exact >= 0.4 kernel
+    // (4·e_i in the first 16 of the 64 contract dims — the grid guard
+    // rejects any other length), id 100 sits 15° off e_0, id 110 sits
+    // 15° off e_1 (75° off e_0).  Over the mod-10 slice the exact >= 0.4 kernel
     // holds 3 pairs — (0,100) and (10,110) at cos 15° ~ 0.966, and
     // (100,110) at cos 60° = 0.5 — and with all 10 cells seeded the
     // bucketed source co-locates the first two but NEVER the straddling
@@ -227,7 +228,7 @@ class RecallGuardSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("embedsampled").toString
     def at(deg: Double, i: Int, j: Int): Seq[Float] = {
-      val v = Array.fill(16)(0.0f)
+      val v = Array.fill(64)(0.0f)
       val r = math.toRadians(deg)
       v(i) = (4.0 * math.cos(r)).toFloat
       v(j) = (4.0 * math.sin(r)).toFloat
