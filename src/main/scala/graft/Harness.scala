@@ -38,16 +38,14 @@ object Harness {
 
   /** Drops everything a timed run can leave warm for the next one: the
     * CacheManager entries (`persist()` of an intermediate, keyed by
-    * canonicalized plan), the library's session memos (BPE trainer,
-    * embedding family, dup graph), and RDD-level persists such as the
-    * lineage-cut edges, which the CacheManager does not track and whose
-    * MEMORY_AND_DISK blocks would otherwise pile up and pressure later
-    * timings. */
+    * canonicalized plan), the session registry of derived data
+    * (`graft.queries.Derivations`: its memo and tracked persists), and
+    * RDD-level persists such as the lineage-cut edges, which the
+    * CacheManager does not track and whose MEMORY_AND_DISK blocks would
+    * otherwise pile up and pressure later timings. */
   def clearCaches(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    graft.queries.TextOps.clearBpeCache()
-    graft.queries.Similarity.clearEmbedCache()
-    graft.queries.Dedup.clearDupGraphCache()
+    graft.queries.Derivations.clear()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
   }
 

@@ -937,11 +937,11 @@ object Curation {
     // read these counts — without the boundary each consumer re-runs
     // the corpus token pass (c16 embeds two consumers in ONE plan, so
     // even a shared DataFrame object would scan documents twice)
-    Similarity.memoized(s, dir, "dsirDriftCounts") {
+    Derivations.memo(s, dir, "dsirDriftCounts") {
       graft.sentiment.GraftFunctions.register(s)
       val isInc = col("doc_id") % 10 === 7
       val isT = col("source") === DsirTarget
-      Similarity.trackedPersist(Tables.documents(s, dir)
+      Derivations.persist(Tables.documents(s, dir)
         .filter(col("text").isNotNull && col("text") =!= "")
         .select(col("doc_id"), col("source"),
           explode(split(trim(lower(col("text"))), "\\s+")).as("t"))

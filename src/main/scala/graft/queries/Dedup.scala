@@ -260,8 +260,7 @@ object Dedup {
     // guard survives column pruning; empty corpora pass vacuously (no
     // rows, no asserts); guarding one side suffices because every
     // bucket appears on both.
-    val maxBucket = s.conf.getOption("spark.graft.dedup.maxBucket")
-      .map(_.toLong).getOrElse(100000L)
+    val maxBucket = maxBucketConf(s)
     val wOcc = org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("bv"))
     val left = bands
       .withColumn("occ", count(lit(1)).over(wOcc))
@@ -280,6 +279,16 @@ object Dedup {
       .distinct()
     verifyExactJaccard(cand, docs).select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
+
+  /** `spark.graft.dedup.maxBucket`, the hot-bucket cap the banded join
+    * bakes into its plan (default 100000, the streaming cap). */
+  private def maxBucketConf(s: org.apache.spark.sql.SparkSession): Long =
+    s.conf.getOption("spark.graft.dedup.maxBucket").map(_.toLong).getOrElse(100000L)
+
+  /** The shaping values of a pair relation built from `source`: the
+    * banded plan also bakes in the hot-bucket cap. */
+  private def pairShaping(s: org.apache.spark.sql.SparkSession, source: String): Seq[Any] =
+    if (source == "banded") Seq(source, maxBucketConf(s)) else Seq(source)
 
   /** The per-doc distinct word-trigram shingle ARRAY relation
     * `(doc_id, sharr, n_sh)` — the dedup tier's scan-side base (r18):
@@ -661,48 +670,6 @@ object Dedup {
     * of mislabeling, so extra defaults would buy only latency. */
   private val DefaultCcRounds = 4
 
-  /** Session-scoped dup-graph memo for the opt-in
-    * `spark.graft.dupgraph.cache` path: (session, dataset dir, cc rounds,
-    * pair source) → the labels DataFrame.  Reusing the DataFrame reuses the persisted
-    * lineage-cut blocks inside it, so the pair graph materializes once
-    * per session instead of once per query.  Strong session refs are
-    * intentional (library-lifetime cache, cleared via
-    * [[clearDupGraphCache]] — tests and long-lived services). */
-  private val dupGraphMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String, Int, String),
-      org.apache.spark.sql.DataFrame]()
-
-  /** Session-scoped memo for the ≥0.5 exact global Jaccard PAIR relation
-    * itself (same opt-in conf as the labels memo): the pair generation is
-    * the dominant shared cost of the whole dedup tier — c1/d6/d9 build
-    * their graph on it and d13 audits against it — so under
-    * `spark.graft.dupgraph.cache` the pair plan is memoized AND persisted
-    * (MEMORY_AND_DISK: the pair relation is small, but must spill rather
-    * than OOM on a pathological corpus), materializing once per session
-    * for every consumer.  `ccRounds` is deliberately NOT in this key —
-    * it shapes propagation, not pair generation. */
-  private val dupPairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String, String),
-      org.apache.spark.sql.DataFrame]()
-
-  /** Drops memoized dup graphs and pair relations.  The cut blocks inside
-    * the dropped plans are reclaimed by Spark's ContextCleaner once the
-    * DataFrames are garbage-collected (unpersisting here by hand could
-    * pull blocks out from under an in-flight query that still holds the
-    * plan). */
-  def clearDupGraphCache(): Unit = {
-    dupGraphMemo.clear(); dupPairsMemo.clear()
-    // the recall certificate memoizes a persisted 1-row relation (plus
-    // its constructionPersist'd shingle inputs) per (session, dir,
-    // sampleMod) — symmetric with Similarity.clearEmbedCache's
-    // recallCertMemo.clear() (round-11 ADVICE: long-lived services
-    // accumulate certificates otherwise; blocks reclaim via the
-    // ContextCleaner once the dropped plans are collected)
-    dedupRecallCertMemo.clear()
-  }
-
   /** The pair-source selector for the dedup tier:
     * `spark.graft.dedup.pairs = exact | banded` (default `banded`).
     *
@@ -736,9 +703,10 @@ object Dedup {
 
   /** The ≥0.5 global Jaccard pairs, cache-aware — the shared input
     * of [[clusterLabels]] and the d13 audit.  Per-query isolation by
-    * default; one persisted materialization per session under the cache
-    * conf (keying discipline as [[clusterLabels]]: the pair source, the
-    * one conf that shapes the build, is the key). */
+    * default; under `spark.graft.dupgraph.cache` the pair plan is
+    * memoized AND persisted (MEMORY_AND_DISK: the pair relation is
+    * small, but must spill rather than OOM on a pathological corpus),
+    * materializing once per session for every consumer. */
   def dupPairs(s: org.apache.spark.sql.SparkSession, dir: String,
       sourceOverride: Option[String] = None): org.apache.spark.sql.DataFrame = {
     TextOps.rejectPrefixFilterOverride(s)
@@ -750,8 +718,8 @@ object Dedup {
     }
     def built() =
       if (s.conf.getOption("spark.graft.dupgraph.cache").exists(_.toBoolean))
-        dupPairsMemo.computeIfAbsent((s, dir, source),
-          _ => constructionPersist(s, build()))
+        Derivations.memo(s, dir, "dupPairs", pairShaping(s, source): _*)(
+          constructionPersist(s, build()))
       else build()
     // RECALL-FLOOR GUARD — `spark.graft.embed.minRecallBp`'s dedup analog
     // (round-10 verdict #4): a conf-selected `banded` source under
@@ -792,20 +760,14 @@ object Dedup {
     }
   }
 
-  /** Session memo + builder for the dedup recall-floor guard's measured
-    * certificate: d13's recall statistic (banded pairs vs the exact
-    * global ≥ 0.5 relation) over the deterministic
-    * `doc_id % sampleMod = 0` corpus slice, both sides sharing ONE
-    * persisted shingle relation (the d13 idiom).  1-row, persisted,
-    * measured once per session per (dir, sampleMod). */
-  private val dedupRecallCertMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String, Long),
-      org.apache.spark.sql.DataFrame]()
-
+  /** The dedup recall-floor guard's measured certificate: d13's recall
+    * statistic (banded pairs vs the exact global ≥ 0.5 relation) over
+    * the deterministic `doc_id % sampleMod = 0` corpus slice, both sides
+    * sharing ONE persisted shingle relation (the d13 idiom).  1-row,
+    * persisted, measured once per session per (dir, sampleMod, cap). */
   private def dedupRecallCert(s: org.apache.spark.sql.SparkSession, dir: String,
       sampleMod: Long): org.apache.spark.sql.DataFrame =
-    dedupRecallCertMemo.computeIfAbsent((s, dir, sampleMod), _ => {
+    Derivations.memo(s, dir, "dedupRecallCert", sampleMod, maxBucketConf(s)) {
       graft.sentiment.GraftFunctions.register(s)
       // both sides share ONE persisted per-doc array relation (the d13
       // idiom, r18 array form): the banded side bands/verifies off the
@@ -827,7 +789,7 @@ object Dedup {
           .agg(coalesce(
             expr("(sum(coalesce(hit, 0)) * 10000) div nullif(count(1), 0)"),
             lit(10000L)).as("recall_bp")))
-    })
+    }
 
   /** Unordered (doc_id, cluster_id) component labels over the ≥0.5 exact
     * global Jaccard graph — the d6 query body, reusable by composed
@@ -835,21 +797,14 @@ object Dedup {
     *
     * By default each caller builds its own graph (per-query isolation —
     * the gate contract).  With `spark.graft.dupgraph.cache=true` the
-    * labels plan is memoized per (session, dir): c1/d6/d9 in one session
-    * then share ONE pair-generation + propagation (the dominant cost —
-    * the three queries rebuild an identical graph ~3× at gate time), with
-    * results proven identical by DupGraphCacheSpec. */
+    * labels plan is memoized per session and dir, shaped by the cc round
+    * count and the pair source: c1/d6/d9 in one session then share ONE
+    * pair-generation + propagation (the dominant cost — the three
+    * queries rebuild an identical graph ~3× at gate time), with results
+    * proven identical by DupGraphCacheSpec. */
   def clusterLabels(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    // the round count is part of the memo KEY, not just the build: when a
-    // memoized plan fails its fixpoint guard ("raise spark.graft.cc.rounds"),
-    // raising the conf must yield a fresh plan on the next call — a
-    // session+dir key would hand back the under-provisioned plan forever
     val ccRounds = s.conf.getOption("spark.graft.cc.rounds")
       .map(_.toInt).getOrElse(DefaultCcRounds)
-    // the pair-SOURCE conf shapes the memoized build: flipping it
-    // mid-session must select a fresh plan, never hand back one built
-    // from the other relation (the prefix-filter plan is picked by input
-    // size inside adaptiveJaccardPairs, a function of `dir`)
     TextOps.rejectPrefixFilterOverride(s)
     val pairSource = pairSourceConf(s)
     def build(): org.apache.spark.sql.DataFrame = {
@@ -864,8 +819,9 @@ object Dedup {
     if (s.conf.getOption("spark.graft.dupgraph.cache").exists(_.toBoolean))
       // build() only CONSTRUCTS the plan (zero-jobs-at-construction
       // contract — lineage cuts materialize at first action), so holding
-      // the map bin during computeIfAbsent is milliseconds, not minutes
-      dupGraphMemo.computeIfAbsent((s, dir, ccRounds, pairSource), _ => build())
+      // the registry's monitor during the build is milliseconds
+      Derivations.memo(s, dir, "clusterLabels",
+        ccRounds +: pairShaping(s, pairSource): _*)(build())
     else build()
   }
 

@@ -79,7 +79,7 @@ object EmbedSweep {
           f"boundary=$boundaryPct%2d%%  n_exact=$nExact%5d  candidates=$nCand%7d  " +
           f"hits=$hits%5d  recall_bp=$recallBp%5d")
         candP.unpersist(blocking = false)
-        Similarity.clearEmbedCache()
+        Derivations.clear()
       }
       exact.unpersist(blocking = false)
     }

@@ -33,55 +33,17 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Persisted intermediates registered by the embedding pair/audit
-    * builders (the bucketed quantized corpus, d15's two pair relations,
-    * s13's shared quantized relation).  These live inside LAZY returned
-    * plans, so the builder cannot unpersist after "the" action — the
-    * caller owns the action.  Instead every persist routes through here
-    * and [[clearEmbedCache]] reclaims them (unpersist drops the
-    * CacheManager entry; blocking=false so an in-flight reader finishes
-    * from lineage) — Bench's per-query `catalog.clearCache()` already
-    * covered its own runs; this closes the leak for test suites and
-    * long-lived services that invoke these builders repeatedly
-    * (round-10 ADVICE). */
-  private val embedPersists =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[DataFrame]()
-
-  private[queries] def trackedPersist(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    embedPersists.add(p)
-    p
-  }
-
-  /** Unpersists every intermediate registered by [[trackedPersist]]. */
-  def clearEmbedCache(): Unit = {
-    val it = embedPersists.iterator()
-    while (it.hasNext) {
-      try it.next().unpersist(blocking = false)
-      catch { case _: Throwable => () } // a stopped session has nothing to drop
-      it.remove()
-    }
-    recallCertMemo.clear()
-    stalenessMemo.clear()
-  }
-
-  /** Session memo for the recall-floor guard's measured certificate
-    * (one 1-row relation per (session, dir, sampleMod)): the guard
-    * prices one certificate measurement into the first guarded action,
-    * not one per query. */
-  private val recallCertMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]()
-
   /** The d15 certificate re-measured for the GUARD path
     * ([[embedPairs]] under `spark.graft.embed.minRecallBp`): recall of
     * the bucketed pair source against the exact ≥ 0.4 kernel, over the
     * deterministic `vec_id % sampleMod = 0` slice of the corpus
     * (sampleMod 1 = the full d15 measurement; at 100 TB the exact side
     * is quadratic, so a deployment samples — cost shrinks ~mod²).
-    * Both relations persist via [[trackedPersist]] and the 1-row result
-    * persists too, so the certificate computes once per session. */
+    * Both relations persist via [[Derivations.persist]] and the 1-row
+    * result persists too, so the certificate computes once per session
+    * per (dir, sampleMod). */
   private def embedRecallCert(s: SparkSession, dir: String, sampleMod: Long): DataFrame =
-    recallCertMemo.computeIfAbsent((s, dir, sampleMod), _ => {
+    Derivations.memo(s, dir, "embedRecallCert", sampleMod) {
       graft.sentiment.GraftFunctions.register(s)
       import s.implicits._
       val e = Tables.embeddings(s, dir)
@@ -107,12 +69,12 @@ object Similarity {
       // the guard union lands (including below the dedup tier's lineage
       // cuts).  An empty exact relation certifies vacuously (count 0 →
       // null ratio → coalesce to 10000: nothing to lose).
-      trackedPersist(
+      Derivations.persist(
         exact.join(bucketed, Seq("vec_a", "vec_b"), "left")
           .agg(coalesce(
             expr("(sum(coalesce(hit, 0)) * 10000) div nullif(count(1), 0)"),
             lit(10000L)).as("recall_bp")))
-    })
+    }
 
   /** The recall-floor guard (round-10 verdict #4): wires the d15/d13
     * certificate into the engine's own guardrail, so a deployment cannot
@@ -991,7 +953,7 @@ object Similarity {
     // persist MEMORY_AND_DISK (must spill, not OOM — the d3-shingles
     // rule).  The persisted subtree is scan+transform only (no joins),
     // so no broadcast ever hides inside a cached entry.
-    val e = trackedPersist(Quantizer.grid(corpus.toDF("vec_id", "emb", "nrm")))
+    val e = Derivations.persist(Quantizer.grid(corpus.toDF("vec_id", "emb", "nrm")))
     // `kmeansSteps` assign + update rounds run at construction; each
     // embeds one more copy of the (tiny) centroid subtree, so the sweep
     // range {1, 2} costs plan size, never a lineage explosion.
@@ -1021,7 +983,7 @@ object Similarity {
     // kernel projection (unlike the old groupBy form) has no exchange for
     // ReuseExchange to share — without the persist each join side re-runs
     // the assignment pass
-    val am = trackedPersist(
+    val am = Derivations.persist(
       Quantizer.probe(e, "qv", centroids, probe)
       .select(col("vec_id"), col("top")(0).getField("d").as("dbest"),
         posexplode(col("top")).as(Seq("pos", "t")))
@@ -1198,8 +1160,8 @@ object Similarity {
     (s, dir) => {
       // both relations feed two consumers (overlap join + count): persist
       // or the full pipelines execute twice (the d13 rationale)
-      val exact = trackedPersist(embedPairs(s, dir, sourceOverride = Some("exact")))
-      val bucketed = trackedPersist(embedPairs(s, dir, sourceOverride = Some("bucketed")))
+      val exact = Derivations.persist(embedPairs(s, dir, sourceOverride = Some("exact")))
+      val bucketed = Derivations.persist(embedPairs(s, dir, sourceOverride = Some("bucketed")))
       val hits = bucketed.join(exact, Seq("doc_a", "doc_b"))
       val ne = exact.agg(count(lit(1)).as("n_exact"))
       val nb = bucketed.agg(count(lit(1)).as("n_bucketed"))
@@ -1850,46 +1812,13 @@ object Similarity {
       sum(when(isNew, col("dist")).otherwise(0.0)).cast("long").as(s"${mass}_inc"))
   }
 
-  /** Session memo for the s13/s14 staleness builders' shared relations
-    * (quantized corpus, subvector explode, trained centroids/codebooks),
-    * keyed (session, dir) and reclaimed by [[clearEmbedCache]]: the
-    * documented live-twin loading sequence — `s13IndexArray` then
-    * `s13ArchiveCellStats` — previously built and persisted TWO
-    * independent copies of the quantized corpus and re-ran centroid
-    * training from scratch (round-11 ADVICE); with the memo, the batch
-    * query, the driver-side index export and the archive-stats export
-    * share one persisted relation and one training pass. */
-  private val stalenessMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  /** NOT computeIfAbsent: these builders NEST (s15StaleAssignment builds
-    * via s13Quantized and s13TrainedCentroids, themselves memoized in the
-    * same map), and ConcurrentHashMap.computeIfAbsent throws
-    * IllegalStateException("Recursive update") whenever a nested insert
-    * lands in the in-progress bin — which depends on the session's
-    * identity hash, so it fails NONDETERMINISTICALLY per JVM (caught by
-    * the round-12 bench, invisible to the same-code Verify run).  A
-    * double-checked block on the map's monitor is reentrant for the
-    * building thread, so nested builds are always safe. */
-  private[queries] def memoized(s: SparkSession, dir: String, what: String)
-      (build: => DataFrame): DataFrame = {
-    val key = (s, dir, what)
-    val hit = stalenessMemo.get(key)
-    if (hit != null) hit
-    else stalenessMemo.synchronized {
-      val again = stalenessMemo.get(key)
-      if (again != null) again
-      else { val built = build; stalenessMemo.put(key, built); built }
-    }
-  }
-
   /** s13's quantized corpus relation (persisted + memoized — the 4
     * consumers of the batch audit, plus the live twin's index builders,
     * share ONE materialization per session). */
   private def s13Quantized(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "s13Quantized") {
+    Derivations.memo(s, dir, "s13Quantized") {
       graft.sentiment.GraftFunctions.register(s)
-      trackedPersist(embGridOf(Tables.embeddings(s, dir))
+      Derivations.persist(embGridOf(Tables.embeddings(s, dir))
         .select(col("vec_id"), col("qv"), col("vv")))
     }
 
@@ -1910,8 +1839,8 @@ object Similarity {
     * consumers (batch audit, index export, archive stats, s15 refresh)
     * read it. */
   private def s13TrainedCentroids(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "s13TrainedCentroids")(
-      trackedPersist(s13Centroids(s13Quantized(s, dir))))
+    Derivations.memo(s, dir, "s13TrainedCentroids")(
+      Derivations.persist(s13Centroids(s13Quantized(s, dir))))
 
   /** s13's trained index as a DRIVER-SIDE value — how a production
     * consumer loads a stored IVF index (10 cells × 64 dims, not a
@@ -2018,8 +1947,8 @@ object Similarity {
     * relation is the stored index's posting lists plus the incoming
     * slice's fresh argmin — d14's stored-index story again. */
   private def s15StaleAssignment(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "s15StaleAssignment")(
-      trackedPersist(Quantizer.assign(s13Quantized(s, dir), s13TrainedCentroids(s, dir),
+    Derivations.memo(s, dir, "s15StaleAssignment")(
+      Derivations.persist(Quantizer.assign(s13Quantized(s, dir), s13TrainedCentroids(s, dir),
         Quantizer.Cells, "vec_id", "list_id", "dist", "qv")))
 
   /** IVF warm-start REFRESH — the "what would retraining buy" companion
@@ -2055,14 +1984,14 @@ object Similarity {
     * builder so c16's serving-model export reads the PARAMETERS, not
     * just the report's priced deltas; ≤ k rows, memoized. */
   private[queries] def s15RefreshedCentroids(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "s15RefreshedCentroids") {
+    Derivations.memo(s, dir, "s15RefreshedCentroids") {
       graft.sentiment.GraftFunctions.register(s)
       Quantizer.warmUpdate(s13TrainedCentroids(s, dir),
         s15StaleAssignment(s, dir), Quantizer.Cells)
     }
 
   private[queries] def s15RefreshReport(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "s15RefreshReport") {
+    Derivations.memo(s, dir, "s15RefreshReport") {
       graft.sentiment.GraftFunctions.register(s)
       val refreshed = s15RefreshedCentroids(s, dir)
       refreshReport(refreshed, s15StaleAssignment(s, dir),
@@ -2096,7 +2025,7 @@ object Similarity {
           .cast("long").as(s"${mass}_before"),
         sum(when(!col("is_b"), col("dist")).otherwise(0.0))
           .cast("long").as(s"${mass}_after"))
-    trackedPersist(refreshed
+    Derivations.persist(refreshed
       .withColumn("disp",
         (col("cc_old") - lit(2) * dot(col("cent_old"), col("cent")) + col("cc"))
           .cast("long"))
@@ -2195,11 +2124,11 @@ object Similarity {
     * Memoized per (session, dir) — the batch audit, the codebook export
     * and the archive-stats export share ONE materialization. */
   private def s14Subvectors(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "s14Subvectors") {
+    Derivations.memo(s, dir, "s14Subvectors") {
       graft.sentiment.GraftFunctions.register(s)
       // derived from the memoized s13 quantized relation: both staleness
       // families share one corpus scan per composed session
-      trackedPersist(Quantizer.subvectors(s13Quantized(s, dir)))
+      Derivations.persist(Quantizer.subvectors(s13Quantized(s, dir)))
     }
 
   /** s14's ARCHIVE-trained per-subspace codebooks: seeds = the archive
@@ -2218,8 +2147,8 @@ object Similarity {
     * many consumers (batch audit, codebook export, archive stats) read
     * it. */
   private def s14TrainedCodebooks(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "s14TrainedCodebooks")(
-      trackedPersist(s14Codebooks(s14Subvectors(s, dir))))
+    Derivations.memo(s, dir, "s14TrainedCodebooks")(
+      Derivations.persist(s14Codebooks(s14Subvectors(s, dir))))
 
   /** s14's trained codebooks as a DRIVER-SIDE value (PqM·PqK = 128 rows
     * × 8 dims — how a consumer ships a stored PQ index); feeds the live
@@ -2375,8 +2304,8 @@ object Similarity {
     * report, its update step and c13's pq staleness split all read it
     * (the s15StaleAssignment pattern at the fine level). */
   private def s17StaleAssignment(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "s17StaleAssignment")(
-      trackedPersist(Quantizer.assign(s14Subvectors(s, dir), s14TrainedCodebooks(s, dir),
+    Derivations.memo(s, dir, "s17StaleAssignment")(
+      Derivations.persist(Quantizer.assign(s14Subvectors(s, dir), s14TrainedCodebooks(s, dir),
         Quantizer.Codebooks, "vec_id", "m", "code", "dist", "sv")))
 
   /** PQ warm-start REFRESH report — s15's recipe applied to the fine
@@ -2397,14 +2326,14 @@ object Similarity {
     * the report builder so c16's serving-model export reads the
     * PARAMETERS; PqM·PqK rows, memoized. */
   private[queries] def s17RefreshedCodebooks(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "s17RefreshedCodebooks") {
+    Derivations.memo(s, dir, "s17RefreshedCodebooks") {
       graft.sentiment.GraftFunctions.register(s)
       Quantizer.warmUpdate(s14TrainedCodebooks(s, dir),
         s17StaleAssignment(s, dir), Quantizer.Codebooks)
     }
 
   private[queries] def s17PqRefreshReport(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "s17PqRefreshReport") {
+    Derivations.memo(s, dir, "s17PqRefreshReport") {
       graft.sentiment.GraftFunctions.register(s)
       val refreshed = s17RefreshedCodebooks(s, dir)
       refreshReport(refreshed, s17StaleAssignment(s, dir),
@@ -2504,7 +2433,7 @@ object Similarity {
     * relation: [[Quantizer.guarded]] first (a dirty vector fails the
     * action), then zero vectors are dropped (no direction ⟹ no cosine). */
   private def radiusGridOf(corpus: DataFrame): DataFrame =
-    trackedPersist(Quantizer.guarded(corpus)
+    Derivations.persist(Quantizer.guarded(corpus)
       .filter(col("nrm") > 0)
       .withColumn("qn", transform(col("emb"),
         x => floor(x / col("nrm") * RadiusQuantScale)).cast("array<double>"))
@@ -2513,7 +2442,7 @@ object Similarity {
   /** [[radiusGridOf]] over `embeddings`, memoized (the cert query and the
     * pair source share one materialization per session). */
   private def s16NormQuantized(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "s16NormQuantized") {
+    Derivations.memo(s, dir, "s16NormQuantized") {
       graft.sentiment.GraftFunctions.register(s)
       radiusGridOf(Tables.embeddings(s, dir)
         .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
@@ -2550,8 +2479,8 @@ object Similarity {
     * per session (the broadcast-sized relation is cheap, but recomputing
     * it per consumer made the sharing comment a lie — ADVICE r13). */
   private def s16TrainedCells(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "s16TrainedCells") {
-      trackedPersist(s16Cells(
+    Derivations.memo(s, dir, "s16TrainedCells") {
+      Derivations.persist(s16Cells(
         s16NormQuantized(s, dir).select(col("vec_id"), col("qn"), col("vv")),
         EmbedCells, 1L))
     }
@@ -2564,23 +2493,36 @@ object Similarity {
       cells: Int, seedStride: Long,
       centsOverride: Option[DataFrame] = None): DataFrame = {
     val cents = centsOverride.getOrElse(s16Cells(e, cells, seedStride))
-    val twoDq = radiusTwoDq(tauBp)
-    // radius assignment: dist ≤ (⌊√dbest⌋ + 1 + 2Dq)² — the +1 makes the
-    // integer sqrt an over-approximation; the square is an explicit
-    // multiply (Math.pow is not correctly rounded and a 1-ulp-under
-    // result would drop an equal-distance cell)
-    e.crossJoin(broadcast(cents))
-      .withColumn("dist", col("vv") - lit(2) * dot(col("qn"), col("cent")) + col("cc"))
-      .groupBy(col("vec_id"))
-      .agg(min(col("dist")).as("dbest"),
-        collect_list(struct(col("dist"), col("list_id"))).as("ds"))
-      .withColumn("thr",
-        (floor(sqrt(col("dbest"))) + lit(1) + lit(twoDq)) *
-          (floor(sqrt(col("dbest"))) + lit(1) + lit(twoDq)))
+    radiusBall(e, cents, struct(col("dist"), col("list_id")), radiusArm(tauBp))
       .select(col("vec_id"),
         explode(filter(col("ds"), t => t.getField("dist") <= col("thr"))).as("t"))
       .select(col("vec_id"), col("t.list_id").as("list_id"))
   }
+
+  /** s16's triangle-bound ball over a normalized-quantized grid
+    * `(vec_id, qn, vv)` and cells `cents`, the one statement of the
+    * radius assignment, its mass certificate and s16: per vector `dbest`
+    * (the integer squared distance to its nearest cell) and `ds` (`elem`
+    * — a Column over `dist` and `list_id` — collected over every cell),
+    * then the τ arm `tau` as column `t` (a struct with field `two_dq`, or
+    * a generator of them) and the ball `thr = (⌊√dbest⌋ + 1 + 2Dq)²`:
+    * a cell is in the ball iff its `dist ≤ thr`.  The +1 makes the
+    * integer sqrt an over-approximation; the square is an explicit
+    * multiply (Math.pow is not correctly rounded and a 1-ulp-under
+    * result would drop an equal-distance cell). */
+  private def radiusBall(e: DataFrame, cents: DataFrame, elem: Column,
+      tau: Column): DataFrame = {
+    val r = floor(sqrt(col("dbest"))) + lit(1) + col("t.two_dq")
+    e.crossJoin(broadcast(cents))
+      .withColumn("dist", col("vv") - lit(2) * dot(col("qn"), col("cent")) + col("cc"))
+      .groupBy(col("vec_id"))
+      .agg(min(col("dist")).as("dbest"), collect_list(elem).as("ds"))
+      .select(col("vec_id"), col("dbest"), col("ds"), tau.as("t"))
+      .withColumn("thr", r * r)
+  }
+
+  /** The single-τ arm of [[radiusBall]]. */
+  private def radiusArm(tauBp: Int): Column = struct(lit(radiusTwoDq(tauBp)).as("two_dq"))
 
   /** PROVABLY-COMPLETE embedding near-dup pair source: every vector is
     * assigned to ALL cells within `√dbest + 2Dq(τ)` of it (the
@@ -2628,19 +2570,10 @@ object Similarity {
     * `cell_mass_bp = (Σ per-vector cells within the triangle bound) ·
     * 10⁴ div (n_vec · cells)`.  Θ(n·k), never the pair join. */
   private def radiusMassCert(s: SparkSession, dir: String, tauBp: Int): DataFrame =
-    memoized(s, dir, s"radiusMassCert:$tauBp") {
+    Derivations.memo(s, dir, "radiusMassCert", tauBp) {
       graft.sentiment.GraftFunctions.register(s)
       val e = s16NormQuantized(s, dir).select(col("vec_id"), col("qn"), col("vv"))
-      val cents = s16TrainedCells(s, dir)
-      val twoDq = radiusTwoDq(tauBp)
-      trackedPersist(e.crossJoin(broadcast(cents))
-        .withColumn("dist",
-          col("vv") - lit(2) * dot(col("qn"), col("cent")) + col("cc"))
-        .groupBy(col("vec_id"))
-        .agg(min(col("dist")).as("dbest"), collect_list(col("dist")).as("ds"))
-        .withColumn("thr",
-          (floor(sqrt(col("dbest"))) + lit(1) + lit(twoDq)) *
-            (floor(sqrt(col("dbest"))) + lit(1) + lit(twoDq)))
+      Derivations.persist(radiusBall(e, s16TrainedCells(s, dir), col("dist"), radiusArm(tauBp))
         .select(size(filter(col("ds"), d => d <= col("thr")))
           .cast("long").as("n_probe"))
         .agg(expr(s"(sum(n_probe) * 10000) div (count(1) * $EmbedCells)")
@@ -2709,17 +2642,9 @@ object Similarity {
     (s, dir) => {
       graft.sentiment.GraftFunctions.register(s)
       val e = s16NormQuantized(s, dir).select(col("vec_id"), col("qn"), col("vv"))
-      val cents = s16TrainedCells(s, dir)
       val taus = array(RadiusCertTaus.map(t =>
         struct(lit(t).as("tau_bp"), lit(radiusTwoDq(t)).as("two_dq"))): _*)
-      e.crossJoin(broadcast(cents))
-        .withColumn("dist", col("vv") - lit(2) * dot(col("qn"), col("cent")) + col("cc"))
-        .groupBy(col("vec_id"))
-        .agg(min(col("dist")).as("dbest"), collect_list(col("dist")).as("ds"))
-        .select(col("dbest"), col("ds"), explode(taus).as("t"))
-        .withColumn("thr",
-          (floor(sqrt(col("dbest"))) + lit(1) + col("t.two_dq")) *
-            (floor(sqrt(col("dbest"))) + lit(1) + col("t.two_dq")))
+      radiusBall(e, s16TrainedCells(s, dir), col("dist"), explode(taus))
         .groupBy(col("t.tau_bp").as("tau_bp"), col("t.two_dq").as("two_dq"))
         .agg(count(lit(1)).as("n_vec"),
           sum(size(filter(col("ds"), x => x <= col("thr")))).cast("long").as("n_assign"))
@@ -2820,7 +2745,7 @@ object Similarity {
       // the broadcast verdict ([[pickByVerdict]]).  Persisted
       // (≤ IvfLists rows) so the decision subtree prices once for its
       // two consumers (corpus assignment + query-side probe).
-      val servingIdx = trackedPersist(pickByVerdict(
+      val servingIdx = Derivations.persist(pickByVerdict(
         s15RefreshedCentroids(s, dir), verdict, "verdict", Seq("list_id")))
       val e = servingEmbGrid(s, dir)
       val lists = postingListsOf(e, servingIdx)
@@ -2928,9 +2853,9 @@ object Similarity {
     * needs it; the relation is threshold-independent, so repeated s18
     * invocations in one session share it — review r14). */
   private[graft] def servingEmbGrid(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "servingEmbGrid") {
+    Derivations.memo(s, dir, "servingEmbGrid") {
       graft.sentiment.GraftFunctions.register(s)
-      trackedPersist(embGridOf(Tables.embeddings(s, dir)))
+      Derivations.persist(embGridOf(Tables.embeddings(s, dir)))
     }
 
   /** Broadcast-argmin posting assignment of an emb+grid relation against
@@ -3003,7 +2928,7 @@ object Similarity {
       // broadcast verdict ([[pickByVerdict]]); persisted (PqM·PqK rows)
       // so the decision subtree prices once for its two consumers
       // (corpus encoding + the query-side distance tables)
-      val serving = trackedPersist(pickByVerdict(
+      val serving = Derivations.persist(pickByVerdict(
         s17RefreshedCodebooks(s, dir), verdict, "verdict", Seq("m", "code")))
       val sub = s14Subvectors(s, dir)
       val codes = Quantizer.assign(sub, serving, Quantizer.Codebooks, "vec_id", "m", "code")
@@ -3109,9 +3034,9 @@ object Similarity {
         .select(col("verdict").as("ivf_verdict"))
       val pv = RefreshDecision.decide(pqRefreshLeg(s, dir), minSt, minBen)
         .select(col("verdict").as("pq_verdict"))
-      val servIdx = trackedPersist(pickByVerdict(
+      val servIdx = Derivations.persist(pickByVerdict(
         s15RefreshedCentroids(s, dir), iv, "ivf_verdict", Seq("list_id")))
-      val servBooks = trackedPersist(pickByVerdict(
+      val servBooks = Derivations.persist(pickByVerdict(
         s17RefreshedCodebooks(s, dir), pv, "pq_verdict", Seq("m", "code")))
       val e = s13Quantized(s, dir)
       // posting-list layout in ONE lineage: cell argmin, then — still

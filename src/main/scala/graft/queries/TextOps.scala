@@ -1981,31 +1981,17 @@ object TextOps {
       .select(col("doc_id"), posexplode(col("toks")).as(Seq("seq", "tok"))))
   }
 
-  /** Session-scoped trainer memo for the opt-in
-    * `spark.graft.bpe.cache` path (the `Dedup.dupGraphMemo` discipline):
-    * (session, dataset dir) → the trainer loop's (bests, final
-    * occurrences).  A composed pipeline that runs t20 (inspect the merge
-    * table) and then t21 (encode the corpus) trains ONCE — reusing the
-    * DataFrames reuses the persisted lineage-cut blocks inside them, so
-    * the sample rounds materialize once per session.  Per-query
-    * isolation (the gate contract) stays the default; strong session
-    * refs are intentional (cleared via [[clearBpeCache]]).  No conf
-    * shapes the build, so (session, dir) is the whole key. */
-  private[queries] val bpeTrainMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (Seq[DataFrame], DataFrame)]()
-
-  /** Drops memoized trainers (blocks reclaimed by the ContextCleaner
-    * once the plans are unreachable — the [[Dedup.clearDupGraphCache]]
-    * contract). */
-  def clearBpeCache(): Unit = bpeTrainMemo.clear()
-
-  /** [[bpeTrainLoop]], memoized per (session, dir) under
-    * `spark.graft.bpe.cache=true`. */
+  /** [[bpeTrainLoop]], memoized per (session, dir) under the opt-in
+    * `spark.graft.bpe.cache=true`: a composed pipeline that runs t20
+    * (inspect the merge table) and then t21 (encode the corpus) trains
+    * ONCE — reusing the DataFrames reuses the persisted lineage-cut
+    * blocks inside them, so the sample rounds materialize once per
+    * session.  Per-query isolation (the gate contract) stays the
+    * default. */
   private def bpeTrainLoopCached(s: SparkSession,
       dir: String): (Seq[DataFrame], DataFrame) =
     if (s.conf.getOption("spark.graft.bpe.cache").exists(_.toBoolean))
-      bpeTrainMemo.computeIfAbsent((s, dir), _ => bpeTrainLoop(s, dir))
+      Derivations.memo(s, dir, "t20_bpe_train")(bpeTrainLoop(s, dir))
     else bpeTrainLoop(s, dir)
 
   val t20BpeTrain = NamedQuery(

@@ -51,6 +51,30 @@ class BandedHotBucketSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.dedup.maxBucket")
   }
 
+  test("with the dup-graph cache on, raising the cap after a failure builds afresh") {
+    val dir = corpusDir(10)
+    spark.conf.set("spark.graft.dupgraph.cache", "true")
+    spark.conf.set("spark.graft.dedup.maxBucket", "3")
+    try {
+      Derivations.clear()
+      val e = intercept[Exception](Dedup.dupPairs(spark, dir).collect())
+      val msg = Option(e.getMessage).getOrElse("") +
+        Option(e.getCause).flatMap(c => Option(c.getMessage)).getOrElse("")
+      assert(msg.contains("maxBucket=3"), s"wrong failure: $e")
+      intercept[Exception](Dedup.clusterLabels(spark, dir).collect())
+      // the error's own remedy, in the same session: raise the cap
+      spark.conf.set("spark.graft.dedup.maxBucket", "10")
+      assert(Dedup.dupPairs(spark, dir).collect().length == 45,
+        "raised maxBucket returned the failing memoized pair plan")
+      assert(Dedup.clusterLabels(spark, dir).collect().length == 10,
+        "raised maxBucket returned the failing memoized labels plan")
+    } finally {
+      spark.conf.unset("spark.graft.dedup.maxBucket")
+      spark.conf.unset("spark.graft.dupgraph.cache")
+      Derivations.clear()
+    }
+  }
+
   test("below the cap the guard is invisible: complete pair set, exact jaccard") {
     val dir = corpusDir(10)
     // default cap (100000) — guard passes; 10 identical docs yield all

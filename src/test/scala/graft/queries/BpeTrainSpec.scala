@@ -4,6 +4,7 @@ import graft.{NamedQuery, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** t20's trainer pinned against a THIRD implementation (the
   * SemDedupRecountSpec pattern): a plain-Scala greedy BPE loop over a
@@ -182,14 +183,14 @@ class BpeTrainSpec extends SparkSpec {
     val isolated = Seq("t20_bpe_train", "t21_bpe_apply").map(n => n -> rows(n)).toMap
     spark.conf.set("spark.graft.bpe.cache", "true")
     try {
-      TextOps.clearBpeCache()
+      Derivations.clear()
       val cached = Seq("t20_bpe_train", "t21_bpe_apply").map(n => n -> rows(n)).toMap
-      assert(TextOps.bpeTrainMemo.size == 1,
-        s"expected ONE shared trainer memo entry, got ${TextOps.bpeTrainMemo.size}")
+      val trainers = Derivations.entries.keySet.asScala.count(_._3 == "t20_bpe_train")
+      assert(trainers == 1, s"expected ONE shared trainer memo entry, got $trainers")
       assert(cached == isolated, "memoized trainer changed t20/t21 results")
     } finally {
       spark.conf.unset("spark.graft.bpe.cache")
-      TextOps.clearBpeCache()
+      Derivations.clear()
     }
   }
 
@@ -284,7 +285,7 @@ class BpeTrainSpec extends SparkSpec {
       }
     } finally {
       spark.conf.unset("spark.graft.bpe.cache")
-      TextOps.clearBpeCache()
+      Derivations.clear()
     }
   }
 }

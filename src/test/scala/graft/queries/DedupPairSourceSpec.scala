@@ -59,7 +59,7 @@ class DedupPairSourceSpec extends SparkSpec {
     val priorCache = spark.conf.getOption(cacheKey)
     spark.conf.set(cacheKey, "true")
     try {
-      Dedup.clearDupGraphCache()
+      Derivations.clear()
       val exactPlan = withPairSource(Some("exact"))(Dedup.dupPairs(spark, sf()))
       // flipping the source must build a fresh plan, not hand back the
       // memoized exact relation under a banded label (and vice versa)
@@ -87,7 +87,7 @@ class DedupPairSourceSpec extends SparkSpec {
         case Some(v) => spark.conf.set(cacheKey, v)
         case None    => spark.conf.unset(cacheKey)
       }
-      Dedup.clearDupGraphCache()
+      Derivations.clear()
     }
   }
 

@@ -121,7 +121,7 @@ object DedupScalingSweep {
 
     val results = for ((mode, confs) <- modes; k <- sizes)
       yield (mode, k, timeComposition(dirs(k), confs))
-    Dedup.clearDupGraphCache()
+    Derivations.clear()
     val load1 = loadAvg()
 
     def wall(mode: String, k: Int): Double =

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
 class DirtyEmbeddingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
-    Similarity.clearEmbedCache()
+    Derivations.clear()
     super.afterAll()
   }
 
@@ -85,7 +85,7 @@ class DirtyEmbeddingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
       val e = intercept[Exception](run(dirtyDirs(what)).collect())
       assert(messages(e).exists(_.contains(s"dirty embedding at vec_id $DirtyId:")),
         s"$entry on a $what: wrong failure\n${messages(e).mkString("\n")}")
-      Similarity.clearEmbedCache()
+      Derivations.clear()
     }
   }
 
@@ -108,7 +108,7 @@ class DirtyEmbeddingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
   test("a clean corpus returns the same rows as before the guard") {
     val got = entryPoints.map { case (entry, run) =>
       val fp = fingerprint(run(sf()))
-      Similarity.clearEmbedCache()
+      Derivations.clear()
       entry -> fp
     }.toMap
     assert(got.values.forall(_._1 > 0), s"an entry point returned no rows: $got")

@@ -24,7 +24,7 @@ class DupGraphCacheSpec extends SparkSpec {
     val prior = spark.conf.getOption(confKey)
     spark.conf.set(confKey, "true")
     try {
-      Dedup.clearDupGraphCache()
+      Derivations.clear()
       // memo hit: the second lookup returns the very same plan object
       val first = Dedup.clusterLabels(spark, sf())
       assert(Dedup.clusterLabels(spark, sf()) eq first, "dup-graph memo did not hit")
@@ -79,7 +79,7 @@ class DupGraphCacheSpec extends SparkSpec {
         case Some(v) => spark.conf.set(confKey, v)
         case None    => spark.conf.unset(confKey)
       }
-      Dedup.clearDupGraphCache()
+      Derivations.clear()
     }
   }
 }

@@ -24,10 +24,10 @@ import org.apache.spark.sql.functions.col
 class EmbedPairSourceSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   // builders in this suite register persisted intermediates via
-  // Similarity.trackedPersist — reclaim them so a full-suite run over a
+  // Derivations.persist — reclaim them so a full-suite run over a
   // shared session doesn't accumulate cache entries (round-10 ADVICE)
   override def afterAll(): Unit = {
-    Similarity.clearEmbedCache()
+    Derivations.clear()
     super.afterAll()
   }
 

@@ -10,7 +10,7 @@ import graft.SparkSpec
 class PqRefreshSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
-    Similarity.clearEmbedCache()
+    Derivations.clear()
     super.afterAll()
   }
 

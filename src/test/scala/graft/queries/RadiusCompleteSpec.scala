@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions.col
 class RadiusCompleteSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
-    Similarity.clearEmbedCache()
+    Derivations.clear()
     super.afterAll()
   }
 

@@ -19,8 +19,7 @@ import org.apache.spark.sql.functions.col
 class RecallGuardPlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
-    Similarity.clearEmbedCache()
-    Dedup.clearDupGraphCache()
+    Derivations.clear()
     super.afterAll()
   }
 
@@ -42,7 +41,7 @@ class RecallGuardPlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     try {
       val guarded = planOf(Dedup.dupPairs(spark, sf()))
       spark.conf.unset("spark.graft.dedup.minRecallBp")
-      Dedup.clearDupGraphCache()
+      Derivations.clear()
       val bare = planOf(Dedup.dupPairs(spark, sf()))
       def broadcasts(p: String): Int =
         "BroadcastExchange".r.findAllIn(p).length

@@ -30,8 +30,7 @@ import org.apache.spark.sql.functions.col
 class RecallGuardSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
-    Similarity.clearEmbedCache()
-    Dedup.clearDupGraphCache()
+    Derivations.clear()
     super.afterAll()
   }
 

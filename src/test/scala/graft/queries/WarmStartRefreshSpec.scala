@@ -9,7 +9,7 @@ import graft.SparkSpec
 class WarmStartRefreshSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
-    Similarity.clearEmbedCache()
+    Derivations.clear()
     super.afterAll()
   }
 

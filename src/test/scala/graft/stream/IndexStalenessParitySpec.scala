@@ -21,7 +21,7 @@ class IndexStalenessParitySpec extends SparkSpec
     with org.scalatest.BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
-    graft.queries.Similarity.clearEmbedCache()
+    graft.queries.Derivations.clear()
     super.afterAll()
   }
 

@@ -18,7 +18,7 @@ class LiveServingParitySpec extends SparkSpec
     with org.scalatest.BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
-    graft.queries.Similarity.clearEmbedCache()
+    graft.queries.Derivations.clear()
     super.afterAll()
   }
 

@@ -15,7 +15,7 @@ class PqStalenessParitySpec extends SparkSpec
     with org.scalatest.BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
-    graft.queries.Similarity.clearEmbedCache()
+    graft.queries.Derivations.clear()
     super.afterAll()
   }
 
