@@ -229,7 +229,7 @@ object Bench {
     // first timed query doesn't absorb one-off session startup costs.
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
-      try { spark.read.parquet(s"$sfDir/$t.parquet").count(): Unit }
+      try { graft.tables.Tables.load(spark, sfDir, t).count(): Unit }
       catch { case _: Throwable => () }
     }
     // Each query runs `repeat` times and reports every run; consumers read

@@ -39,10 +39,11 @@ object Harness {
   /** Drops everything a timed run can leave warm for the next one: the
     * CacheManager entries (`persist()` of an intermediate, keyed by
     * canonicalized plan), the session registry of derived data
-    * (`graft.queries.Derivations`: its memo and tracked persists), and
-    * RDD-level persists such as the lineage-cut edges, which the
-    * CacheManager does not track and whose MEMORY_AND_DISK blocks would
-    * otherwise pile up and pressure later timings. */
+    * (`graft.queries.Derivations`: its memo, the table schemas, the
+    * tracked persists and the lineage-cut RDDs), and any other RDD-level
+    * persist, which the CacheManager does not track and whose
+    * MEMORY_AND_DISK blocks would otherwise pile up and pressure later
+    * timings. */
   def clearCaches(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     graft.queries.Derivations.clear()

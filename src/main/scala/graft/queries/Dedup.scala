@@ -519,8 +519,7 @@ object Dedup {
     * broadcasts inside it costs nothing measurable. */
   private[queries] def constructionPersist(s: org.apache.spark.sql.SparkSession,
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    withLineageCutConfs(s)(
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    withLineageCutConfs(s)(Derivations.persist(df))
 
   private def withLineageCutConfs[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
     val toggles = Seq(
@@ -560,7 +559,7 @@ object Dedup {
   private[queries] def lineageCut(s: org.apache.spark.sql.SparkSession,
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     withLineageCutConfs(s)(
-      org.apache.spark.sql.graftshim.PartitioningPreservingCut.cut(df))
+      org.apache.spark.sql.graftshim.PartitioningPreservingCut.cut(df, Derivations.trackRdd))
 
   /** Connected components over an undirected pair list — the reusable CC
     * core, with two propagation strategies selected by the graph's

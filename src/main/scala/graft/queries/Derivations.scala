@@ -1,14 +1,17 @@
 package graft.queries
 
 import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** The session registry for derived data: the relations (and plans) that
   * several queries of one session share — the embedding family's
   * quantized corpus and trained models, the recall certificates, the dup
-  * graph and its pair relation, the BPE trainer — each built once per
-  * key and handed back on every later ask.
+  * graph and its pair relation, the BPE trainer, the parquet tables'
+  * inferred schemas — each built once per key and handed back on every
+  * later ask.
   *
   * KEYING RULE — a derivation's key is (session, dataset dir, name, the
   * values of the confs that change what the build returns).  A conf that
@@ -20,6 +23,16 @@ import org.apache.spark.storage.StorageLevel
   * changes physical layout stays out: `spark.graft.scan.spreadBytes`
   * decides how a small scan spreads over partitions, never which rows it
   * returns, so keying on it would only split one derivation in two.
+  *
+  * A table's schema (`table:<name>`, [[graft.tables.Tables.load]]) is
+  * keyed on its file stamp — the sorted (path, length, mtime) of its leaf
+  * files, so a rewritten table is inferred again — and on the session's
+  * WHOLE conf snapshot.  Spark's parquet inference reads about a dozen
+  * SQL confs (timestamp NTZ and nanos handling, binary-as-string,
+  * int96-as-timestamp and schema merging among them) and the list moves
+  * between Spark releases; a hand-picked subset could miss one and hand
+  * back a schema inferred under another value, while the whole snapshot
+  * can only cost a miss.
   *
   * Strong session refs are intentional (a library-lifetime cache);
   * [[clear]] drops them — tests, the timing harnesses and long-lived
@@ -33,6 +46,26 @@ private[graft] object Derivations {
 
   /** Persists registered by [[persist]], unpersisted by [[clear]]. */
   private val persisted = ConcurrentHashMap.newKeySet[DataFrame]()
+
+  /** Persisted RDDs registered by [[trackRdd]], held WEAKLY: an RDD no
+    * plan reaches any more is still reclaimed by the ContextCleaner, and
+    * [[clear]] unpersists the ones still alive. */
+  private val rdds = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(new java.util.WeakHashMap[RDD[_], java.lang.Boolean]()))
+
+  /** One derivation name's counters since the last [[clear]]: asks
+    * answered from the memo, builds, and the builds' summed wall time
+    * (a nested build's time also counts in the build that asked). */
+  final case class Stats(hits: Long, builds: Long, buildMs: Double) {
+    def +(o: Stats): Stats = Stats(hits + o.hits, builds + o.builds, buildMs + o.buildMs)
+  }
+
+  private val stats = new ConcurrentHashMap[String, Stats]()
+
+  private def count(name: String, st: Stats): Unit = { stats.merge(name, st, _ + _); () }
+
+  /** The per-name counters since the last [[clear]]. */
+  def report(): Map[String, Stats] = stats.asScala.toMap
 
   /** The derivation `name` over `dir`, built at most once per key.
     *
@@ -50,11 +83,17 @@ private[graft] object Derivations {
       (build: => T): T = {
     val key = (s, dir, name, shaping.toList)
     val hit = entries.get(key)
-    if (hit != null) hit.asInstanceOf[T]
+    if (hit != null) { count(name, Stats(1, 0, 0)); hit.asInstanceOf[T] }
     else entries.synchronized {
       val again = entries.get(key)
-      if (again != null) again.asInstanceOf[T]
-      else { val built = build; entries.put(key, built); built }
+      if (again != null) { count(name, Stats(1, 0, 0)); again.asInstanceOf[T] }
+      else {
+        val t0 = System.nanoTime()
+        val built = build
+        entries.put(key, built)
+        count(name, Stats(0, 1, (System.nanoTime() - t0) / 1e6))
+        built
+      }
     }
   }
 
@@ -68,12 +107,13 @@ private[graft] object Derivations {
     p
   }
 
-  /** Unpersists every tracked persist (blocking = false, so an in-flight
-    * reader finishes from lineage) and empties the memo.  The dedup
-    * tier's lineage-cut persists (`Dedup.constructionPersist`) are not
-    * tracked: they stay registered in the session's CacheManager until
-    * `spark.catalog.clearCache()`, which `graft.Harness.clearCaches`
-    * also runs. */
+  /** Tracks an already persisted RDD (a lineage cut's row copies) for
+    * [[clear]]. */
+  def trackRdd(rdd: RDD[_]): Unit = { rdds.add(rdd); () }
+
+  /** Unpersists every tracked persist and RDD (blocking = false, so an
+    * in-flight reader finishes from lineage), empties the memo and resets
+    * the counters. */
   def clear(): Unit = {
     val it = persisted.iterator()
     while (it.hasNext) {
@@ -81,6 +121,12 @@ private[graft] object Derivations {
       catch { case _: Throwable => () } // a stopped session has nothing to drop
       it.remove()
     }
+    val cut = rdds.synchronized { val all = rdds.asScala.toList; rdds.clear(); all }
+    cut.foreach { r =>
+      try r.unpersist(blocking = false)
+      catch { case _: Throwable => () }
+    }
     entries.clear()
+    stats.clear()
   }
 }

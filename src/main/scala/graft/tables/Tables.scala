@@ -11,8 +11,37 @@ import org.apache.spark.sql.functions._
   * `PushedFilters`/`ReadSchema` reaching these scans in `.explain("formatted")`.
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The table `name` under `dir`, resolved once per session: parquet
+    * schema inference runs a Spark job per read, so the inferred schema
+    * is a [[graft.queries.Derivations]] entry (`table:<name>`, keyed on
+    * the table's file stamp and the whole conf snapshot — the registry's
+    * scaladoc says why), and every call reads with it.  Each call still
+    * returns a fresh relation with fresh attribute ids, so two loads of
+    * one table self-join like two plain reads. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema = graft.queries.Derivations.memo(spark, dir, s"table:$name",
+        fileStamp(spark, path), spark.conf.getAll) {
+      spark.read.parquet(path).schema
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The sorted (path, length, mtime) of every leaf file under `path`
+    * (empty when it does not exist: the read then fails as it always
+    * did, and a failed build is not memoized). */
+  private def fileStamp(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = Seq.newBuilder[(String, Long, Long)]
+    try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    } catch { case _: java.io.FileNotFoundException => () }
+    files.result().sorted
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "nation")
@@ -44,7 +73,9 @@ object Tables {
 
   def events(spark: SparkSession, dir: String): DataFrame = {
     // Both confs are consulted at SCHEMA INFERENCE, which `load` performs
-    // eagerly — so they are set only around the load and restored after
+    // eagerly on a memo miss (the memo keys on the conf snapshot, so the
+    // scoped values select their own entry) — so they are set only around
+    // the load and restored after
     // (per-read options are NOT honored for these keys; verified
     // empirically).  The NTZ-inference toggle is restored unconditionally:
     // leaving it off would silently retype NTZ-annotated timestamp columns

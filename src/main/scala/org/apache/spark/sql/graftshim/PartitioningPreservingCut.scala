@@ -22,7 +22,8 @@ import org.apache.spark.storage.StorageLevel
   * It truncates the plan to a leaf and registers zero CacheManager
   * entries: blocks are dropped by the ContextCleaner once the plan
   * objects are unreachable (SparkContext tracks persisted RDDs weakly),
-  * the bounded-growth guarantee long-lived sessions need.  Rows are
+  * the bounded-growth guarantee long-lived sessions need, or earlier by
+  * whoever `track` hands the persisted RDD to.  Rows are
   * copied because the execution RDD yields reused UnsafeRow buffers —
   * caching them uncopied would alias every row in a partition to the
   * last one.  `_SER` was A/B'd and lost (d6 4.2 s vs 5.1 s): every
@@ -48,11 +49,13 @@ object PartitioningPreservingCut {
   /** The cut, persisted as row copies at MEMORY_AND_DISK (must spill,
     * not OOM): every caller's relation has several consumers (a round's
     * argmax and the next round), which an unpersisted cut would each
-    * recompute from the top. */
-  def cut(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    * recompute from the top.  `track` receives the persisted RDD. */
+  def cut(df: org.apache.spark.sql.DataFrame,
+      track: org.apache.spark.rdd.RDD[_] => Unit): org.apache.spark.sql.DataFrame = {
     val ds = df.asInstanceOf[Dataset[org.apache.spark.sql.Row]]
     graft.RetiredConf.reject(ds.sparkSession, "spark.graft.cut.persist", "rdd")
     val rdd = ds.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+    track(rdd)
     Dataset.ofRows(ds.sparkSession, LogicalRDD.fromDataset(rdd, ds, isStreaming = false))
   }
 }

@@ -1,15 +1,17 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** The session registry for derived data: nested builds on the one map,
-  * one build per key under concurrent asks, and `clear()` reclaiming
-  * both the memo and the tracked persists.  Shaping values in the key
-  * are exercised by DupGraphCacheSpec and BandedHotBucketSpec. */
+  * one build per key under concurrent asks, `clear()` reclaiming the
+  * memo, the tracked persists and the dedup tier's construction persists
+  * and lineage cuts, and the per-name hit/build counters.  Shaping values
+  * in the key are exercised by DupGraphCacheSpec and BandedHotBucketSpec,
+  * the table entries by graft.tables.TableSchemaMemoSpec. */
 class DerivationsSpec extends SparkSpec {
 
   private val dir = "derivations-spec"
@@ -63,5 +65,44 @@ class DerivationsSpec extends SparkSpec {
     Derivations.clear()
     assert(p.storageLevel == StorageLevel.NONE)
     assert(Derivations.entries.isEmpty)
+  }
+
+  test("report() counts one build per table of q3 and a hit for every later load") {
+    Derivations.clear()
+    val q3 = SparkEntry.queries("q3_star_join_revenue")
+    def tables = Derivations.report().filter(_._1.startsWith("table:"))
+    q3(spark, sf()).collect()
+    val once = tables
+    q3(spark, sf()).collect()
+    val twice = tables
+    assert(once.keySet == Set("lineitem", "orders", "customer", "nation", "region")
+      .map("table:" + _))
+    once.foreach { case (name, st) =>
+      assert(st.builds == 1 && st.buildMs > 0, s"$name after one run: $st")
+      val loadsPerRun = st.hits + 1
+      assert(twice(name) == st.copy(hits = 2 * loadsPerRun - 1), s"$name after two runs")
+    }
+    Derivations.clear()
+    assert(Derivations.report().isEmpty)
+  }
+
+  test("clear() releases the dup graph's construction persists and lineage cuts") {
+    val key = "spark.graft.dupgraph.cache"
+    val prior = spark.conf.getOption(key)
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    spark.catalog.clearCache()
+    Derivations.clear()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    spark.conf.set(key, "true")
+    try {
+      assert(Dedup.clusterLabels(spark, sf()).count() > 0)
+      assert(!cacheManager.isEmpty, "the build registered no construction persist")
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty)
+      Derivations.clear()
+      assert(cacheManager.isEmpty, "clear() left CacheManager entries")
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"clear() left persistent RDDs $left")
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
