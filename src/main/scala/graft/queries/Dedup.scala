@@ -285,10 +285,34 @@ object Dedup {
   private def maxBucketConf(s: org.apache.spark.sql.SparkSession): Long =
     s.conf.getOption("spark.graft.dedup.maxBucket").map(_.toLong).getOrElse(100000L)
 
-  /** The shaping values of a pair relation built from `source`: the
-    * banded plan also bakes in the hot-bucket cap. */
-  private def pairShaping(s: org.apache.spark.sql.SparkSession, source: String): Seq[Any] =
-    if (source == "banded") Seq(source, maxBucketConf(s)) else Seq(source)
+  /** The shaping values of a pair relation built from `source` over
+    * `dir`: the corpus's file stamp (a rewritten `documents.parquet` is
+    * a miss, not a stale graph), the source, and for the banded plan the
+    * hot-bucket cap it bakes in. */
+  private def pairShaping(s: org.apache.spark.sql.SparkSession, dir: String,
+      source: String): Seq[Any] =
+    graft.tables.Tables.fileStamp(s, dir, "documents") +:
+      (if (source == "banded") Seq(source, maxBucketConf(s)) else Seq(source))
+
+  /** The `dupPairs` derivation for `source` (the registry entry d13's
+    * sides share with the graph): the pair relation `build` returns,
+    * persisted once per key. */
+  private def pairDerivation(s: org.apache.spark.sql.SparkSession, dir: String,
+      source: String)(build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    Derivations.memo(s, dir, "dupPairs", pairShaping(s, dir, source): _*)(
+      constructionPersist(s, build.select(col("doc_a"), col("doc_b"))))
+
+  /** The dup graph is always a shared derivation; `false` (the per-query
+    * rebuild) is retired. */
+  private def rejectUnsharedGraph(s: org.apache.spark.sql.SparkSession): Unit =
+    graft.RetiredConf.reject(s, "spark.graft.dupgraph.cache", "true")
+
+  /** A session derivation holding lineage cuts (the dup graph's labels,
+    * the BPE trainer) re-checks the retired columnar cut on EVERY ask:
+    * a memo hit builds no cut, so [[lineageCut]]'s own check alone would
+    * let the retired columnar value pass silently. */
+  private[queries] def rejectRetiredCut(s: org.apache.spark.sql.SparkSession): Unit =
+    graft.RetiredConf.reject(s, "spark.graft.cut.persist", "rdd")
 
   /** The per-doc distinct word-trigram shingle ARRAY relation
     * `(doc_id, sharr, n_sh)` — the dedup tier's scan-side base (r18):
@@ -700,26 +724,20 @@ object Dedup {
         s"spark.graft.dedup.pairs must be 'exact' or 'banded', got '$other'")
     }
 
-  /** The ≥0.5 global Jaccard pairs, cache-aware — the shared input
-    * of [[clusterLabels]] and the d13 audit.  Per-query isolation by
-    * default; under `spark.graft.dupgraph.cache` the pair plan is
-    * memoized AND persisted (MEMORY_AND_DISK: the pair relation is
-    * small, but must spill rather than OOM on a pathological corpus),
+  /** The ≥0.5 global Jaccard pairs — the shared input of
+    * [[clusterLabels]] and the d13 audit, a session derivation: the pair
+    * plan is memoized AND persisted (MEMORY_AND_DISK: the pair relation
+    * is small, but must spill rather than OOM on a pathological corpus),
     * materializing once per session for every consumer. */
   def dupPairs(s: org.apache.spark.sql.SparkSession, dir: String,
       sourceOverride: Option[String] = None): org.apache.spark.sql.DataFrame = {
     TextOps.rejectPrefixFilterOverride(s)
+    rejectUnsharedGraph(s)
     val source = sourceOverride.getOrElse(pairSourceConf(s))
-    def build() = source match {
-      case "banded" => bandedJaccardPairs(s, dir).select(col("doc_a"), col("doc_b"))
+    def built() = pairDerivation(s, dir, source)(source match {
+      case "banded" => bandedJaccardPairs(s, dir)
       case _ => TextOps.adaptiveJaccardPairs(s, dir, 0.5, global = true)
-        .select(col("doc_a"), col("doc_b"))
-    }
-    def built() =
-      if (s.conf.getOption("spark.graft.dupgraph.cache").exists(_.toBoolean))
-        Derivations.memo(s, dir, "dupPairs", pairShaping(s, source): _*)(
-          constructionPersist(s, build()))
-      else build()
+    })
     // RECALL-FLOOR GUARD — `spark.graft.embed.minRecallBp`'s dedup analog
     // (round-10 verdict #4): a conf-selected `banded` source under
     // `spark.graft.dedup.minRecallBp` measures the d13 certificate
@@ -794,34 +812,29 @@ object Dedup {
     * global Jaccard graph — the d6 query body, reusable by composed
     * pipelines (c1, d9).
     *
-    * By default each caller builds its own graph (per-query isolation —
-    * the gate contract).  With `spark.graft.dupgraph.cache=true` the
-    * labels plan is memoized per session and dir, shaped by the cc round
-    * count and the pair source: c1/d6/d9 in one session then share ONE
-    * pair-generation + propagation (the dominant cost — the three
-    * queries rebuild an identical graph ~3× at gate time), with results
-    * proven identical by DupGraphCacheSpec. */
+    * A session derivation, keyed by the corpus stamp, the cc round
+    * count, the pair source and the recall-guard confs (the labels sit
+    * over [[dupPairs]]' guarded relation): c1/d6/d9 in one session share ONE
+    * pair-generation + propagation (the dominant cost of all three).
+    * The build only CONSTRUCTS the plan (zero-jobs-at-construction
+    * contract — lineage cuts materialize at first action), so holding
+    * the registry's monitor during it is milliseconds. */
   def clusterLabels(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val ccRounds = s.conf.getOption("spark.graft.cc.rounds")
       .map(_.toInt).getOrElse(DefaultCcRounds)
     TextOps.rejectPrefixFilterOverride(s)
-    val pairSource = pairSourceConf(s)
-    def build(): org.apache.spark.sql.DataFrame = {
-      // exact global Jaccard pairs at >= 0.5 — scale-adaptive: the naive
-      // shingle self-join for small corpora, the AllPairs/PPJoin prefix
-      // filter at scale, where the naive join's quadratic blowup on
-      // frequent shingles is the one thing that wouldn't survive 100 TB
-      // (both provably identical to the recursive-CTE oracle's pair set —
-      // equivalence spec-tested in both scopes)
+    rejectUnsharedGraph(s)
+    rejectRetiredCut(s)
+    val guardConfs = Seq("spark.graft.dedup.minRecallBp", "spark.graft.dedup.recallGuard",
+      "spark.graft.dedup.recallSampleMod").map(s.conf.getOption)
+    Derivations.memo(s, dir, "clusterLabels",
+        (ccRounds +: pairShaping(s, dir, pairSourceConf(s))) ++ guardConfs: _*) {
+      // the ≥ 0.5 pairs come from the configured source — banded, or the
+      // scale-adaptive exact join (naive shingle self-join when small,
+      // the AllPairs/PPJoin prefix filter at scale), both identical to
+      // the recursive-CTE oracle's pair set on the certified corpus
       propagateLabels(s, dupPairs(s, dir), ccRounds)
     }
-    if (s.conf.getOption("spark.graft.dupgraph.cache").exists(_.toBoolean))
-      // build() only CONSTRUCTS the plan (zero-jobs-at-construction
-      // contract — lineage cuts materialize at first action), so holding
-      // the registry's monitor during the build is milliseconds
-      Derivations.memo(s, dir, "clusterLabels",
-        ccRounds +: pairShaping(s, pairSource): _*)(build())
-    else build()
   }
 
   /** The exact global ≥0.5 Jaccard pair relation as DuckDB CTEs (through
@@ -1017,34 +1030,26 @@ object Dedup {
     "d13_banding_recall",
     (s, dir) => {
       // Both pair relations feed TWO consumers each (the overlap join and
-      // a count aggregate); without a persist Spark evaluates each full
-      // pipeline twice — the exact side skips it when the dupgraph cache
-      // already holds the persisted shared relation.  The ground-truth
-      // side is PINNED to the exact source: under
+      // a count aggregate), so each side is its persisted `dupPairs`
+      // derivation: a side the session already holds (c1/d6/d9 built it)
+      // is taken from the registry, a side built here is left there for
+      // them.  The ground-truth side is PINNED to the exact source: under
       // spark.graft.dedup.pairs=banded the audit must still measure the
       // banded tier against the exact relation, not against itself.
       //
-      // The two sides SHARE one persisted shingle relation (round-10
-      // verdict #6): the exploded word-trigram shingles are the dominant
-      // shared cost (each side used to tokenize + explode the corpus from
-      // scratch), and sharing changes no output — both sides read the
-      // identical relation they each built before.  Under the dupgraph
-      // cache the exact side instead comes from the session memo (already
-      // materialized once for c1/d6/d9), so only the banded side shingles.
+      // The sides this audit builds SHARE one persisted shingle relation
+      // (round-10 verdict #6): the exploded word-trigram shingles are the
+      // dominant shared cost (each side used to tokenize + explode the
+      // corpus from scratch), and sharing changes no output — both sides
+      // read the identical relation they each built before.
       graft.sentiment.GraftFunctions.register(s)
-      val cacheOn =
-        s.conf.getOption("spark.graft.dupgraph.cache").exists(_.toBoolean)
-      val sharedDocs =
-        if (cacheOn) None
-        else Some(constructionPersist(s, docShingleArrays(s, dir)))
-      val exact =
-        if (cacheOn) dupPairs(s, dir, sourceOverride = Some("exact"))
-        else constructionPersist(s,
-          TextOps.adaptiveJaccardPairs(s, dir, 0.5, global = true,
-            sharedDocs.map(d => constructionPersist(s, explodedShinglesOf(d))))
-            .select(col("doc_a"), col("doc_b")))
-      val banded = constructionPersist(s,
-        bandedJaccardPairs(s, dir, sharedDocs).select(col("doc_a"), col("doc_b")))
+      rejectUnsharedGraph(s)
+      lazy val sharedDocs = constructionPersist(s, docShingleArrays(s, dir))
+      val exact = pairDerivation(s, dir, "exact")(
+        TextOps.adaptiveJaccardPairs(s, dir, 0.5, global = true,
+          Some(constructionPersist(s, explodedShinglesOf(sharedDocs)))))
+      val banded = pairDerivation(s, dir, "banded")(
+        bandedJaccardPairs(s, dir, Some(sharedDocs)))
       val hits = banded.join(exact, Seq("doc_a", "doc_b"))
       val ne = exact.agg(count(lit(1)).as("n_exact"))
       val nb = banded.agg(count(lit(1)).as("n_banded"))

@@ -13,6 +13,10 @@ import scala.jdk.CollectionConverters._
   * inferred schemas — each built once per key and handed back on every
   * later ask.
   *
+  * POLICY — derived data is always shared per session; [[clear]] is the
+  * one way to isolate (the timing harnesses call it between queries
+  * through `Harness.clearCaches`).
+  *
   * KEYING RULE — a derivation's key is (session, dataset dir, name, the
   * values of the confs that change what the build returns).  A conf that
   * changes what a derivation returns goes in its key, so flipping it
@@ -23,6 +27,10 @@ import scala.jdk.CollectionConverters._
   * changes physical layout stays out: `spark.graft.scan.spreadBytes`
   * decides how a small scan spreads over partitions, never which rows it
   * returns, so keying on it would only split one derivation in two.
+  * A derivation built from a table also keys on the table's file stamp
+  * ([[graft.tables.Tables.fileStamp]]): the dup graph, its pair
+  * relations and the BPE trainer key on `documents`, so a corpus
+  * rewritten in place is a miss, not a stale graph.
   *
   * A table's schema (`table:<name>`, [[graft.tables.Tables.load]]) is
   * keyed on its file stamp — the sorted (path, length, mtime) of its leaf

@@ -1956,11 +1956,10 @@ object TextOps {
   private[queries] def bpeTrainLoop(s: SparkSession,
       dir: String): (Seq[DataFrame], DataFrame) = {
     graft.sentiment.GraftFunctions.register(s)
-    val sample = Tables.documents(s, dir)
+    val sample = Derivations.persist(Tables.documents(s, dir)
       .filter(col("doc_id") % 20 === 0)
       .filter(col("text").isNotNull && col("text") =!= "")
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), tokens(col("text")).as("toks")))
     def encodedUnder(bests: Seq[DataFrame]): DataFrame =
       if (bests.isEmpty) sample
       else sample.crossJoin(broadcast(bpeMergesRow(bests)))
@@ -1981,18 +1980,18 @@ object TextOps {
       .select(col("doc_id"), posexplode(col("toks")).as(Seq("seq", "tok"))))
   }
 
-  /** [[bpeTrainLoop]], memoized per (session, dir) under the opt-in
-    * `spark.graft.bpe.cache=true`: a composed pipeline that runs t20
-    * (inspect the merge table) and then t21 (encode the corpus) trains
-    * ONCE — reusing the DataFrames reuses the persisted lineage-cut
-    * blocks inside them, so the sample rounds materialize once per
-    * session.  Per-query isolation (the gate contract) stays the
-    * default. */
+  /** [[bpeTrainLoop]] as a session derivation, keyed on the corpus's
+    * file stamp: t20 (inspect the merge table), t21 (encode the corpus)
+    * and t22 over one corpus train ONCE — reusing the DataFrames reuses
+    * the persisted lineage-cut blocks inside them, so the sample rounds
+    * materialize once per session. */
   private def bpeTrainLoopCached(s: SparkSession,
-      dir: String): (Seq[DataFrame], DataFrame) =
-    if (s.conf.getOption("spark.graft.bpe.cache").exists(_.toBoolean))
-      Derivations.memo(s, dir, "t20_bpe_train")(bpeTrainLoop(s, dir))
-    else bpeTrainLoop(s, dir)
+      dir: String): (Seq[DataFrame], DataFrame) = {
+    RetiredConf.reject(s, "spark.graft.bpe.cache", "true")
+    Dedup.rejectRetiredCut(s)
+    Derivations.memo(s, dir, "t20_bpe_train", Tables.fileStamp(s, dir, "documents"))(
+      bpeTrainLoop(s, dir))
+  }
 
   val t20BpeTrain = NamedQuery(
     "t20_bpe_train",

@@ -21,17 +21,20 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val schema = graft.queries.Derivations.memo(spark, dir, s"table:$name",
-        fileStamp(spark, path), spark.conf.getAll) {
+        fileStamp(spark, dir, name), spark.conf.getAll) {
       spark.read.parquet(path).schema
     }
     spark.read.schema(schema).parquet(path)
   }
 
-  /** The sorted (path, length, mtime) of every leaf file under `path`
-    * (empty when it does not exist: the read then fails as it always
-    * did, and a failed build is not memoized). */
-  private def fileStamp(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(path)
+  /** The sorted (path, length, mtime) of every leaf file of the table
+    * `name` under `dir` (empty when it does not exist: the read then
+    * fails as it always did, and a failed build is not memoized).  A
+    * derivation built from a table keys on its stamp, so a table
+    * rewritten in place is a miss. */
+  private[graft] def fileStamp(spark: SparkSession, dir: String,
+      name: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
     val files = Seq.newBuilder[(String, Long, Long)]
     try {
       val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)

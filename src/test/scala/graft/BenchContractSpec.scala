@@ -37,15 +37,17 @@ class BenchContractSpec extends AnyFunSuite {
     // while load_after hit 25.62 with 11 spike retries + 6 watchdog
     // dumps — that shape MUST flag contended now
     assert(Bench.contendedFlag(1.82, 25.62, 32, 11 + 6))
-    // load_after is judged WIDTH-RELATIVE (r17): a local[4] pass seeing
-    // 25.62 is externally slammed; a local[32] pass seeing the same
-    // number is indistinguishable from its own self-load by the sample
-    // alone — there the defense-firing count is the real signal (the
-    // r16 driver artifact carried 17 of them)
+    // load_after is judged against the pass's own cores.  The r16/r17
+    // fixtures recorded no CPU time, so they take their width, the
+    // upper bound a local[N] pass's task threads can use (the rule's
+    // fallback): a local[4] pass seeing 25.62 is externally slammed; a
+    // local[32] pass seeing the same number is indistinguishable from
+    // its own self-load by the sample alone — there the defense-firing
+    // count is the real signal (the r16 scaling artifact carried 17)
     assert(Bench.contendedFlag(1.82, 25.62, 4, 0), "load_after must flag at width 4")
-    assert(Bench.contendedFlag(1.82, 40.0, 32, 0), "width+3 exceeded must flag at width 32")
+    assert(Bench.contendedFlag(1.82, 40.0, 32, 0), "own+3 exceeded must flag at width 32")
     // a clean wide pass must NOT self-flag on its own executor load
-    // (this round's clean local[32] run: load_after 7.87, zero firings)
+    // (the r17 clean local[32] run: load_after 7.87, zero firings)
     assert(!Bench.contendedFlag(2.12, 7.87, 32, 0),
       "a clean scaling pass's own load must not taint the artifact")
     // the r13 rule is preserved: pre-run load alone still flags
@@ -57,6 +59,71 @@ class BenchContractSpec extends AnyFunSuite {
     assert(Bench.contendedFlag(1.0, 1.0, 4, 3))
     assert(!Bench.contendedFlag(1.0, 1.0, 4, 2),
       "a lone spike + dump on a clean box must not taint the artifact")
+  }
+
+  test("load_after is judged against the pass's own CPU use, not its width") {
+    // a local[4] pass that kept about one core busy: load_after 5 is
+    // ~4 of external load, which the r17 width+3 allowance (7) let through
+    assert(Bench.contendedFlag(0.5, 5.0, 1.0, 0),
+      "external load above a 1-core pass's own use must flag at local[4]")
+    // the same reading from a pass that kept its four cores busy is self-load
+    assert(!Bench.contendedFlag(0.5, 5.0, 4.0, 0))
+    // a measured graft.Bench run (sf0.1, 4 vCPU, one spike retry in the
+    // canonical pass): canonical local[4] load 1.30 -> 3.49 at 2.32 own
+    // cores, then scaling local[8] load 3.49 -> 3.78 at 2.33 own cores,
+    // starting at the canonical pass's 2.32.  Both read clean, the
+    // scaling pass only because load_before is netted against the JVM's
+    // own cores at its start, as contended() does
+    assert(!Bench.contendedFlag(1.30 - 0.0, 3.49, 2.32, 1))
+    assert(!Bench.contendedFlag(3.49 - 2.32, 3.78, 2.33, 0))
+    assert(Bench.contendedFlag(3.49, 3.78, 2.33, 0), "an absolute load_before flags it")
+  }
+
+  test("own_cores weighs the trailing minute load_after weighs, not the whole pass") {
+    def fold(shape: Seq[(Double, Double)]): Double = shape.foldLeft(0.0) {
+      case (c, (wallS, cores)) => Bench.trailingCores(c, wallS, wallS * cores)
+    }
+    // a steady rate converges to itself, and splitting an interval
+    // changes nothing (the decay composes)
+    assert(math.abs(fold(Seq.fill(120)((5.0, 3.0))) - 3.0) < 0.001)
+    assert(math.abs(fold(Seq((10.0, 2.0), (10.0, 2.0))) - fold(Seq((20.0, 2.0)))) < 1e-12)
+    // a clean wide pass: five driver-bound minutes at one busy core, then
+    // a last minute of eight busy task threads.  On a clean box the
+    // kernel's 1-min load average (every 5 s: load·e^(-5/60) + runnable·
+    // (1 - e^(-5/60))) ends where own_cores ends, so the pass reads clean
+    val shape = Seq.fill(60)((5.0, 1.0)) ++ Seq.fill(12)((5.0, 8.0))
+    val decay = math.exp(-5.0 / 60)
+    val loadAfter = shape.foldLeft(0.0) { case (l, (_, n)) => l * decay + n * (1 - decay) }
+    assert(math.abs(fold(shape) - loadAfter) < 1e-9)
+    assert(!Bench.contendedFlag(0.3, loadAfter, fold(shape), 0))
+    // the whole-pass mean (2.17 cores against a load_after of 5.42)
+    // compares two windows and would flag that clean pass itself
+    val wholePass = shape.map { case (w, n) => w * n }.sum / shape.map(_._1).sum
+    assert(Bench.contendedFlag(0.3, loadAfter, wholePass, 0))
+  }
+
+  test("the round-stamped snapshot never overwrites an existing file") {
+    val dir = java.nio.file.Files.createTempDirectory("bench-snapshot")
+    Seq("BENCH_r17.json", "BENCH_full_r18.json", "BENCH_full.json").foreach { n =>
+      java.nio.file.Files.writeString(dir.resolve(n), "{}")
+    }
+    val names = Bench.namesIn(dir)
+    assert(names == Set("BENCH_r17.json", "BENCH_full_r18.json", "BENCH_full.json"))
+    // the name always carries its round, 1 + the highest BENCH_r<N>
+    val name = Bench.snapshotName(names)
+    assert(name == "BENCH_full_r18.json")
+    assert(Bench.snapshotName(Set.empty) == "BENCH_full_r01.json")
+    // round 18's snapshot is already there: the write is refused, the file kept
+    def read(n: String) = java.nio.file.Files.readString(dir.resolve(n))
+    assert(!Bench.writeArtifact(dir.resolve(name), """{"run":2}""", createNew = true))
+    assert(read(name) == "{}")
+    // the stable name is rewritten by every run; a free round is written
+    assert(Bench.writeArtifact(dir.resolve("BENCH_full.json"), """{"run":2}""", createNew = false))
+    assert(read("BENCH_full.json") == """{"run":2}""")
+    val next = Bench.snapshotName(names + "BENCH_r18.json")
+    assert(next == "BENCH_full_r19.json")
+    assert(Bench.writeArtifact(dir.resolve(next), """{"run":2}""", createNew = true))
+    assert(read(next) == """{"run":2}""")
   }
 
   test("queries_runs keeps exactly `repeat` entries; the min still sees the retry") {
@@ -94,13 +161,6 @@ class BenchContractSpec extends AnyFunSuite {
     val prev = java.util.Locale.getDefault
     java.util.Locale.setDefault(java.util.Locale.GERMANY)
     try {
-      val pair = Bench.pairTierJson(
-        Some(Seq(("q_a", 1.25, 0.75), ("q\"b", 2.0, 3.5))), "warm1", "warm2")
-      val p = mapper.readTree(pair)
-      assert(p.get("q_a").get("warm1").asDouble == 1.25)
-      assert(p.get("warm1_total").asDouble == 3.25)
-      assert(p.get("warm2_total").asDouble == 4.25)
-      assert(Bench.pairTierJson(None, "a", "b") == "null")
       val spikes = mapper.readTree(Bench.spikeRetriesJson(
         Seq(Bench.SpikeRetry("q1", Seq(4.5, 0.5), 0.7))))
       assert(spikes.get("q1").get("reps").get(0).asDouble == 4.5)
@@ -110,11 +170,6 @@ class BenchContractSpec extends AnyFunSuite {
       assert(wd.get(0).get("query").asText == "q2")
       assert(wd.get(0).get("deadline_s").asDouble == 20.0)
       assert(wd.get(0).get("top_frames").asText.contains("map0 x32"))
-      val tr = mapper.readTree(Bench.tierRetriesJson(Seq(
-        Bench.TierRetry("servewarm:s19", Seq(107.3, 118.8), Seq(1.9, 1.3)))))
-      assert(tr.get("servewarm:s19").get("orig").get(1).asDouble == 118.8)
-      assert(tr.get("servewarm:s19").get("retry").get(0).asDouble == 1.9)
-      assert(Bench.tierRetriesJson(Nil) == "{}")
     } finally java.util.Locale.setDefault(prev)
   }
 }

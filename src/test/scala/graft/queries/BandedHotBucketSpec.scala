@@ -53,7 +53,6 @@ class BandedHotBucketSpec extends SparkSpec {
 
   test("with the dup-graph cache on, raising the cap after a failure builds afresh") {
     val dir = corpusDir(10)
-    spark.conf.set("spark.graft.dupgraph.cache", "true")
     spark.conf.set("spark.graft.dedup.maxBucket", "3")
     try {
       Derivations.clear()
@@ -70,7 +69,6 @@ class BandedHotBucketSpec extends SparkSpec {
         "raised maxBucket returned the failing memoized labels plan")
     } finally {
       spark.conf.unset("spark.graft.dedup.maxBucket")
-      spark.conf.unset("spark.graft.dupgraph.cache")
       Derivations.clear()
     }
   }

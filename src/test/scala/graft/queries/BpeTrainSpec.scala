@@ -153,13 +153,16 @@ class BpeTrainSpec extends SparkSpec {
     assert(t21.head.getAs[Long]("compression_bp") == wantAfter * 10000 / wantBefore)
     // the retired alternatives fail loudly, naming key and value: the
     // K-pass encoder (t21 reads spark.graft.bpe.apply) and the columnar
-    // lineage cut (t20 cuts on every round); the former defaults still
-    // pass and change nothing
+    // lineage cut (t20 cuts on every round) — even where the session
+    // already holds the trainer t21 built, so no cut runs; the former
+    // defaults still pass and change nothing
     def withConf[T](k: String, v: String)(body: => T): T = {
       spark.conf.set(k, v)
       try body finally spark.conf.unset(k)
     }
     def run(q: NamedQuery): Seq[Seq[Any]] = q.fn(spark, dir).collect().map(_.toSeq).toSeq
+    assert(Derivations.entries.keySet.asScala.exists(_._3 == "t20_bpe_train"),
+      "t21 left no shared trainer: the columnar case below would not be a memo hit")
     for ((k, v, q) <- Seq(("spark.graft.bpe.apply", "passes", TextOps.t21BpeApply),
         ("spark.graft.cut.persist", "columnar", TextOps.t20BpeTrain))) {
       val e = withConf(k, v)(intercept[IllegalArgumentException](run(q)))
@@ -178,16 +181,26 @@ class BpeTrainSpec extends SparkSpec {
     Seq((0L, "a b a b a b c", "en", "s0", 13L), (20L, "a b a b x y", "en", "s0", 11L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .repartition(2).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val queries = Seq("t20_bpe_train", "t21_bpe_apply")
     def rows(name: String): Seq[Seq[Any]] =
       graft.SparkEntry.queries(name)(spark, dir).collect().map(_.toSeq).toSeq
-    val isolated = Seq("t20_bpe_train", "t21_bpe_apply").map(n => n -> rows(n)).toMap
-    spark.conf.set("spark.graft.bpe.cache", "true")
+    val isolated = queries.map { n => Derivations.clear(); n -> rows(n) }.toMap
     try {
       Derivations.clear()
-      val cached = Seq("t20_bpe_train", "t21_bpe_apply").map(n => n -> rows(n)).toMap
+      val shared = queries.map(n => n -> rows(n)).toMap
       val trainers = Derivations.entries.keySet.asScala.count(_._3 == "t20_bpe_train")
       assert(trainers == 1, s"expected ONE shared trainer memo entry, got $trainers")
-      assert(cached == isolated, "memoized trainer changed t20/t21 results")
+      assert(shared == isolated, "the shared trainer changed t20/t21 results")
+      // the per-query retrain is retired: false throws at t20 and t21,
+      // the former production value true changes nothing
+      spark.conf.set("spark.graft.bpe.cache", "false")
+      queries.foreach { n =>
+        val e = intercept[IllegalArgumentException](rows(n))
+        assert(e.getMessage.contains("spark.graft.bpe.cache") && e.getMessage.contains("false"),
+          e.getMessage)
+      }
+      spark.conf.set("spark.graft.bpe.cache", "true")
+      assert(queries.map(n => n -> rows(n)).toMap == isolated)
     } finally {
       spark.conf.unset("spark.graft.bpe.cache")
       Derivations.clear()
@@ -261,7 +274,6 @@ class BpeTrainSpec extends SparkSpec {
     // merges, so the per-source encoded-token totals must be identical —
     // and fertility_bp must be exactly chars·10⁴ div tokens
     val dir = sf()
-    spark.conf.set("spark.graft.bpe.cache", "true")
     try {
       val t21 = TextOps.t21BpeApply.fn(spark, dir).collect()
         .map(r => r.getString(0) -> r.getAs[Long]("tokens_after")).toMap
@@ -283,9 +295,6 @@ class BpeTrainSpec extends SparkSpec {
         // sanity: ≥ 1 char per token, and bounded by the longest doc
         assert(bp >= 10000L, s"$src: fertility below 1 char/token: $bp")
       }
-    } finally {
-      spark.conf.unset("spark.graft.bpe.cache")
-      Derivations.clear()
-    }
+    } finally Derivations.clear()
   }
 }

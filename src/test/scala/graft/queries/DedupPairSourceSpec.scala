@@ -55,9 +55,6 @@ class DedupPairSourceSpec extends SparkSpec {
   }
 
   test("banded source composes with the dupgraph cache (fresh memo key per source)") {
-    val cacheKey = "spark.graft.dupgraph.cache"
-    val priorCache = spark.conf.getOption(cacheKey)
-    spark.conf.set(cacheKey, "true")
     try {
       Derivations.clear()
       val exactPlan = withPairSource(Some("exact"))(Dedup.dupPairs(spark, sf()))
@@ -74,21 +71,12 @@ class DedupPairSourceSpec extends SparkSpec {
       assert(!(withPairSource(Some("exact"))(Dedup.clusterLabels(spark, sf())) eq bandedLabels))
       assert(withPairSource(None)(Dedup.clusterLabels(spark, sf())) eq bandedLabels,
         "unset default did not share the banded labels memo entry")
-      // cached-banded results still match the isolated exact run
+      // shared-banded results still match a fresh exact run
       val d6Banded = withPairSource(Some("banded"))(run("d6_dup_clusters"))
-      val d6Exact = {
-        spark.conf.set(cacheKey, "false")
-        try withPairSource(Some("exact"))(run("d6_dup_clusters"))
-        finally spark.conf.set(cacheKey, "true")
-      }
-      assert(d6Banded == d6Exact, "cached banded d6 differs from isolated exact d6")
-    } finally {
-      priorCache match {
-        case Some(v) => spark.conf.set(cacheKey, v)
-        case None    => spark.conf.unset(cacheKey)
-      }
       Derivations.clear()
-    }
+      val d6Exact = withPairSource(Some("exact"))(run("d6_dup_clusters"))
+      assert(d6Banded == d6Exact, "shared banded d6 differs from a fresh exact d6")
+    } finally Derivations.clear()
   }
 
   test("an invalid pair-source value fails loudly at construction") {

@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
   * comparison-count curve to the full c1/d6/d9 composition the verdict
   * asked for): synthesizes 1×/2×/4× sf0.1 corpora and times the whole
   * composition — d6 dup clusters + d9 canonical reps + c1 curation —
-  * with the shared dup-graph cache OFF (gate shape: each query derives
-  * its own graph) and ON (production shape: one derivation, three
-  * consumers), min-of-2 runs per point.
+  * with the session caches cleared between the queries ("off": each
+  * query derives its own graph) and kept (the production shape: one
+  * shared derivation, three consumers), min-of-2 runs per point.
   *
   * Corpus synthesis: replica r of the base corpus remaps every WORD w to
   * "w·r", so replicas occupy disjoint shingle spaces — no cross-replica
@@ -93,16 +93,21 @@ object DedupScalingSweep {
 
     // mode -> k -> min-of-2 composition wall (s).  Cache cleared before
     // every timed run: ON measures one-derivation-three-consumers within
-    // a run, never reuse across runs.  Modes: per-query isolation on the
-    // exact pair source ("off"), the shared dup-graph on the exact source
-    // ("on"), and the shared graph on the d13-certified banded source
-    // ("banded" — spark.graft.dedup.pairs=banded, the 100 TB config).
-    def timeComposition(dir: String, confs: Seq[(String, String)]): Double = {
+    // a run, never reuse across runs.  Modes: per-query isolation
+    // (Harness.clearCaches between the queries) on the exact pair source
+    // ("off"), the shared dup-graph on the exact source ("on"), and the
+    // shared graph on the d13-certified banded source ("banded" —
+    // spark.graft.dedup.pairs=banded, the 100 TB config).
+    def timeComposition(dir: String, isolated: Boolean,
+        confs: Seq[(String, String)]): Double = {
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       val t = (1 to 2).map { _ =>
         graft.Harness.clearCaches(spark)
         val t0 = System.nanoTime()
-        composition.foreach(q => graft.SparkEntry.queries(q)(spark, dir).count(): Unit)
+        composition.foreach { q =>
+          if (isolated) graft.Harness.clearCaches(spark)
+          graft.SparkEntry.queries(q)(spark, dir).count(): Unit
+        }
         (System.nanoTime() - t0) / 1e9
       }.min
       confs.foreach { case (k, _) => spark.conf.unset(k) }
@@ -112,15 +117,12 @@ object DedupScalingSweep {
     // default is banded, and these two curves exist precisely to keep the
     // exact tier's cost measured against it.
     val modes = Seq(
-      "off" -> Seq("spark.graft.dupgraph.cache" -> "false",
-        "spark.graft.dedup.pairs" -> "exact"),
-      "on" -> Seq("spark.graft.dupgraph.cache" -> "true",
-        "spark.graft.dedup.pairs" -> "exact"),
-      "banded" -> Seq("spark.graft.dupgraph.cache" -> "true",
-        "spark.graft.dedup.pairs" -> "banded"))
+      ("off", true, Seq("spark.graft.dedup.pairs" -> "exact")),
+      ("on", false, Seq("spark.graft.dedup.pairs" -> "exact")),
+      ("banded", false, Seq("spark.graft.dedup.pairs" -> "banded")))
 
-    val results = for ((mode, confs) <- modes; k <- sizes)
-      yield (mode, k, timeComposition(dirs(k), confs))
+    val results = for ((mode, isolated, confs) <- modes; k <- sizes)
+      yield (mode, k, timeComposition(dirs(k), isolated, confs))
     Derivations.clear()
     val load1 = loadAvg()
 
@@ -157,7 +159,7 @@ object DedupScalingSweep {
     java.nio.file.Files.writeString(path, updatedDoc(existing, tierBlock))
     println(tierBlock)
     spark.stop()
-    if (modes.exists { case (m, _) => exponent(m) >= 2.0 }) {
+    if (modes.exists { case (m, _, _) => exponent(m) >= 2.0 }) {
       System.err.println("SCALING SWEEP FAILED: growth exponent reached quadratic")
       sys.exit(1)
     }

@@ -87,22 +87,17 @@ class DerivationsSpec extends SparkSpec {
   }
 
   test("clear() releases the dup graph's construction persists and lineage cuts") {
-    val key = "spark.graft.dupgraph.cache"
-    val prior = spark.conf.getOption(key)
     val cacheManager =
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
     spark.catalog.clearCache()
     Derivations.clear()
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    spark.conf.set(key, "true")
-    try {
-      assert(Dedup.clusterLabels(spark, sf()).count() > 0)
-      assert(!cacheManager.isEmpty, "the build registered no construction persist")
-      assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty)
-      Derivations.clear()
-      assert(cacheManager.isEmpty, "clear() left CacheManager entries")
-      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
-      assert(left.isEmpty, s"clear() left persistent RDDs $left")
-    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(Dedup.clusterLabels(spark, sf()).count() > 0)
+    assert(!cacheManager.isEmpty, "the build registered no construction persist")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty)
+    Derivations.clear()
+    assert(cacheManager.isEmpty, "clear() left CacheManager entries")
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"clear() left persistent RDDs $left")
   }
 }

@@ -48,11 +48,18 @@ class EventsConfScopingSpec extends SparkSpec {
 
   test("a later NTZ-annotated parquet read is not silently retyped") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ntz").toString
-    // Spark writes TimestampNTZType as TIMESTAMP(isAdjustedToUTC=false) —
-    // the annotation inferTimestampNTZ=false would flatten to LTZ.
-    spark.range(3)
-      .select(col("id"), lit("2024-01-10T01:02:03").cast(TimestampNTZType).as("t"))
-      .write.mode("overwrite").parquet(s"$dir/ntz.parquet")
+    // TIMESTAMP(MICROS, isAdjustedToUTC=false) — the annotation
+    // inferTimestampNTZ=false would flatten to LTZ.  Written with
+    // parquet-hadoop's example writer, not Spark: a Spark-written file
+    // carries its Catalyst schema in the footer, and inference takes
+    // that over the conf, so the read could not see a leaked toggle.
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 t (TIMESTAMP(MICROS,false)); }")
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/ntz.parquet")).withType(schema).build()
+    try writer.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+      .newGroup().append("t", 1704848523000000L))
+    finally writer.close()
     Tables.events(spark, sf()) // must not leave NTZ inference disabled
     val back = spark.read.parquet(s"$dir/ntz.parquet")
     assert(back.schema("t").dataType == TimestampNTZType,
