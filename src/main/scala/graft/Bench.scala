@@ -107,9 +107,10 @@ object Bench {
     runs.map { case (n, ts) => n -> best.get(n).fold(ts.min)(math.min(ts.min, _)) }
   }
 
-  private final case class SuiteResult(
+  private[graft] final case class SuiteResult(
       cpus: String,
       runs: Seq[(String, Seq[Double])],
+      compiles: Seq[(String, Seq[Long])],
       errors: Seq[String],
       loadBefore: Double,
       loadAfter: Double,
@@ -264,20 +265,24 @@ object Bench {
       // canonical pass: the fixed 90 s floor
       val deadline = watchdogDeadlineS(canonicalMins.flatMap(_.get(name)))
       val errsBefore = errors.size
-      def timeOne(rep: Int): Double = {
+      // each run's Janino compiles (Harness.codegenCompiles), driver and
+      // task threads alike: one JVM at local[N]
+      def timeOne(rep: Int): (Double, Long) = {
         System.err.println(s"[bench] local[$cpus] START $name rep$rep")
+        val c0 = Harness.codegenCompiles()
         val t0 = System.nanoTime()
         withWatchdog(name, rep, cpus, deadline, watchdogHits) {
           try { fn(spark, sfDir).count(): Unit }
           catch { case e: Throwable => errors += s"$name: ${e.getClass.getSimpleName}" }
         }
         val t = (System.nanoTime() - t0) / 1e9
+        val compiled = Harness.codegenCompiles() - c0
         clearCaches()
         sampleOwnCores(): Unit
-        System.err.println(f"[bench] local[$cpus] DONE  $name rep$rep $t%.2f s")
-        t
+        System.err.println(f"[bench] local[$cpus] DONE  $name rep$rep $t%.2f s $compiled compiles")
+        (t, compiled)
       }
-      val times = (1 to repeat).map(timeOne)
+      val (times, compiled) = (1 to repeat).map(timeOne).unzip
       // spike retry (r15 verdict #2): rep disagreement beyond SpikeRatio
       // on a non-trivial query is a contention signature, not a plan
       // property — re-run once, record the retry (ONLY in spike_retries:
@@ -285,13 +290,13 @@ object Bench {
       // and let minsWithRetries keep the clean number.  An errored query
       // never retries (a fast failure must not replace a slow truth).
       if (errors.size == errsBefore && isSpike(times)) {
-        val t = timeOne(times.size + 1)
+        val t = timeOne(times.size + 1)._1
         // a retry that ERRORS contributes nothing: its (fast-failure)
         // elapsed time must not reach min-of-reps — the original clean
         // reps stand, and the error itself fails the bench run
         if (errors.size == errsBefore) spikeRetries += SpikeRetry(name, times, t)
       }
-      name -> times
+      (name, times, compiled)
     }.toSeq
     val loadAfter = loadAvg()
     val cpuBusyPct: Option[Double] = for {
@@ -301,8 +306,8 @@ object Bench {
     spark.stop()
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    SuiteResult(cpus, runs, errors.toSeq, loadBefore, loadAfter, cpuBusyPct,
-      ownBefore, ownAfter,
+    SuiteResult(cpus, runs.map { case (n, ts, _) => n -> ts }, runs.map { case (n, _, cs) => n -> cs },
+      errors.toSeq, loadBefore, loadAfter, cpuBusyPct, ownBefore, ownAfter,
       spikeRetries.toSeq, watchdogHits.synchronized(watchdogHits.toSeq))
   }
 
@@ -328,15 +333,18 @@ object Bench {
         s""""deadline_s":${fmt2(h.deadlineS)},"top_frames":${jStr(h.topFrames)}}""")
       .mkString("[", ",", "]")
 
-  private def suiteJson(r: SuiteResult, repeat: Int): String = {
+  private[graft] def suiteJson(r: SuiteResult, repeat: Int): String = {
     val qs = r.mins.map { case (k, v) => jStr(k) + ":" + v }.mkString("{", ",", "}")
     val qruns = r.runs.map { case (k, ts) =>
       jStr(k) + ":" + ts.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
+    val compiles = r.compiles.map { case (k, ns) =>
+      jStr(k) + ":" + ns.mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
     val errs = r.errors.map(jStr).mkString("[", ",", "]")
     s"""{"cpus":"${r.cpus}","total_s":${r.total},"n_queries":${r.mins.size},""" +
       s""""repeat":$repeat,"contended":${contended(r)},""" +
-      s""""queries":$qs,"queries_runs":$qruns,""" +
+      s""""queries":$qs,"queries_runs":$qruns,"codegen_compiles":$compiles,""" +
       s""""spike_retries":${spikeRetriesJson(r.spikeRetries)},""" +
       s""""watchdog_dumps":${watchdogJson(r.watchdog)},""" +
       s""""tiers":null,"errors":$errs,""" +
@@ -496,7 +504,7 @@ object Bench {
     // stdout and used to decide which per-query pairs survived a round.
     val fullJson =
       s"""{"sf":"$sfDir","repeat":$repeat,""" +
-        s""""note":"canonical = local[4], the judge methodology (32-way task scheduling dominates sf0.1 partitions — see Bench.scala header); scaling = the env-requested width, queries only; per-query ISOLATION clears the session memos, so composition queries (c13 refresh decision, c15 pipeline) re-price every upstream audit/stage each run — in a real session those legs ride memoized relations and the marginal cost is ~one audit, so their bench numbers OVERSTATE the operators; spike_retries = reps disagreeing >4x re-ran once (the reported per-query min includes the retry; queries_runs arrays keep exactly `repeat` entries — the retry value lives only in spike_retries); own_cores = the pass's process CPU rate over the trailing minute (weighted with the 1-min load average's 60 s constant); own_cores_before = the same at the pass start (the canonical pass's trailing load, for the scaling pass); contended = load_before - own_cores_before > 3 OR load_after - own_cores > 3 (a pass's own threads legitimately drive load up; the pass width stands in when own_cores is null) OR >=3 defense firings (spikes + dumps); watchdog_dumps = in-process thread dumps of overrunning queries (full dumps in BENCH_watchdog.txt); tiers and the summary line's tier keys stay null (the tier section is retired: derived data is always shared per session, and per-query isolation is the cache clear between runs); decimal_dec_s/decimal_int64_s stay null (the int64 A/B is retired)","""  +
+        s""""note":"canonical = local[4], the judge methodology (32-way task scheduling dominates sf0.1 partitions — see Bench.scala header); scaling = the env-requested width, queries only; per-query ISOLATION clears the session memos, so composition queries (c13 refresh decision, c15 pipeline) re-price every upstream audit/stage each run — in a real session those legs ride memoized relations and the marginal cost is ~one audit, so their bench numbers OVERSTATE the operators; codegen_compiles = each run's Janino class compiles (CodegenMetrics, driver and task threads; a query over inputs of at most 512 KiB runs interpreted and compiles few), one entry per queries_runs entry; spike_retries = reps disagreeing >4x re-ran once (the reported per-query min includes the retry; queries_runs arrays keep exactly `repeat` entries — the retry value lives only in spike_retries); own_cores = the pass's process CPU rate over the trailing minute (weighted with the 1-min load average's 60 s constant); own_cores_before = the same at the pass start (the canonical pass's trailing load, for the scaling pass); contended = load_before - own_cores_before > 3 OR load_after - own_cores > 3 (a pass's own threads legitimately drive load up; the pass width stands in when own_cores is null) OR >=3 defense firings (spikes + dumps); watchdog_dumps = in-process thread dumps of overrunning queries (full dumps in BENCH_watchdog.txt); tiers and the summary line's tier keys stay null (the tier section is retired: derived data is always shared per session, and per-query isolation is the cache clear between runs); decimal_dec_s/decimal_int64_s stay null (the int64 A/B is retired)","""  +
         s""""canonical":${suiteJson(canonical, repeat)},""" +
         s""""scaling":${scaling.map(suiteJson(_, repeat)).getOrElse("null")}}"""
     // Written TWICE: the stable name (driver/judge contract) AND a

@@ -50,6 +50,11 @@ object Harness {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
   }
 
+  /** Janino compiles so far in this JVM (driver and, at local[N], task
+    * threads): a run's delta is the codegen it paid for. */
+  def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** With `envVar=1`, logs each completed stage's scheduling shape to
     * stderr as a `[trace]` line (tasks, stage wall, task time, GC, CPU),
     * so an A/B can separate executor-side time from driver-side gaps. */

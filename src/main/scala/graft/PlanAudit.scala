@@ -14,6 +14,12 @@ import org.apache.spark.sql.execution.ExplainMode
   *   sbt "runMain graft.PlanAudit /root/testdata/sf0.01 --dump q24_asof_join"
   *
   * Exits non-zero if an expectation fails, so it can gate commits.
+  *
+  * It renders the at-scale program, `SparkEntry.programs`, with codegen
+  * on — the plan its markers are about.  `SparkEntry.queries` runs a
+  * query over small inputs (sf0.01 among them) interpreted
+  * (`graftshim.InterpretedScope`): the same operators, without the
+  * WholeStageCodegen wrapping.
   */
 object PlanAudit {
 
@@ -801,7 +807,7 @@ object PlanAudit {
     // materialized relations the real execution would reuse).
     def planOf(name: String): String = planCache.getOrElseUpdate(name, {
       Harness.clearCaches(spark)
-      SparkEntry.queries(name)(spark, dir)
+      SparkEntry.programs(name)(spark, dir)
         .queryExecution.explainString(ExplainMode.fromString("formatted"))
     })
 
@@ -810,7 +816,7 @@ object PlanAudit {
     // plan per query)
     dump.foreach { qs =>
       val names =
-        if (qs == "ALL") SparkEntry.queries.keys.toSeq.sorted
+        if (qs == "ALL") SparkEntry.programs.keys.toSeq.sorted
         else qs.split(',').map(_.trim).filter(_.nonEmpty).toSeq
       val md = names.map(q => s"## $q\n\n```\n${planOf(q)}```\n").mkString("\n")
       // sbt's logger prefixes (and drops blank) stdout lines from forked
@@ -854,7 +860,7 @@ object PlanAudit {
       import scala.jdk.CollectionConverters._
       val sections = java.nio.file.Files.readAllLines(explainPath).asScala
         .filter(_.startsWith("## ")).map(_.stripPrefix("## ").trim).toSet
-      val want = SparkEntry.queries.keySet
+      val want = SparkEntry.programs.keySet
       if (sections != want) {
         failed += 1
         println(s"FAIL EXPLAIN.md drifted from the query registry — " +
@@ -865,7 +871,7 @@ object PlanAudit {
     } else println("WARN EXPLAIN.md not found (run from repo root to gate it)")
     // Global sweep: a CartesianProduct in ANY registered query is a scale
     // bug — every join must be an equi/broadcast/banded form.
-    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
+    SparkEntry.programs.keys.toSeq.sorted.foreach { name =>
       try {
         val n = occurrences(planOf(name), "CartesianProduct")
         val ok = n == 0
@@ -879,7 +885,7 @@ object PlanAudit {
           println(s"FAIL $name :: plan build threw ${e.getMessage}")
       }
     }
-    println(s"sweep: ${SparkEntry.queries.size} queries checked for CartesianProduct")
+    println(s"sweep: ${SparkEntry.programs.size} queries checked for CartesianProduct")
     spark.stop()
     if (failed > 0) sys.exit(1)
   }

@@ -937,7 +937,7 @@ object Curation {
     // read these counts — without the boundary each consumer re-runs
     // the corpus token pass (c16 embeds two consumers in ONE plan, so
     // even a shared DataFrame object would scan documents twice)
-    Derivations.memo(s, dir, "dsirDriftCounts") {
+    Derivations.memo(s, dir, "dsirDriftCounts", Tables.fileStamp(s, dir, "documents")) {
       graft.sentiment.GraftFunctions.register(s)
       val isInc = col("doc_id") % 10 === 7
       val isT = col("source") === DsirTarget

@@ -784,7 +784,8 @@ object Dedup {
     * persisted, measured once per session per (dir, sampleMod, cap). */
   private def dedupRecallCert(s: org.apache.spark.sql.SparkSession, dir: String,
       sampleMod: Long): org.apache.spark.sql.DataFrame =
-    Derivations.memo(s, dir, "dedupRecallCert", sampleMod, maxBucketConf(s)) {
+    Derivations.memo(s, dir, "dedupRecallCert",
+        graft.tables.Tables.fileStamp(s, dir, "documents"), sampleMod, maxBucketConf(s)) {
       graft.sentiment.GraftFunctions.register(s)
       // both sides share ONE persisted per-doc array relation (the d13
       // idiom, r18 array form): the banded side bands/verifies off the

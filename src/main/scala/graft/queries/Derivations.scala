@@ -29,8 +29,17 @@ import scala.jdk.CollectionConverters._
   * returns, so keying on it would only split one derivation in two.
   * A derivation built from a table also keys on the table's file stamp
   * ([[graft.tables.Tables.fileStamp]]): the dup graph, its pair
-  * relations and the BPE trainer key on `documents`, so a corpus
-  * rewritten in place is a miss, not a stale graph.
+  * relations, the dedup recall certificate, the BPE trainer and the DSIR
+  * drift counts key on `documents`, and every embedding-family entry on
+  * `embeddings`, so a table rewritten in place is a miss, not a stale
+  * graph or model.  The miss's rebuild loads the table, and `Tables.load`
+  * refreshes Spark's cached plans over a path whose stamp moved, so the
+  * rebuilt derivation cannot match the old file's persisted relation.
+  *
+  * `scope:interpreted` is not data: it is the caller's session cloned
+  * with codegen off (`graftshim.InterpretedScope`), keyed on the conf
+  * snapshot it was cloned from, which `SparkEntry.queries` re-homes a
+  * small-input query onto.
   *
   * A table's schema (`table:<name>`, [[graft.tables.Tables.load]]) is
   * keyed on its file stamp — the sorted (path, length, mtime) of its leaf

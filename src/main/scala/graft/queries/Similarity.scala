@@ -22,6 +22,12 @@ object Similarity {
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
+  /** The `embeddings` table's file stamp: every derivation of the family
+    * keys on it, so a table rewritten in place is a miss, not the old
+    * quantized corpus, models or certificates. */
+  private def embStamp(s: SparkSession, dir: String): Seq[(String, Long, Long)] =
+    Tables.fileStamp(s, dir, "embeddings")
+
   /** Σ aᵢ·bᵢ via the native codegen'd [[graft.functions.ArrayDotProduct]]
     * expression (one static call into a primitive loop — the Catalyst
     * `aggregate`+`zip_with` fold allocates a lambda frame per element and
@@ -43,7 +49,7 @@ object Similarity {
     * result persists too, so the certificate computes once per session
     * per (dir, sampleMod). */
   private def embedRecallCert(s: SparkSession, dir: String, sampleMod: Long): DataFrame =
-    Derivations.memo(s, dir, "embedRecallCert", sampleMod) {
+    Derivations.memo(s, dir, "embedRecallCert", embStamp(s, dir), sampleMod) {
       graft.sentiment.GraftFunctions.register(s)
       import s.implicits._
       val e = Tables.embeddings(s, dir)
@@ -1816,7 +1822,7 @@ object Similarity {
     * consumers of the batch audit, plus the live twin's index builders,
     * share ONE materialization per session). */
   private def s13Quantized(s: SparkSession, dir: String): DataFrame =
-    Derivations.memo(s, dir, "s13Quantized") {
+    Derivations.memo(s, dir, "s13Quantized", embStamp(s, dir)) {
       graft.sentiment.GraftFunctions.register(s)
       Derivations.persist(embGridOf(Tables.embeddings(s, dir))
         .select(col("vec_id"), col("qv"), col("vv")))
@@ -1839,7 +1845,7 @@ object Similarity {
     * consumers (batch audit, index export, archive stats, s15 refresh)
     * read it. */
   private def s13TrainedCentroids(s: SparkSession, dir: String): DataFrame =
-    Derivations.memo(s, dir, "s13TrainedCentroids")(
+    Derivations.memo(s, dir, "s13TrainedCentroids", embStamp(s, dir))(
       Derivations.persist(s13Centroids(s13Quantized(s, dir))))
 
   /** s13's trained index as a DRIVER-SIDE value — how a production
@@ -1947,7 +1953,7 @@ object Similarity {
     * relation is the stored index's posting lists plus the incoming
     * slice's fresh argmin — d14's stored-index story again. */
   private def s15StaleAssignment(s: SparkSession, dir: String): DataFrame =
-    Derivations.memo(s, dir, "s15StaleAssignment")(
+    Derivations.memo(s, dir, "s15StaleAssignment", embStamp(s, dir))(
       Derivations.persist(Quantizer.assign(s13Quantized(s, dir), s13TrainedCentroids(s, dir),
         Quantizer.Cells, "vec_id", "list_id", "dist", "qv")))
 
@@ -1984,14 +1990,14 @@ object Similarity {
     * builder so c16's serving-model export reads the PARAMETERS, not
     * just the report's priced deltas; ≤ k rows, memoized. */
   private[queries] def s15RefreshedCentroids(s: SparkSession, dir: String): DataFrame =
-    Derivations.memo(s, dir, "s15RefreshedCentroids") {
+    Derivations.memo(s, dir, "s15RefreshedCentroids", embStamp(s, dir)) {
       graft.sentiment.GraftFunctions.register(s)
       Quantizer.warmUpdate(s13TrainedCentroids(s, dir),
         s15StaleAssignment(s, dir), Quantizer.Cells)
     }
 
   private[queries] def s15RefreshReport(s: SparkSession, dir: String): DataFrame =
-    Derivations.memo(s, dir, "s15RefreshReport") {
+    Derivations.memo(s, dir, "s15RefreshReport", embStamp(s, dir)) {
       graft.sentiment.GraftFunctions.register(s)
       val refreshed = s15RefreshedCentroids(s, dir)
       refreshReport(refreshed, s15StaleAssignment(s, dir),
@@ -2124,7 +2130,7 @@ object Similarity {
     * Memoized per (session, dir) — the batch audit, the codebook export
     * and the archive-stats export share ONE materialization. */
   private def s14Subvectors(s: SparkSession, dir: String): DataFrame =
-    Derivations.memo(s, dir, "s14Subvectors") {
+    Derivations.memo(s, dir, "s14Subvectors", embStamp(s, dir)) {
       graft.sentiment.GraftFunctions.register(s)
       // derived from the memoized s13 quantized relation: both staleness
       // families share one corpus scan per composed session
@@ -2147,7 +2153,7 @@ object Similarity {
     * many consumers (batch audit, codebook export, archive stats) read
     * it. */
   private def s14TrainedCodebooks(s: SparkSession, dir: String): DataFrame =
-    Derivations.memo(s, dir, "s14TrainedCodebooks")(
+    Derivations.memo(s, dir, "s14TrainedCodebooks", embStamp(s, dir))(
       Derivations.persist(s14Codebooks(s14Subvectors(s, dir))))
 
   /** s14's trained codebooks as a DRIVER-SIDE value (PqM·PqK = 128 rows
@@ -2304,7 +2310,7 @@ object Similarity {
     * report, its update step and c13's pq staleness split all read it
     * (the s15StaleAssignment pattern at the fine level). */
   private def s17StaleAssignment(s: SparkSession, dir: String): DataFrame =
-    Derivations.memo(s, dir, "s17StaleAssignment")(
+    Derivations.memo(s, dir, "s17StaleAssignment", embStamp(s, dir))(
       Derivations.persist(Quantizer.assign(s14Subvectors(s, dir), s14TrainedCodebooks(s, dir),
         Quantizer.Codebooks, "vec_id", "m", "code", "dist", "sv")))
 
@@ -2326,14 +2332,14 @@ object Similarity {
     * the report builder so c16's serving-model export reads the
     * PARAMETERS; PqM·PqK rows, memoized. */
   private[queries] def s17RefreshedCodebooks(s: SparkSession, dir: String): DataFrame =
-    Derivations.memo(s, dir, "s17RefreshedCodebooks") {
+    Derivations.memo(s, dir, "s17RefreshedCodebooks", embStamp(s, dir)) {
       graft.sentiment.GraftFunctions.register(s)
       Quantizer.warmUpdate(s14TrainedCodebooks(s, dir),
         s17StaleAssignment(s, dir), Quantizer.Codebooks)
     }
 
   private[queries] def s17PqRefreshReport(s: SparkSession, dir: String): DataFrame =
-    Derivations.memo(s, dir, "s17PqRefreshReport") {
+    Derivations.memo(s, dir, "s17PqRefreshReport", embStamp(s, dir)) {
       graft.sentiment.GraftFunctions.register(s)
       val refreshed = s17RefreshedCodebooks(s, dir)
       refreshReport(refreshed, s17StaleAssignment(s, dir),
@@ -2442,7 +2448,7 @@ object Similarity {
   /** [[radiusGridOf]] over `embeddings`, memoized (the cert query and the
     * pair source share one materialization per session). */
   private def s16NormQuantized(s: SparkSession, dir: String): DataFrame =
-    Derivations.memo(s, dir, "s16NormQuantized") {
+    Derivations.memo(s, dir, "s16NormQuantized", embStamp(s, dir)) {
       graft.sentiment.GraftFunctions.register(s)
       radiusGridOf(Tables.embeddings(s, dir)
         .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
@@ -2479,7 +2485,7 @@ object Similarity {
     * per session (the broadcast-sized relation is cheap, but recomputing
     * it per consumer made the sharing comment a lie — ADVICE r13). */
   private def s16TrainedCells(s: SparkSession, dir: String): DataFrame =
-    Derivations.memo(s, dir, "s16TrainedCells") {
+    Derivations.memo(s, dir, "s16TrainedCells", embStamp(s, dir)) {
       Derivations.persist(s16Cells(
         s16NormQuantized(s, dir).select(col("vec_id"), col("qn"), col("vv")),
         EmbedCells, 1L))
@@ -2570,7 +2576,7 @@ object Similarity {
     * `cell_mass_bp = (Σ per-vector cells within the triangle bound) ·
     * 10⁴ div (n_vec · cells)`.  Θ(n·k), never the pair join. */
   private def radiusMassCert(s: SparkSession, dir: String, tauBp: Int): DataFrame =
-    Derivations.memo(s, dir, "radiusMassCert", tauBp) {
+    Derivations.memo(s, dir, "radiusMassCert", embStamp(s, dir), tauBp) {
       graft.sentiment.GraftFunctions.register(s)
       val e = s16NormQuantized(s, dir).select(col("vec_id"), col("qn"), col("vv"))
       Derivations.persist(radiusBall(e, s16TrainedCells(s, dir), col("dist"), radiusArm(tauBp))
@@ -2853,7 +2859,7 @@ object Similarity {
     * needs it; the relation is threshold-independent, so repeated s18
     * invocations in one session share it — review r14). */
   private[graft] def servingEmbGrid(s: SparkSession, dir: String): DataFrame =
-    Derivations.memo(s, dir, "servingEmbGrid") {
+    Derivations.memo(s, dir, "servingEmbGrid", embStamp(s, dir)) {
       graft.sentiment.GraftFunctions.register(s)
       Derivations.persist(embGridOf(Tables.embeddings(s, dir)))
     }

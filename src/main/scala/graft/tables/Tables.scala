@@ -17,15 +17,28 @@ object Tables {
     * the table's file stamp and the whole conf snapshot — the registry's
     * scaladoc says why), and every call reads with it.  Each call still
     * returns a fresh relation with fresh attribute ids, so two loads of
-    * one table self-join like two plain reads. */
+    * one table self-join like two plain reads.
+    *
+    * A table whose stamp moved since its last load was rewritten, and
+    * maybe not by this application: Spark's own writer refreshes the
+    * cached plans over a path it overwrites, another process's writer
+    * does not, and a fresh plan over the same path would still match the
+    * old cached relation.  So a moved stamp refreshes the path
+    * (`refreshByPath`, no job) before the read. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
+    val stamp = fileStamp(spark, dir, name)
+    if (Option(lastStamps.put(path, stamp)).exists(_ != stamp)) spark.catalog.refreshByPath(path)
     val schema = graft.queries.Derivations.memo(spark, dir, s"table:$name",
-        fileStamp(spark, dir, name), spark.conf.getAll) {
+        stamp, spark.conf.getAll) {
       spark.read.parquet(path).schema
     }
     spark.read.schema(schema).parquet(path)
   }
+
+  /** Each loaded table path's stamp at its last load. */
+  private val lastStamps =
+    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long, Long)]]()
 
   /** The sorted (path, length, mtime) of every leaf file of the table
     * `name` under `dir` (empty when it does not exist: the read then

@@ -7,7 +7,8 @@ package graft.tools
   *     [confKey=confValue ...]
   *
   * Runs each named query Bench-style (count + Harness.clearCaches
-  * between runs, min-of-2 reported per query) under the given confs.
+  * between runs, min-of-2 reported per query) under the given confs,
+  * with each run's Janino compile count.
   * Diagnostic only — the committed numbers come from graft.Bench. */
 object QuickTime {
   def main(args: Array[String]): Unit = {
@@ -46,15 +47,18 @@ object QuickTime {
           }
         })
     names.foreach { name =>
-      val ts = (1 to 2).map { rep =>
+      val (ts, compiles) = (1 to 2).map { rep =>
         System.err.println(s"[rep] $name rep$rep")
+        val c0 = graft.Harness.codegenCompiles()
         val t0 = System.nanoTime()
         graft.SparkEntry.queries(name)(spark, sfDir).count(): Unit
         val t = (System.nanoTime() - t0) / 1e9
+        val compiled = graft.Harness.codegenCompiles() - c0
         graft.Harness.clearCaches(spark)
-        t
-      }
-      println(f"[quicktime] $name%-28s min=${ts.min}%.2f s runs=${ts.map(t => f"$t%.2f").mkString(",")}")
+        (t, compiled)
+      }.unzip
+      println(f"[quicktime] $name%-28s min=${ts.min}%.2f s runs=${ts.map(t => f"$t%.2f").mkString(",")}" +
+        s" compiles=${compiles.mkString(",")}")
     }
     spark.stop()
   }

@@ -172,4 +172,20 @@ class BenchContractSpec extends AnyFunSuite {
       assert(wd.get(0).get("top_frames").asText.contains("map0 x32"))
     } finally java.util.Locale.setDefault(prev)
   }
+
+  test("query rows carry codegen_compiles, one count per run; the pass's keys only grow") {
+    val r = Bench.SuiteResult("4", Seq("q1" -> Seq(0.5, 0.4), "s13" -> Seq(2.0, 1.9)),
+      Seq("q1" -> Seq(12L, 3L), "s13" -> Seq(140L, 96L)), Nil, 0.5, 1.0, Some(20.0),
+      Some(0.0), Some(1.0), Nil, Nil)
+    val j = mapper.readTree(Bench.suiteJson(r, 2))
+    val compiles = j.get("codegen_compiles")
+    assert(compiles.get("q1").get(0).asLong == 12 && compiles.get("s13").get(1).asLong == 96)
+    Seq("q1", "s13").foreach(q => assert(compiles.get(q).size == j.get("queries_runs").get(q).size))
+    // r17 verdict item 7: consumers key on these, so a field is only ever added
+    import scala.jdk.CollectionConverters._
+    val before = Set("cpus", "total_s", "n_queries", "repeat", "contended", "queries",
+      "queries_runs", "spike_retries", "watchdog_dumps", "tiers", "errors", "load_before",
+      "load_after", "cpu_busy_pct", "own_cores_before", "own_cores")
+    assert(j.fieldNames().asScala.toSet == before + "codegen_compiles")
+  }
 }

@@ -2,11 +2,13 @@ package graft.queries
 
 import graft.{SparkEntry, SparkSpec}
 
-/** The shared dup graph and BPE trainer read a corpus rewritten in
-  * place afresh: both derivations key on `documents.parquet`'s file
-  * stamp, so a rewrite in the same dir — with no `Derivations.clear()`
-  * in between — is a miss, never the graph or merge table of the old
-  * file. */
+/** Shared derivations read a table rewritten in place afresh, with no
+  * `Derivations.clear()` in between.  The dup graph and the BPE trainer
+  * hold state outside Spark's cache (lineage cuts, a driver-side merge
+  * table), so they key on `documents.parquet`'s file stamp.  A table
+  * replaced by another writer than this session's refreshes its cached
+  * plans at the next `Tables.load`, so the persisted embedding and DSIR
+  * derivations do not hand back the old file's models and counts. */
 class CorpusRewriteSpec extends SparkSpec {
 
   private val queries = Seq("d6_dup_clusters", "t20_bpe_train")
@@ -20,8 +22,8 @@ class CorpusRewriteSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
   }
 
-  private def rows(dir: String): Map[String, Seq[String]] =
-    queries.map(q => q -> SparkEntry.queries(q)(spark, dir).collect().map(_.toString).toSeq).toMap
+  private def rows(dir: String, qs: Seq[String] = queries): Map[String, Seq[String]] =
+    qs.map(q => q -> SparkEntry.queries(q)(spark, dir).collect().map(_.toString).toSeq).toMap
 
   test("d6 and t20 return a rewritten corpus's rows without clear()") {
     val dir = java.nio.file.Files.createTempDirectory("graft-rewrite").toString
@@ -43,6 +45,37 @@ class CorpusRewriteSpec extends SparkSpec {
       queries.foreach { q =>
         assert(fresh(q) != before(q), s"$q: the fixture rewrite changed nothing")
         assert(after(q) == fresh(q), s"$q returned the old corpus's rows after a rewrite: " +
+          s"${after(q)} vs ${fresh(q)}")
+      }
+    } finally Derivations.clear()
+  }
+
+  test("s13 and c12 return the rows of tables replaced outside the session, without clear()") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rewrite-emb").toString
+    val qs = Seq("s13_index_staleness", "c12_selector_staleness")
+    // each table as sf0.001 holds it, then without every third row; the
+    // new files are written elsewhere and moved into place, as another
+    // process's writer would, so Spark's own overwrite refresh never runs
+    def replace(keep: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Unit =
+      Seq("embeddings" -> "vec_id", "documents" -> "doc_id").foreach { case (t, id) =>
+        val staged = java.nio.file.Files.createTempDirectory("graft-rewrite-stage").resolve(t)
+        spark.read.parquet(s"${sf()}/$t.parquet").filter(keep(org.apache.spark.sql.functions.col(id)))
+          .write.parquet(staged.toString)
+        val target = new java.io.File(s"$dir/$t.parquet")
+        org.apache.commons.io.FileUtils.deleteDirectory(target)
+        java.nio.file.Files.move(staged, target.toPath)
+      }
+    try {
+      Derivations.clear()
+      replace(_ >= 0)
+      val before = rows(dir, qs)
+      replace(_ % 3 =!= 0)
+      val after = rows(dir, qs)
+      Derivations.clear()
+      val fresh = rows(dir, qs)
+      qs.foreach { q =>
+        assert(fresh(q) != before(q), s"$q: the fixture rewrite changed nothing")
+        assert(after(q) == fresh(q), s"$q returned the old table's rows after a rewrite: " +
           s"${after(q)} vs ${fresh(q)}")
       }
     } finally Derivations.clear()
